@@ -257,10 +257,6 @@ object Bench {
         val rc = p.waitFor()
         val err = java.nio.file.Files.readAllBytes(errFile.toPath)
         errFile.delete()
-        if (sys.env.contains("GRAFT_MERGE_TIMING"))
-          new String(err, java.nio.charset.StandardCharsets.UTF_8)
-            .linesIterator.filter(_.contains("[merge-timing]"))
-            .foreach(System.err.println)
         out.linesIterator.find(_.startsWith("GRAFT_CHILD")) match {
           case Some(line) if rc == 0 =>
             val kv = line.stripPrefix("GRAFT_CHILD").trim.split(" ")

@@ -1,7 +1,8 @@
 package graft.functions
 
 import graft.functions.expressions.{CosineSimilarity, DotProduct, HyperplaneBucket, VecNorm}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Column, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** SQL-surface registration: expose the engine's functions to
@@ -32,21 +33,27 @@ object Registry {
     ColumnBridge.column(HyperplaneBucket(
       ColumnBridge.expression(v), planes, seed, dim))
 
+  /** SQL builder for a fixed-arity native expression: a call with the
+    * wrong argument count fails analysis the way Spark's built-ins do
+    * (WRONG_NUM_ARGS, naming the function and the expected count).
+    */
+  private def nary(name: String, n: Int)(
+      build: Seq[Expression] => Expression): Seq[Expression] => Expression =
+    exprs =>
+      if (exprs.size == n) build(exprs)
+      else throw new AnalysisException("WRONG_NUM_ARGS.WITHOUT_SUGGESTION", Map(
+        "functionName" -> s"`$name`", "expectedNum" -> n.toString,
+        "actualNum" -> exprs.size.toString,
+        "docroot" -> org.apache.spark.SPARK_DOC_ROOT))
+
   def registerAll(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_similarity",
-      exprs => CosineSimilarity(exprs.head, exprs(1)),
-      "built-in")
-
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot",
-      exprs => DotProduct(exprs.head, exprs(1)),
-      "built-in")
-
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_norm",
-      exprs => VecNorm(exprs.head),
-      "built-in")
+    val registry = spark.sessionState.functionRegistry
+    registry.createOrReplaceTempFunction("cosine_similarity",
+      nary("cosine_similarity", 2)(e => CosineSimilarity(e(0), e(1))), "built-in")
+    registry.createOrReplaceTempFunction("vec_dot",
+      nary("vec_dot", 2)(e => DotProduct(e(0), e(1))), "built-in")
+    registry.createOrReplaceTempFunction("vec_norm",
+      nary("vec_norm", 1)(e => VecNorm(e(0))), "built-in")
 
     // both wrap the Fns kernels so SQL and Column surfaces cannot drift
     // (they HAD drifted: the SQL rolling hash skipped the normalization

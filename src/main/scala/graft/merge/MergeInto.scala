@@ -16,31 +16,6 @@ final case class MergeResult(
     lineage: Seq[graft.model.LineageRow],
     skipped: Boolean)
 
-/** Tuning knobs for the MERGE kernel.
-  *
-  * @param numBuckets   key-partition count of the table (fixed at creation).
-  *                     At 100 TB this is the unit of rewrite amplification:
-  *                     more buckets => smaller rewrites per touched key,
-  *                     more files. Size so one bucket's rewrite fits an
-  *                     executor's shuffle memory.
-  * @param saltFactor   >1 enables the two-stage salted dedupe: stage 1
-  *                     pre-reduces each (doc_id, salt) group with a
-  *                     struct-max (map-side combine absorbs hot keys),
-  *                     stage 2 runs the final row_number window over at most
-  *                     `saltFactor` rows per key. Default 0 (plain window):
-  *                     measured plans show Spark 4's WindowGroupLimit
-  *                     already performs a map-side partial top-1-per-key
-  *                     before the exchange, which bounds a hot key to
-  *                     #map-partitions rows post-shuffle — the salting
-  *                     stage costs an extra SortAggregate + Exchange for
-  *                     no additional skew protection (see BENCH.md).
-  * @param broadcastThreshold  raw batch row count below which the changes
-  *                     side of the MERGE join is broadcast (no shuffle of
-  *                     the rewritten target buckets) — the trickle-batch
-  *                     fast path. Large batches use the shuffle merge:
-  *                     measured crossover is a few 100k rows (driver-side
-  *                     broadcast build is serial; see BENCH.md).
-  */
 /** Per-column update policy — the reference's declarative `updatereq`
   * per-property rules (`flow.xml:1163-1307`: `excludeFromUpdate`,
   * coalescing post-processors). Applies only to a genuine UPDATE of a
@@ -70,6 +45,35 @@ object ColumnPolicy {
   case object MaxExisting extends ColumnPolicy
 }
 
+/** Tuning knobs for the MERGE kernel.
+  *
+  * @param numBuckets   key-partition count of a NEW table; an existing
+  *                     table's count comes from its manifest (grown online
+  *                     by `Maintenance.rebucket`).
+  *                     At 100 TB this is the unit of rewrite amplification:
+  *                     more buckets => smaller rewrites per touched key,
+  *                     more files. Size so one bucket's rewrite fits an
+  *                     executor's shuffle memory.
+  * @param saltFactor   >1 enables the two-stage salted dedupe: stage 1
+  *                     pre-reduces each (doc_id, salt) group with a
+  *                     struct-max (map-side combine absorbs hot keys),
+  *                     stage 2 runs the final row_number window over at most
+  *                     `saltFactor` rows per key. Default 0 (plain window):
+  *                     measured plans show Spark 4's WindowGroupLimit
+  *                     already performs a map-side partial top-1-per-key
+  *                     before the exchange, which bounds a hot key to
+  *                     #map-partitions rows post-shuffle — the salting
+  *                     stage costs an extra SortAggregate + Exchange for
+  *                     no additional skew protection (see BENCH.md).
+  * @param broadcastThreshold  raw batch row count below which the changes
+  *                     side of the MERGE join is broadcast (no shuffle of
+  *                     the rewritten target buckets) — the trickle-batch
+  *                     fast path. Large batches use the shuffle merge:
+  *                     measured crossover is a few 100k rows (driver-side
+  *                     broadcast build is serial; see BENCH.md). The
+  *                     single-task plan (`singleTaskRows`) takes precedence:
+  *                     a batch that fits it never broadcasts.
+  */
 final case class MergeConfig(
     numBuckets: Int = 32,
     saltFactor: Int = 0,
@@ -153,24 +157,6 @@ final case class MergeConfig(
 object MergeInto {
 
   val TOMBSTONE: String = LakeTable.TOMBSTONE
-
-  /** Diagnostics hook (system property `graft.merge.explain`): retains the
-    * formatted plan of the last batch's write frame so plan-shape claims
-    * (e.g. "a small batch's merge is a single exchange-free stage") are
-    * assertable in specs and capturable for the committed plan artifacts
-    * without touching the write path. Driver-side, test/tooling only.
-    */
-  @volatile private[graft] var lastWritePlan: Option[String] = None
-
-  private val timingOn = sys.env.contains("GRAFT_MERGE_TIMING")
-  private def timed[T](what: String)(f: => T): T =
-    if (!timingOn) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(f"[merge-timing] $what: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      r
-    }
 
   private def storedSchema(logical: StructType): StructType =
     LakeTable.storedSchema(logical)
@@ -287,7 +273,7 @@ object MergeInto {
     }
     try {
 
-    val current = timed("manifest-read")(table.currentManifestOpt())
+    val current = table.currentManifestOpt()
 
     // -- 0. idempotence: replayed batch => no-op ------------------------
     val ledgerKey = s"$checkpointId/$batchId"
@@ -318,12 +304,12 @@ object MergeInto {
     // a `_good` flag so the reject count comes out of the same job.
     val bucketOf: Column => Column =
       k => pmod(xxhash64(k), lit(numBuckets.toLong)).cast("int")
-    val rawStats = timed("batch-stats")(cachedBatch.getOrElse(batch)
+    val rawStats = cachedBatch.getOrElse(batch)
       .groupBy((if (cachedBatch.isDefined) goodPred else lit(true)).as("_good"),
         bucketOf(col("doc_id")).as("_bucket"))
       .agg(count(lit(1)).as("n_raw"),
         min("lsn").as("minL"), max("lsn").as("maxL"))
-      .collect())
+      .collect()
     val batchStats = rawStats.filter(_.getBoolean(0))
       .map(r => r.getInt(1) -> ((r.getLong(2), r.getLong(3), r.getLong(4))))
       .toMap // bucket -> (n_raw, minL, maxL)
@@ -464,20 +450,7 @@ object MergeInto {
       } else if (touchedFiles.isEmpty) {
         // nothing to match: the whole batch inserts (or tombstones)
         insertProject(ch)
-      } else if (mergeSingleTask) {
-        // SMALL rewrite batch: full-outer sort-merge join with BOTH sides
-        // on a single partition — SinglePartition is co-partitioned with
-        // itself, so the join (and the batch's dedupe window above it)
-        // plans with ZERO exchanges and no broadcast-build jobs; the
-        // whole merge is one single-task Spark job. Same matchProject
-        // semantics as the large-batch shuffle path below. (scanTarget
-        // already honors mergeSingleTask's single-partition contract.)
-        val tg = scanTarget().withColumn("_has_target", lit(true))
-        matchProject(
-          tg.as("t").join(ch.as("c"),
-            col("t.doc_id") === col("c.doc_id"), "full_outer"),
-          hasTExpr = coalesce(col("t._has_target"), lit(false)))
-      } else if (useBroadcast) {
+      } else if (useBroadcast && !mergeSingleTask) {
         // Broadcast MERGE: the big target side NEVER shuffles. Spark's
         // BroadcastHashJoin cannot build a full-outer join, so decompose:
         //   (a) target LEFT OUTER broadcast(changes)   — matched + kept
@@ -497,12 +470,16 @@ object MergeInto {
           ch.join(broadcast(matchedKeys), Seq("doc_id"), "left_anti"))
         leftPart.unionByName(insertPart)
       } else {
-        // large batch: shuffle full-outer merge (sort-merge join, AQE
-        // handles skewed partitions). Note: a bucket-aligned variant
-        // (repartition both sides on _bucket, join on (_bucket, doc_id),
-        // write without shuffle) was measured 2.3x SLOWER at local scale —
-        // manual repartition disables AQE coalescing and loses the window
-        // exchange reuse; see BENCH.md.
+        // full-outer sort-merge join on the key. A SMALL batch
+        // (mergeSingleTask) has both sides coalesced to one partition
+        // already (the dedupe input above and scanTarget): SinglePartition
+        // is co-partitioned with itself, so the join plans with ZERO
+        // exchanges and the whole merge is one single-task Spark job. A
+        // large batch shuffles (AQE handles skewed partitions). Note: a
+        // bucket-aligned variant (repartition both sides on _bucket, join
+        // on (_bucket, doc_id), write without shuffle) was measured 2.3x
+        // SLOWER at local scale — manual repartition disables AQE
+        // coalescing and loses the window exchange reuse; see BENCH.md.
         val tg = scanTarget().withColumn("_has_target", lit(true))
         matchProject(
           tg.as("t").join(ch.as("c"),
@@ -534,19 +511,14 @@ object MergeInto {
       else if (isDeltaAppend) merged.coalesce(1)
       else merged.repartition(touched.size.max(1), col("_bucket"))
     val toWrite = placed.sortWithinPartitions(col("_bucket"), col("doc_id"))
-    if (sys.props.contains("graft.merge.explain"))
-      lastWritePlan = Some(toWrite.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
-    timed("merge-write")(
-      toWrite.write.partitionBy("_bucket").mode("overwrite").parquet(staging))
+    toWrite.write.partitionBy("_bucket").mode("overwrite").parquet(staging)
 
     // -- 7. manifest entries for the staged files, with per-file pruning
     // stats (rows, lsn min/max) harvested from the parquet FOOTERS —
     // exact, driver-side, no Spark job. (Rounds 1-4 ran a read-back
     // aggregation job here to get per-bucket stats; the footers already
     // hold them per file, finer-grained and free.)
-    val newFiles = timed("enumerate-staged")(
-      table.enumerateStagedWithStats(staging, isDelta = isDeltaAppend))
+    val newFiles = table.enumerateStagedWithStats(staging, isDelta = isDeltaAppend)
 
     // -- 8. per-bucket STATUS counts (insert/update/delete/noop/stale)
     // for the lineage metrics — the one thing footers cannot provide.
@@ -600,8 +572,8 @@ object MergeInto {
     // crash on either side of the commit replays to identical content).
     def finishLineage(): Seq[graft.model.LineageRow] = {
       val statRows: Map[Int, Array[Long]] = statF match {
-        case Some(f) => timed("lineage-stats")(scala.concurrent.Await.result(
-          f, scala.concurrent.duration.Duration.Inf))
+        case Some(f) =>
+          scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
         case None => Map.empty
       }
       val lineage = bucketIds.map { b =>
@@ -628,9 +600,8 @@ object MergeInto {
       // driver-side parquet write ([[LineageWriter]]): a handful of rows
       // per batch doesn't justify a Spark job on the per-batch serial path
       cfg.lineageDir.foreach { dir =>
-        timed("lineage-write")(LineageWriter.write(
-          spark.sparkContext.hadoopConfiguration, dir, checkpointId, batchId,
-          lineage))
+        LineageWriter.write(spark.sparkContext.hadoopConfiguration, dir,
+          checkpointId, batchId, lineage)
       }
       lineage
     }
@@ -639,9 +610,9 @@ object MergeInto {
     // delta append REMOVES nothing: touched = empty keeps every parent
     // file and composeManifests appends the delta entries to their ranges
     try
-      timed("manifest-commit")(commitManifest(table, current, evolved, numBuckets,
+      commitManifest(table, current, evolved, numBuckets,
         if (isDeltaAppend) Set.empty else touched, newFiles,
-        ledgerKey, finishLineage, cfg.ledgerRetention, snapshotId, nextVersion))
+        ledgerKey, finishLineage, cfg.ledgerRetention, snapshotId, nextVersion)
     catch {
       case commitFailure: Throwable =>
         // the commit path can throw BEFORE finishLineage joins the async
@@ -695,7 +666,6 @@ object MergeInto {
       parentSnapshotId = current.map(_.snapshotId),
       schemaJson = schema.json,
       numBuckets = numBuckets,
-      files = Nil,
       ledger = ledger,
       floorBatch = floor,
       manifests = manifests)

@@ -148,7 +148,7 @@ object Dedup {
     // the loop is scheduling-floor-bound, not data-bound, at this size.
     // The probe is LIMIT-bounded so a huge graph pays O(ceiling) to
     // answer "not small", never a full count pass over the edge list.
-    val smallGraphEdges = 100000L
+    val smallGraphEdges = graft.table.LakeTable.SingleTaskRows
     val small =
       edges0.limit(smallGraphEdges.toInt + 1).count() <= smallGraphEdges
     val edges = if (small) edges0.coalesce(1) else edges0

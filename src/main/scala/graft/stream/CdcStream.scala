@@ -184,7 +184,7 @@ object CdcStream {
     // everything, so the fragmentation pass below can skip that cycle
     if (cfg.rebucketAtRows > 0) {
       val m = table.currentManifest()
-      val rows = m.manifests.map(_.rows).sum.max(m.files.map(_.rows).sum)
+      val rows = m.manifests.map(_.rows).sum
       if (m.numBuckets * 2 <= cfg.maxNumBuckets &&
           rows / m.numBuckets.max(1) > cfg.rebucketAtRows) {
         Maintenance.rebucket(spark, table, m.numBuckets * 2): Unit

@@ -62,10 +62,8 @@ final case class ManifestFile(files: Seq[FileEntry])
   * batch touched plus this small head document — O(touched ranges + 1)
   * metadata I/O instead of O(all files) — and untouched ranges' manifest
   * files are SHARED across snapshots, so retained time-travel history
-  * costs O(changed ranges), not O(files x snapshots). `files` is the
-  * legacy inline listing (pre-manifest-list snapshots deserialize into
-  * it); list-based snapshots leave it empty and readers go through
-  * `LakeTable.filesOf`.
+  * costs O(changed ranges), not O(files x snapshots). Readers resolve
+  * the file listing through `LakeTable.filesOf`.
   *
   * `ledger` maps "checkpointId/batchId" -> snapshotId and makes commits
   * idempotent under streaming replay: re-running a batch that already
@@ -88,7 +86,6 @@ final case class Manifest(
     parentSnapshotId: Option[String],
     schemaJson: String,
     numBuckets: Int,
-    files: Seq[FileEntry],
     ledger: Map[String, String],
     floorBatch: Map[String, Long] = Map.empty,
     manifests: Seq[ManifestRef] = Nil) {
@@ -168,9 +165,9 @@ final class CommitConflictException(msg: String) extends RuntimeException(msg)
   * commit rewrites one range instead of a multi-MB listing. Bucket space
   * splits into `min(numBuckets, 64)` ranges — fine enough that a
   * 1-bucket commit rewrites ~1/64 of the metadata, coarse enough that a
-  * full-spread batch writes at most 64 small files. Pre-list snapshots
-  * (inline `files`) stay readable; their first post-upgrade commit
-  * migrates them to ranges.
+  * full-spread batch writes at most 64 small files. A head in the
+  * pre-list format (an inline `files` listing) is rejected on read, never
+  * read as an empty table ([[readManifest]]).
   */
 final class LakeTable private (val root: String, val conf: Configuration) {
 
@@ -243,12 +240,25 @@ final class LakeTable private (val root: String, val conf: Configuration) {
     if (v < 0) None else Some(readManifest(v))
   }
 
+  /** Read the head of snapshot `version`. A head that still carries an
+    * inline `files` listing (the format before manifest lists) fails with
+    * an IllegalStateException: the list-only reader would otherwise see
+    * no data files and serve the table as empty.
+    */
   def readManifest(version: Long): Manifest = {
-    val in = fs.open(manifestPath(version))
-    try {
-      val bytes = org.apache.commons.io.IOUtils.toByteArray(in)
-      Serialization.read[Manifest](new String(bytes, StandardCharsets.UTF_8))
-    } finally in.close()
+    val path = manifestPath(version)
+    val in = fs.open(path)
+    val json =
+      try org.json4s.jackson.JsonMethods.parse(new String(
+        org.apache.commons.io.IOUtils.toByteArray(in), StandardCharsets.UTF_8))
+      finally in.close()
+    json \ "files" match {
+      case JArray(listed) if listed.nonEmpty =>
+        throw new IllegalStateException(s"$path lists ${listed.size} " +
+          "data files inline (the format before manifest lists), which this " +
+          "reader does not support; re-create the table")
+      case _ => json.extract[Manifest]
+    }
   }
 
   // ---- manifest list ---------------------------------------------------
@@ -256,24 +266,15 @@ final class LakeTable private (val root: String, val conf: Configuration) {
   /** Data files of snapshot `m`, resolved through the manifest list with
     * list-level pruning: when `buckets` is given, only manifest files
     * whose bucket range intersects it are opened (and their entries
-    * filtered). Legacy inline-`files` snapshots resolve directly.
+    * filtered).
     */
-  def filesOf(m: Manifest, buckets: Option[Set[Int]] = None): Seq[FileEntry] = {
-    val entries =
-      if (m.manifests.isEmpty) m.files
-      else {
-        val refs = buckets match {
-          case Some(bs) =>
-            m.manifests.filter(r => bs.exists(b => b >= r.minBucket && b <= r.maxBucket))
-          case None => m.manifests
-        }
-        refs.sortBy(_.range).flatMap(readManifestFile)
-      }
+  def filesOf(m: Manifest, buckets: Option[Set[Int]] = None): Seq[FileEntry] =
     buckets match {
-      case Some(bs) => entries.filter(f => bs.contains(f.bucket))
-      case None => entries
+      case Some(bs) =>
+        m.manifests.filter(r => bs.exists(b => b >= r.minBucket && b <= r.maxBucket))
+          .sortBy(_.range).flatMap(readManifestFile).filter(f => bs.contains(f.bucket))
+      case None => m.manifests.sortBy(_.range).flatMap(readManifestFile)
     }
-  }
 
   /** Read one manifest file's entries (immutable content — cached JVM-wide
     * by name, so a streaming driver re-reads only the ranges each commit
@@ -315,15 +316,14 @@ final class LakeTable private (val root: String, val conf: Configuration) {
     * `touched` buckets (or receiving `newFiles`) are rewritten — their
     * content = parent entries of UNtouched buckets in the range plus the
     * new files — and every other range's manifest file carries over by
-    * reference, untouched and unread. A legacy inline-`files` parent (or
-    * no parent) regroups everything into ranges once.
+    * reference, untouched and unread. With no parent, `newFiles` is the
+    * whole listing.
     */
   def composeManifests(parent: Option[Manifest], touched: Set[Int],
       newFiles: Seq[FileEntry], numBuckets: Int): Seq[ManifestRef] = {
     fs.mkdirs(metaDir)
     val rng: Int => Int = LakeTable.rangeOf(_, numBuckets)
     val newByRange = newFiles.groupBy(f => rng(f.bucket))
-    val legacy = parent.exists(m => m.manifests.isEmpty && m.files.nonEmpty)
     // manifest files are independent — write them concurrently (a serial
     // loop of N small FS creates is pure latency on the per-batch commit
     // path; measured ~130 ms/commit at 32 ranges on local FS, worse on an
@@ -337,22 +337,17 @@ final class LakeTable private (val root: String, val conf: Configuration) {
           Future(writeManifestFile(r, numBuckets, es))
         }), Duration.Inf)
     }
-    if (parent.isEmpty || legacy) {
-      val all = parent.map(_.files).getOrElse(Nil)
-        .filterNot(f => touched.contains(f.bucket)) ++ newFiles
-      writeAll(all.groupBy(f => rng(f.bucket)).toSeq.sortBy(_._1))
-    } else {
-      val parentRefs = parent.get.manifests.map(r => r.range -> r).toMap
-      val touchedRanges = touched.map(rng) ++ newByRange.keySet
-      val carried = parent.get.manifests.filterNot(r => touchedRanges.contains(r.range))
-      val rewritten = writeAll(touchedRanges.toSeq.sorted.flatMap { r =>
-        val kept = parentRefs.get(r).map(readManifestFile).getOrElse(Nil)
-          .filterNot(f => touched.contains(f.bucket))
-        val content = kept ++ newByRange.getOrElse(r, Nil)
-        if (content.isEmpty) None else Some(r -> content)
-      })
-      (carried ++ rewritten).sortBy(_.range)
-    }
+    val parentRefs = parent.map(_.manifests).getOrElse(Nil)
+    val parentByRange = parentRefs.map(r => r.range -> r).toMap
+    val touchedRanges = touched.map(rng) ++ newByRange.keySet
+    val carried = parentRefs.filterNot(r => touchedRanges.contains(r.range))
+    val rewritten = writeAll(touchedRanges.toSeq.sorted.flatMap { r =>
+      val kept = parentByRange.get(r).map(readManifestFile).getOrElse(Nil)
+        .filterNot(f => touched.contains(f.bucket))
+      val content = kept ++ newByRange.getOrElse(r, Nil)
+      if (content.isEmpty) None else Some(r -> content)
+    })
+    (carried ++ rewritten).sortBy(_.range)
   }
 
   /** Atomic CAS commit of `m` at `m.version`. Exactly one concurrent caller
@@ -439,27 +434,8 @@ final class LakeTable private (val root: String, val conf: Configuration) {
   def stagingDir(version: Long): String =
     new Path(new Path(rootPath, "data"), s"s$version").toString
 
-  /** List the parquet files Spark wrote under `dir/_bucket=N/`, with
-    * per-bucket stats attached to each file.
-    */
-  def enumerateStaged(dir: String, stats: Map[Int, (Long, Long, Long)],
-      isDelta: Boolean = false): Seq[FileEntry] = {
-    val f = fs
-    val d = new Path(dir)
-    if (!f.exists(d)) return Nil
-    f.listStatus(d).toIndexedSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("_bucket="))
-      .flatMap { bdir =>
-        val bucket = bdir.getPath.getName.stripPrefix("_bucket=").toInt
-        val (rows, minL, maxL) = stats.getOrElse(bucket, (0L, Long.MaxValue, Long.MinValue))
-        f.listStatus(bdir.getPath).toIndexedSeq
-          .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-          .map(s => FileEntry(s.getPath.toString, bucket, rows, minL, maxL, isDelta))
-      }
-  }
-
-  /** Enumerate staged files with EXACT per-file (rows, lsn min/max) read
-    * from the parquet FOOTERS — driver-side, parallel, no Spark job. The
+  /** Enumerate the parquet files Spark wrote under `dir/_bucket=N/`, with
+    * EXACT per-file (rows, lsn min/max) read from the parquet FOOTERS — driver-side, parallel, no Spark job. The
     * footer statistics are what the write itself recorded; harvesting
     * them costs one small ranged read per file instead of a cluster pass
     * over the staged data (the read-back job this replaces was a fixed
@@ -474,12 +450,22 @@ final class LakeTable private (val root: String, val conf: Configuration) {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
-    val listed = enumerateStaged(dir, Map.empty, isDelta)
+    val f = fs
+    val d = new Path(dir)
+    if (!f.exists(d)) return Nil
+    val listed = f.listStatus(d).toIndexedSeq
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith("_bucket="))
+      .flatMap { bdir =>
+        val bucket = bdir.getPath.getName.stripPrefix("_bucket=").toInt
+        f.listStatus(bdir.getPath).toIndexedSeq
+          .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+          .map(s => (s.getPath, bucket))
+      }
     Await.result(
-      Future.sequence(listed.map { e =>
+      Future.sequence(listed.map { case (p, bucket) =>
         Future {
-          val (rows, minL, maxL) = footerStats(new Path(e.path))
-          e.copy(rows = rows, minLsn = minL, maxLsn = maxL)
+          val (rows, minL, maxL) = footerStats(p)
+          FileEntry(p.toString, bucket, rows, minL, maxL, isDelta)
         }
       }), Duration.Inf)
   }
@@ -609,11 +595,9 @@ final class LakeTable private (val root: String, val conf: Configuration) {
     */
   def filesInLsnRange(lo: Long, hi: Long): Seq[FileEntry] =
     currentManifestOpt().map { m =>
-      val entries =
-        if (m.manifests.isEmpty) m.files
-        else m.manifests.filter(r => r.maxLsn >= lo && r.minLsn <= hi)
-          .sortBy(_.range).flatMap(readManifestFile)
-      entries.filter(f => f.maxLsn >= lo && f.minLsn <= hi)
+      m.manifests.filter(r => r.maxLsn >= lo && r.minLsn <= hi)
+        .sortBy(_.range).flatMap(readManifestFile)
+        .filter(f => f.maxLsn >= lo && f.minLsn <= hi)
     }.getOrElse(Nil)
 }
 

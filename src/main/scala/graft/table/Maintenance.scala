@@ -51,7 +51,7 @@ object Maintenance {
     // manifest-LIST pruning: a bucket-subset compaction opens only the
     // ranges it touches; the rest carry over by reference
     val touched = table.filesOf(m, buckets)
-    val filesBefore = m.manifests.map(_.nFiles).sum.max(m.files.size)
+    val filesBefore = m.manifests.map(_.nFiles).sum
     if (touched.isEmpty) {
       // nothing selected: commit nothing, report the no-op
       return CompactionResult(m.snapshotId, m.version,
@@ -98,7 +98,6 @@ object Maintenance {
       parentSnapshotId = Some(m.snapshotId),
       schemaJson = m.schemaJson,
       numBuckets = m.numBuckets,
-      files = Nil,
       // carry the ledger floor: after retention has folded old batches into
       // floorBatch, the floor is the ONLY record that those batches
       // committed. Dropping it here would let a replayed pre-floor batch
@@ -173,7 +172,6 @@ object Maintenance {
       parentSnapshotId = Some(m.snapshotId),
       schemaJson = m.schemaJson,
       numBuckets = newNumBuckets,
-      files = Nil,
       ledger = m.ledger,
       floorBatch = m.floorBatch,
       manifests = manifests))

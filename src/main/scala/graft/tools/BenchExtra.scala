@@ -14,12 +14,20 @@ import org.apache.spark.sql.SparkSession
   *  --count        time with .count() (the frozen bench's action) instead
   *                 of the noop sink
   *  --plans d sfx  write d/<query>_<sfx>.txt with the formatted plan
+  *  --cpus N       local[N] (default SPARK_GRAFT_CPUS, else all cores)
+  *  --sf dir       input tables (default SPARK_GRAFT_SF_DIR; required)
   */
 object BenchExtra {
+  private val usage =
+    "usage: graft.tools.BenchExtra [--count] [--plans <dir> <suffix>] " +
+      "[--reps N] [--cpus N] [--sf dir] <query|all> ...\n" +
+      "  --sf (or SPARK_GRAFT_SF_DIR) names the input-table directory"
+
   def main(args: Array[String]): Unit = {
     var reps = 2
-    var cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    var sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    var cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+    var sfOpt = sys.env.get("SPARK_GRAFT_SF_DIR")
     var plansDir: Option[(String, String)] = None
     var useCount = false
     val names = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -28,12 +36,13 @@ object BenchExtra {
       args(i) match {
         case "--reps" => reps = args(i + 1).toInt; i += 2
         case "--cpus" => cpus = args(i + 1).toInt; i += 2
-        case "--sf" => sfDir = args(i + 1); i += 2
+        case "--sf" => sfOpt = Some(args(i + 1)); i += 2
         case "--plans" => plansDir = Some((args(i + 1), args(i + 2))); i += 3
         case "--count" => useCount = true; i += 1
         case q => names += q; i += 1
       }
     }
+    val sfDir = sfOpt.getOrElse { System.err.println(usage); sys.exit(2) }
     val all = SparkEntry.queries
     val picked =
       if (names.isEmpty || names.contains("all")) all.keys.toSeq.sorted

@@ -9,13 +9,24 @@ import org.apache.spark.sql.functions._
 /** Print formatted physical plans for the hot paths — the review loop for
   * shuffle/broadcast/pushdown hygiene:
   *
-  * {{{ sbt "runMain graft.tools.Explain [queryName ...]" }}}
+  * {{{ sbt "runMain graft.tools.Explain [--sf dir] [queryName ...]" }}}
   *
-  * With no args: dumps the MERGE kernel's dedupe+join plan (broadcast and
-  * shuffle variants) plus a default set of catalog queries.
+  * With no query names: dumps the MERGE kernel's dedupe+join plan
+  * (broadcast and shuffle variants) plus a default set of catalog queries.
+  * The catalog queries read `--sf dir` (default SPARK_GRAFT_SF_DIR;
+  * required).
   */
 object Explain {
-  def main(args: Array[String]): Unit = {
+  def main(argv: Array[String]): Unit = {
+    val (sfOpt, args) = argv.toSeq match {
+      case "--sf" +: dir +: rest => (Some(dir), rest)
+      case rest => (sys.env.get("SPARK_GRAFT_SF_DIR"), rest)
+    }
+    val sfDir = sfOpt.getOrElse {
+      System.err.println("usage: graft.tools.Explain [--sf dir] [queryName ...]\n" +
+        "  --sf (or SPARK_GRAFT_SF_DIR) names the input-table directory")
+      sys.exit(2)
+    }
     val spark = SparkSession.builder()
       .master("local[8]")
       .appName("graft-explain")
@@ -24,7 +35,6 @@ object Explain {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
 
     if (args.isEmpty) {
       // ---- MERGE kernel plans ----------------------------------------
@@ -50,7 +60,7 @@ object Explain {
       LakeTable(s"$work/t").read(spark).explain("formatted")
     }
 
-    val names = if (args.nonEmpty) args.toSeq else Seq(
+    val names = if (args.nonEmpty) args else Seq(
       "cdc_dedupe_lww", "join_revenue_by_nation", "dedup_ngram_jaccard",
       "ann_bruteforce_topk", "window_topk_per_user",
       "ann_lsh_topk", "match_fuzzy", "csv_parse_route", "edges_emit")

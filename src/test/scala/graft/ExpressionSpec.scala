@@ -53,6 +53,21 @@ class ExpressionSpec extends SparkSpec {
     }
   }
 
+  test("wrong-arity SQL calls fail analysis naming the function and its arity") {
+    Registry.registerAll(spark)
+    vecs.createOrReplaceTempView("vecs")
+    Seq(
+      "cosine_similarity(a)" -> ("`cosine_similarity`", 2),
+      "vec_dot(a, b, a)" -> ("`vec_dot`", 2),
+      "vec_norm()" -> ("`vec_norm`", 1)).foreach { case (call, (name, n)) =>
+      val e = intercept[org.apache.spark.sql.AnalysisException] {
+        spark.sql(s"SELECT $call FROM vecs").collect()
+      }
+      assert(e.getMessage.contains(name) &&
+        e.getMessage.contains(s"requires $n parameters"), e.getMessage)
+    }
+  }
+
   test("registered UDFs: hmac + rolling hash usable from SQL") {
     Registry.registerAll(spark)
     val out = spark.sql(

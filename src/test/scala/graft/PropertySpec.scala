@@ -110,7 +110,7 @@ class CommitCasSpec extends SparkSpec {
     def manifest(snap: String) = Manifest(
       version = 0L, snapshotId = snap, parentSnapshotId = None,
       schemaJson = graft.model.Schemas.seqTable.json, numBuckets = 4,
-      files = Nil, ledger = Map("cp/0" -> snap))
+      ledger = Map("cp/0" -> snap))
     table.commit(manifest("winner"))
     intercept[CommitConflictException] { table.commit(manifest("loser")) }
     assert(table.currentManifest().snapshotId === "winner")
@@ -123,7 +123,7 @@ class CommitCasSpec extends SparkSpec {
   test("ledger idempotence lookup works across versions") {
     val table = LakeTable(tmpDir("lake-ledger"))
     val m0 = Manifest(0L, "s0", None, graft.model.Schemas.seqTable.json, 4,
-      Nil, Map("cp/0" -> "s0"))
+      Map("cp/0" -> "s0"))
     table.commit(m0)
     table.commit(m0.copy(version = 1L, snapshotId = "s1",
       parentSnapshotId = Some("s0"), ledger = m0.ledger + ("cp/1" -> "s1")))

@@ -129,13 +129,13 @@ class IncrementalCompactSpec extends SparkSpec {
       RawEvent(1L, "a", Ops.Insert, Array(1), 1, "s", null, 0))),
       "cp", 0L, MergeConfig(numBuckets = 4))
     // merge rewrites whole buckets (1 file/bucket), so synthesize a
-    // fragmented manifest: duplicate one bucket's file entry (written
-    // legacy-inline, which also exercises the pre-list interop path)
+    // fragmented snapshot: add a second entry to one bucket's range
+    // without touching the bucket (its existing entry carries over)
     val m = table.currentManifest()
-    val fs0 = table.filesOf(m)
-    val f = fs0.head
-    table.commit(m.copy(version = m.version + 1,
-      files = fs0 :+ f.copy(path = f.path + ".dup"), manifests = Nil))
+    val f = table.filesOf(m).head
+    table.commit(m.copy(version = m.version + 1, manifests = table.composeManifests(
+      Some(m), Set.empty, Seq(f.copy(path = f.path + ".dup")), m.numBuckets)))
+    assert(table.filesOf(table.currentManifest()).count(_.bucket == f.bucket) === 2)
     assert(Maintenance.mostFragmented(table, 4) === Set(f.bucket))
     assert(Maintenance.mostFragmented(table, 0) === Set.empty)
   }

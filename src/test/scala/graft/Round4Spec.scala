@@ -206,7 +206,7 @@ class ManifestListSpec extends SparkSpec {
     MergeInto.apply(spark, table,
       batchDf((1 to 40).map(i => ev(i.toLong, s"k$i"))), "cp", 0L, cfg)
     val m0 = table.currentManifest()
-    assert(m0.files.isEmpty && m0.manifests.nonEmpty, "head must be list-based")
+    assert(m0.manifests.nonEmpty, "head must be list-based")
     val before = metaManifestFiles(root)
     val refsBefore = m0.manifests.map(r => r.range -> r.path).toMap
     assert(refsBefore.size >= 3, s"need several populated ranges, got $refsBefore")
@@ -236,28 +236,41 @@ class ManifestListSpec extends SparkSpec {
     assert(table.readVersion(spark, m0.version).count() === 40)
   }
 
-  test("legacy inline-files snapshots read and migrate on first commit") {
+  test("a legacy inline-files head fails loudly on read, never reads as empty") {
+    import org.json4s.{DefaultFormats, Formats}
+    import org.json4s.jackson.Serialization
+    implicit val fmts: Formats = DefaultFormats
     val work = tmpDir("mlist-legacy")
     val root = s"$work/t"
     val table = LakeTable(root)
     val cfg = MergeConfig(numBuckets = 4)
     MergeInto.apply(spark, table,
       batchDf((1 to 10).map(i => ev(i.toLong, s"k$i"))), "cp", 0L, cfg)
-    // rewrite the head as a LEGACY manifest (inline files, no list)
     val m = table.currentManifest()
-    table.commit(m.copy(version = m.version + 1, snapshotId = "legacy",
-      files = table.filesOf(m), manifests = Nil))
-    val legacy = table.currentManifest()
-    assert(legacy.manifests.isEmpty && legacy.files.nonEmpty)
-    val state = table.read(spark).collect().map(_.toSeq).toSet
-    assert(state.size === 10)
-    // a commit on top migrates to ranges without losing state
-    MergeInto.apply(spark, table, batchDf(Seq(ev(99L, "k1"))), "cp", 1L, cfg)
-    val migrated = table.currentManifest()
-    assert(migrated.files.isEmpty && migrated.manifests.nonEmpty)
+    def writeHead(version: Long, fields: Map[String, Any]): Unit =
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(root, "meta", f"v$version%020d.json"),
+        Serialization.write(Map[String, Any](
+          "version" -> version, "snapshotId" -> s"s$version",
+          "parentSnapshotId" -> m.snapshotId, "schemaJson" -> m.schemaJson,
+          "numBuckets" -> m.numBuckets, "ledger" -> m.ledger) ++ fields)): Unit
+    // a list-based head with an EMPTY `files` array (what the writer
+    // emitted while the field existed) still reads
+    writeHead(m.version + 1, Map("files" -> Nil, "manifests" -> m.manifests))
     assert(table.read(spark).count() === 10)
-    assert(table.read(spark).filter(col("doc_id") === "k1")
-      .head().getAs[Long]("lsn") === 99L)
+    // a pre-list head: inline data files, no manifest list
+    writeHead(m.version + 2, Map("files" -> table.filesOf(m), "manifests" -> Nil))
+    val e = intercept[IllegalStateException](table.currentManifest())
+    assert(e.getMessage.contains("inline") &&
+      e.getMessage.contains(f"v${m.version + 2}%020d.json"), e.getMessage)
+    intercept[IllegalStateException](table.read(spark))
+    intercept[IllegalStateException](table.readVersion(spark, m.version + 2))
+    // a merge on top must not treat the table as empty and commit over it
+    intercept[IllegalStateException](MergeInto.apply(spark, table,
+      batchDf(Seq(ev(99L, "k1"))), "cp", 1L, cfg))
+    assert(table.currentVersion() === m.version + 2)
+    // older list-based snapshots stay readable
+    assert(table.readVersion(spark, m.version).count() === 10)
   }
 
   test("vacuum GCs superseded manifest files but never unreferenced (in-flight) ones") {
@@ -375,7 +388,7 @@ class ManifestListPropertySpec extends SparkSpec {
           newFiles.groupBy(_.bucket).view.mapValues(_.toSeq).toMap
         val m = graft.table.Manifest(step.toLong, s"s$step",
           parent.map(_.snapshotId), graft.model.Schemas.seqTable.json,
-          numBuckets, Nil, Map.empty, Map.empty, refs)
+          numBuckets, Map.empty, Map.empty, refs)
         table.commit(m)
         parent = Some(m)
         // resolved listing == oracle, overall and per pruned bucket subset

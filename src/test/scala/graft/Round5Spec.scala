@@ -178,11 +178,11 @@ class VacuumReportSpec extends SparkSpec {
     // bucket 0's range, superseding v0's manifest file for that range
     val m0refs = t.composeManifests(None, Set.empty, Seq(fakeEntry(0, "a")), 4)
     t.commit(Manifest(0L, "s0", None, graft.model.Schemas.seqTable.json, 4,
-      Nil, Map.empty, Map.empty, m0refs))
+      Map.empty, Map.empty, m0refs))
     val m1refs = t.composeManifests(Some(t.currentManifest()), Set(0),
       Seq(fakeEntry(0, "b")), 4)
     t.commit(Manifest(1L, "s1", Some("s0"), graft.model.Schemas.seqTable.json, 4,
-      Nil, Map.empty, Map.empty, m1refs))
+      Map.empty, Map.empty, m1refs))
     val removed = Maintenance.vacuum(t, retainFromVersion = 1L)
     // v0's superseded manifest file must appear in the report even though
     // data/ does not exist (round-4 finding: the early return swallowed it)
@@ -195,7 +195,7 @@ class VacuumReportSpec extends SparkSpec {
     val t = LakeTable(root)
     val refs = t.composeManifests(None, Set.empty, Seq(fakeEntry(1, "a")), 4)
     t.commit(Manifest(0L, "s0", None, graft.model.Schemas.seqTable.json, 4,
-      Nil, Map.empty, Map.empty, refs))
+      Map.empty, Map.empty, refs))
     val metaDir = new java.io.File(root, "meta")
     def orphan(name: String, ageMs: Long): java.io.File = {
       val f = new java.io.File(metaDir, name)
@@ -456,7 +456,7 @@ class CommitCasLinkSpec extends SparkSpec {
       val threads = (1 to writers).map { w =>
         val snap = s"iter$iter-writer$w"
         val m = Manifest(version, snap, None, schemaJson,
-          numBuckets = 4, files = Nil, ledger = Map(s"cp/$version" -> snap))
+          numBuckets = 4, ledger = Map(s"cp/$version" -> snap))
         val t = new Thread(() => {
           barrier.await() // all writers pass any exists() pre-check together
           try { table.commit(m); results.put(snap, true): Unit }

@@ -5,7 +5,11 @@ import graft.functions.Fns
 import graft.merge.{MergeConfig, MergeInto}
 import graft.table.LakeTable
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.command.DataWritingCommand
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Round-6 optimization equivalence gates: every operator whose internals
   * were restructured for performance proves here that its results are
@@ -113,26 +117,43 @@ class Round6Spec extends SparkSpec {
       deleteFraction = 0.1, dupFraction = 0.05, eventsPerSegment = 1500)
     val events = ChangeGen.generateLocal(feed)
     val segs = events.groupBy(_.seg).toSeq.sortBy(_._1)
-    System.setProperty("graft.merge.explain", "1")
+    // operator names of every executed data-writing command, through
+    // adaptive plans and query stages; the batch's other jobs (the stats
+    // pre-pass has its own Exchange) are not writes and are ignored
+    def operators(p: SparkPlan): Seq[String] = p.nodeName +: (p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case s: QueryStageExec => Seq(s.plan)
+      case _ => p.children
+    }).flatMap(operators)
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.logical.isInstanceOf[DataWritingCommand])
+          writes.add(operators(qe.executedPlan)): Unit
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
     try {
-      def lastPlan(cfg: MergeConfig, dir: String): String = {
+      def lastPlan(cfg: MergeConfig, dir: String): Seq[String] = {
         val table = LakeTable(dir)
+        writes.clear()
         segs.foreach { case (seg, evs) =>
-          MergeInto.lastWritePlan = None
           MergeInto.apply(spark, table, batchDf(evs), "cp", seg, cfg)
         }
-        MergeInto.lastWritePlan.getOrElse(fail("no plan captured"))
+        org.apache.spark.ListenerBusDrain(spark.sparkContext)
+        assert(writes.size === segs.size, "one write command per batch")
+        writes.toArray(Array.empty[Seq[String]]).last
       }
       // batch 2 merges into an existing table: the single-task rewrite
       // plan (dedupe window + full-outer join + write) must contain no
       // Exchange at all; forcing the parallel path must bring them back
       val single = lastPlan(MergeConfig(numBuckets = 4), tmpDir("r6-plan-on"))
-      assert(!single.contains("Exchange"), s"unexpected Exchange in:\n$single")
-      assert(single.contains("SortMergeJoin"), s"expected full-outer SMJ in:\n$single")
+      assert(!single.exists(_.contains("Exchange")), s"unexpected Exchange in: $single")
+      assert(single.contains("SortMergeJoin"), s"expected full-outer SMJ in: $single")
       val parallel = lastPlan(
         MergeConfig(numBuckets = 4, singleTaskRows = 0L), tmpDir("r6-plan-off"))
-      assert(parallel.contains("Exchange"))
-    } finally System.clearProperty("graft.merge.explain"): Unit
+      assert(parallel.exists(_.contains("Exchange")), s"expected an Exchange in: $parallel")
+    } finally spark.listenerManager.unregister(listener)
   }
 
   test("cosineWithNorms(vecDot, vecNorm) is bit-identical to cosine") {
