@@ -52,8 +52,12 @@ object ColumnPolicy {
   *                     by `Maintenance.rebucket`).
   *                     At 100 TB this is the unit of rewrite amplification:
   *                     more buckets => smaller rewrites per touched key,
-  *                     more files. Size so one bucket's rewrite fits an
-  *                     executor's shuffle memory.
+  *                     more files — not more write tasks: a parallel
+  *                     rewrite runs min(touched buckets,
+  *                     defaultParallelism) tasks, each writing several
+  *                     buckets' files ([[graft.table.LakeTable.repartitionByBucket]]).
+  *                     Size so one bucket's rewrite fits an executor's
+  *                     shuffle memory.
   * @param saltFactor   >1 enables the two-stage salted dedupe: stage 1
   *                     pre-reduces each (doc_id, salt) group with a
   *                     struct-max (map-side combine absorbs hot keys),
@@ -498,18 +502,18 @@ object MergeInto {
     val bucketIds = touched.toSeq.sorted
     val nextVersion = current.map(_.version + 1).getOrElse(0L)
     val staging = table.stagingDir(nextVersion)
-    // a trickle delta batch writes ONE task (one small file per touched
-    // bucket dir) — no point fanning a few thousand rows over N tasks.
-    // coalesce(1), not repartition(1, _bucket): a keyed repartition into a
-    // single partition is a full extra Exchange (and stage) that moves
-    // every row to the same place coalesce reaches narrowly — identical
-    // file content. With deltaSingleTask the input was already coalesced
-    // ahead of the dedupe window, so the whole delta batch is ONE
-    // exchange-free single-task stage (guide §2.4).
+    // Write placement, one file per touched bucket on every path:
+    // - single-task plans: the input is already one partition.
+    // - a trickle delta batch writes ONE task: coalesce(1), not
+    //   repartition(1, _bucket), which would add a full Exchange (and
+    //   stage) to move every row where coalesce reaches narrowly.
+    // - the parallel rewrite hashes on _bucket into min(touched buckets,
+    //   task slots) tasks (LakeTable.repartitionByBucket): a task writes
+    //   several buckets in turn, sorted by _bucket, and never splits one.
     val placed =
       if (deltaSingleTask || mergeSingleTask) merged
       else if (isDeltaAppend) merged.coalesce(1)
-      else merged.repartition(touched.size.max(1), col("_bucket"))
+      else LakeTable.repartitionByBucket(merged, touched.size)
     val toWrite = placed.sortWithinPartitions(col("_bucket"), col("doc_id"))
     toWrite.write.partitionBy("_bucket").mode("overwrite").parquet(staging)
 

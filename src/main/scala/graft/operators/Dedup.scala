@@ -102,6 +102,16 @@ object Dedup {
     * subtrees re-ran the whole shingle pipeline twice more (before-plan
     * nodes (17)-(34)): 4 evaluations of the shingle pipeline become 1,
     * 3 aggregates become 1, 2 broadcast exchanges become 0.
+    *
+    * Collision bound: shingles are compared by 64-bit xxhash64, with no
+    * string recheck. Equal shingles always hash equal, so a collision can
+    * only ADD to a pair's intersection count — it may raise a score or
+    * admit a pair, never lower a score or drop one. Treating the hash as
+    * uniform, S distinct shingles across the input collide somewhere with
+    * probability at most S(S-1)/2^65: about 3e-8 at S = 10^6 and 3e-4 at
+    * S = 10^8. A collision adds one to `inter` for each pair of documents
+    * holding the two shingles, so such a pair scores (i+1)/(u-1) instead of
+    * its true i/u.
     */
   def ngramJaccard(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text",
       shingleWidth: Int = 3, threshold: Double = 0.5): DataFrame = {

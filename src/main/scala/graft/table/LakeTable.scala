@@ -9,6 +9,7 @@ import org.json4s._
 import org.json4s.jackson.Serialization
 
 import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, StandardOpenOption}
 import java.util.UUID
 
 /** One immutable data file registered in a snapshot manifest.
@@ -148,6 +149,12 @@ final class CommitConflictException(msg: String) extends RuntimeException(msg)
   * exists (local FS and HDFS), so exactly one writer wins each version.
   * Works identically on a 1000-executor cluster over HDFS/S3A-with-rename
   * semantics and on local[N].
+  *
+  * On `file:` the metadata files (manifest files, the head's temp file, the
+  * version hint) are written through java.nio rather than Hadoop `create`,
+  * which forks a `chmod` per file and per `.crc` when libhadoop is absent
+  * — a per-commit cost that would grow with the touched ranges
+  * ([[writeMetaFile]]).
   *
   * == Manifest list (the metadata scale path) ==
   * The per-version document is a MANIFEST LIST: the head (`v*.json`)
@@ -298,10 +305,8 @@ final class LakeTable private (val root: String, val conf: Configuration) {
   private def writeManifestFile(range: Int, numBuckets: Int,
       entries: Seq[FileEntry]): ManifestRef = {
     val name = s"m-${UUID.randomUUID()}.json"
-    val out = fs.create(new Path(metaDir, name), false)
-    try out.write(Serialization.write(ManifestFile(entries))
-      .getBytes(StandardCharsets.UTF_8))
-    finally out.close()
+    writeMetaFile(fs, new Path(metaDir, name), Serialization.write(
+      ManifestFile(entries)).getBytes(StandardCharsets.UTF_8), overwrite = false)
     val (lo, hi) = LakeTable.rangeSpan(range, numBuckets)
     val ref = ManifestRef(
       path = name, range = range, minBucket = lo, maxBucket = hi,
@@ -360,9 +365,8 @@ final class LakeTable private (val root: String, val conf: Configuration) {
     if (f.exists(target))
       throw new CommitConflictException(s"version ${m.version} already committed")
     val tmp = new Path(metaDir, s".tmp-${UUID.randomUUID()}.json")
-    val out = f.create(tmp, false)
-    try out.write(Serialization.write(m).getBytes(StandardCharsets.UTF_8))
-    finally out.close()
+    writeMetaFile(f, tmp, Serialization.write(m).getBytes(StandardCharsets.UTF_8),
+      overwrite = false)
     // The CAS. On HDFS-like stores rename-if-absent is atomic and fails
     // when the target exists. On the LOCAL filesystem it is NOT a CAS:
     // Hadoop's RawLocalFileSystem.rename delegates to File.renameTo =
@@ -373,18 +377,10 @@ final class LakeTable private (val root: String, val conf: Configuration) {
     // hard-link creation instead: link(2) is atomic and fails with EEXIST
     // when the target exists. A crash between link and tmp-delete leaves
     // only an orphaned .tmp-* file (no liveness impact, vacuumable).
-    // scheme from the RESOLVED FileSystem, not the (possibly scheme-less)
-    // Path: a bare /warehouse/t path on a cluster whose fs.defaultFS is
-    // HDFS must take the rename branch — the tmp file lives on HDFS, and
-    // local java.nio paths would not exist
-    val scheme = Option(f.getUri.getScheme).getOrElse("file")
     val won =
-      if (scheme == "file") {
+      if (isLocal(f)) {
         try {
-          java.nio.file.Files.createLink(
-            java.nio.file.Paths.get(target.toUri.getPath),
-            java.nio.file.Paths.get(tmp.toUri.getPath))
-          f.delete(tmp, false)
+          Files.createLink(nioPath(target), nioPath(tmp))
           true
         } catch {
           case _: java.nio.file.FileAlreadyExistsException => false
@@ -404,15 +400,50 @@ final class LakeTable private (val root: String, val conf: Configuration) {
       throw new CommitConflictException(
         s"lost CAS race committing version ${m.version}")
     }
+    // the head is linked under its version name: drop the temp name (a
+    // no-op after the rename fallback)
+    if (isLocal(f)) Files.deleteIfExists(nioPath(tmp))
     // best-effort hint refresh AFTER the CAS: concurrent writers race
     // (last write wins), a crash can leave it stale or torn — all safe,
     // currentVersion probes upward and falls back to the listing
-    try {
-      val out = f.create(hintPath, true)
-      try out.write(m.version.toString.getBytes(StandardCharsets.UTF_8))
-      finally out.close()
-    } catch { case _: Exception => () }
+    try writeMetaFile(f, hintPath,
+      m.version.toString.getBytes(StandardCharsets.UTF_8), overwrite = true)
+    catch { case _: Exception => () }
   }
+
+  /** Is `f` the local filesystem? Decided by the RESOLVED FileSystem's
+    * scheme, not the (possibly scheme-less) Path: a bare /warehouse/t path
+    * on a cluster whose fs.defaultFS is HDFS must stay on Hadoop calls —
+    * its files live on HDFS, and local java.nio paths would not exist.
+    */
+  private def isLocal(f: FileSystem): Boolean =
+    Option(f.getUri.getScheme).getOrElse("file") == "file"
+
+  private def nioPath(p: Path): java.nio.file.Path =
+    java.nio.file.Paths.get(p.toUri.getPath)
+
+  /** Write one small metadata file (manifest file, head temp file, version
+    * hint) in a single call. Local tables write through java.nio: Hadoop's
+    * local `create` sets permissions by forking `chmod` when libhadoop is
+    * absent — twice per file, for the file and its `.crc` — measured at
+    * 6-8 ms per file on a 4-core Linux host, against ~0.1 ms for the
+    * java.nio write. Files written this way carry no
+    * `.crc`; Hadoop reads them unverified. Overwriting (the hint only)
+    * first removes the `.crc` an older Hadoop write may have left, which
+    * would otherwise fail the read's checksum and silently send every
+    * `currentVersion` to the listing fallback. Other schemes keep
+    * `fs.create`.
+    */
+  private def writeMetaFile(f: FileSystem, p: Path, bytes: Array[Byte],
+      overwrite: Boolean): Unit =
+    if (!isLocal(f)) {
+      val out = f.create(p, overwrite)
+      try out.write(bytes)
+      finally out.close()
+    } else if (overwrite) {
+      Files.deleteIfExists(nioPath(new Path(p.getParent, s".${p.getName}.crc")))
+      Files.write(nioPath(p), bytes): Unit // create or truncate
+    } else Files.write(nioPath(p), bytes, StandardOpenOption.CREATE_NEW): Unit
 
   /** Already-committed snapshot for this (checkpointId, batchId), if any —
     * the idempotence lookup done at the top of every foreachBatch. A batch
@@ -612,6 +643,22 @@ object LakeTable {
     * and one task bounded by this count cannot skew or spill.
     */
   val SingleTaskRows: Long = 100000L
+
+  /** Placement of a parallel bucket rewrite (a merge batch or compaction
+    * above [[SingleTaskRows]]): hash-partition on `_bucket` into
+    * `min(touched buckets, defaultParallelism)` tasks. Every row of a
+    * bucket lands in one task, and callers sort each task by `_bucket`
+    * before the partitioned write, so a task writes its buckets' files one
+    * after another and each bucket still gets exactly one file. Sizing by
+    * task slots rather than by bucket count keeps the per-task fixed cost
+    * (scheduling, writer set-up) bounded by the cores, not by the bucket
+    * count: a ~2 MB batch touching 32 buckets would otherwise run 32 write
+    * tasks on a 4-core host.
+    */
+  def repartitionByBucket(df: DataFrame, touchedBuckets: Int): DataFrame = {
+    val slots = df.sparkSession.sparkContext.defaultParallelism
+    df.repartition(math.min(touchedBuckets, slots).max(1), col("_bucket"))
+  }
 
   /** Bucket ranges per table: fine enough that a 1-bucket commit rewrites
     * ~1/64 of the metadata, coarse enough that a full-spread batch writes

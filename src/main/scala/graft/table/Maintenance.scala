@@ -58,7 +58,6 @@ object Maintenance {
         filesBefore, filesBefore, tombstonesDropped = false)
     }
     val touchedBuckets = touched.map(_.bucket).toSet
-    val nTouchedBuckets = touchedBuckets.size
 
     // merge-on-read deltas fold back into one base file per bucket here:
     // LWW-resolve multi-version keys FIRST (delta-bearing buckets only),
@@ -69,8 +68,10 @@ object Maintenance {
     // buckets fit one task, coalesce BELOW the resolution window so the
     // whole fold+filter+sort+write is one exchange-free stage instead of
     // a 2-3 stage job — a maintenance cycle over trickle-sized buckets is
-    // scheduling-floor-bound, not data-bound. Larger selections keep the
-    // parallel repartition.
+    // scheduling-floor-bound, not data-bound. Larger selections hash on
+    // _bucket into min(touched buckets, task slots) tasks, the merge
+    // kernel's rule (LakeTable.repartitionByBucket): each bucket lands in
+    // one task and, sorted by _bucket below, in one file.
     val singleTask = touched.map(_.rows).sum <= LakeTable.SingleTaskRows
     val df = table.scanResolved(spark, stored, touched, singlePartition = singleTask)
       .filter(!col(LakeTable.TOMBSTONE) || col("lsn") > tombstoneWatermark)
@@ -79,7 +80,7 @@ object Maintenance {
 
     val placed =
       if (singleTask) df
-      else df.repartition(nTouchedBuckets, col("_bucket"))
+      else LakeTable.repartitionByBucket(df, touchedBuckets.size)
     placed
       .sortWithinPartitions(col("_bucket"), col("doc_id"))
       .write.partitionBy("_bucket").mode("overwrite").parquet(staging)
