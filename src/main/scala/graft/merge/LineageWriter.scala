@@ -29,8 +29,10 @@ import org.apache.parquet.schema.MessageTypeParser
   * columns. Exactly-once contract (unchanged): the write is
   * deterministic-path + overwrite and lands BEFORE the manifest CAS —
   * a crash on either side of the commit replays to identical content.
-  * The tmp-dir + rename keeps a concurrent lineage reader from seeing a
-  * half-written file.
+  * The file is written under a hidden `.tmp-batch=N` directory and
+  * renamed into place ([[graft.util.IoUtil.publishDir]]): a concurrent
+  * lineage reader never sees a half-written file, and a directory that a
+  * crash strands is skipped by every later read of `dir`.
   */
 object LineageWriter {
 
@@ -50,36 +52,28 @@ object LineageWriter {
   def write(conf: Configuration, dir: String, checkpointId: String,
       batchId: Long, rows: Seq[LineageRow]): Unit = {
     val finalDir = new Path(s"$dir/cp=$checkpointId/batch=$batchId")
-    // '_'-prefixed tmp name: ignored by Spark/Hadoop input listing even if
-    // a crash strands it
-    val tmpDir = new Path(s"$dir/cp=$checkpointId/_tmp-batch=$batchId")
-    val fs = finalDir.getFileSystem(conf)
-    fs.delete(tmpDir, true)
-    fs.mkdirs(tmpDir)
-    val file = new Path(tmpDir, "part-00000.snappy.parquet")
-    val w = ExampleParquetWriter
-      .builder(HadoopOutputFile.fromPath(file, conf))
-      .withConf(conf)
-      .withType(schema)
-      .withCompressionCodec(CompressionCodecName.SNAPPY)
-      .withWriteMode(ParquetFileWriter.Mode.OVERWRITE)
-      .build()
-    try rows.foreach { r =>
-      val g = new SimpleGroup(schema)
-      g.add("batch_id", r.batch_id)
-      g.add("partition", r.partition)
-      g.add("min_lsn", r.min_lsn)
-      g.add("max_lsn", r.max_lsn)
-      g.add("n_insert", r.n_insert)
-      g.add("n_update", r.n_update)
-      g.add("n_delete", r.n_delete)
-      g.add("n_dedup_dropped", r.n_dedup_dropped)
-      g.add("snapshot_id", r.snapshot_id)
-      w.write(g)
-    } finally w.close()
-    fs.delete(finalDir, true)
-    if (!fs.rename(tmpDir, finalDir))
-      throw new java.io.IOException(
-        s"lineage commit rename failed: $tmpDir -> $finalDir")
+    graft.util.IoUtil.publishDir(finalDir.getFileSystem(conf), finalDir) { tmpDir =>
+      val file = new Path(tmpDir, "part-00000.snappy.parquet")
+      val w = ExampleParquetWriter
+        .builder(HadoopOutputFile.fromPath(file, conf))
+        .withConf(conf)
+        .withType(schema)
+        .withCompressionCodec(CompressionCodecName.SNAPPY)
+        .withWriteMode(ParquetFileWriter.Mode.OVERWRITE)
+        .build()
+      try rows.foreach { r =>
+        val g = new SimpleGroup(schema)
+        g.add("batch_id", r.batch_id)
+        g.add("partition", r.partition)
+        g.add("min_lsn", r.min_lsn)
+        g.add("max_lsn", r.max_lsn)
+        g.add("n_insert", r.n_insert)
+        g.add("n_update", r.n_update)
+        g.add("n_delete", r.n_delete)
+        g.add("n_dedup_dropped", r.n_dedup_dropped)
+        g.add("snapshot_id", r.snapshot_id)
+        w.write(g)
+      } finally w.close()
+    }
   }
 }

@@ -2,6 +2,7 @@ package graft.merge
 
 import graft.model.{Ops, SchemaEvolution, Schemas}
 import graft.table.{FileEntry, LakeTable, Manifest}
+import graft.util.JobDescription
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -308,12 +309,14 @@ object MergeInto {
     // a `_good` flag so the reject count comes out of the same job.
     val bucketOf: Column => Column =
       k => pmod(xxhash64(k), lit(numBuckets.toLong)).cast("int")
-    val rawStats = cachedBatch.getOrElse(batch)
-      .groupBy((if (cachedBatch.isDefined) goodPred else lit(true)).as("_good"),
-        bucketOf(col("doc_id")).as("_bucket"))
-      .agg(count(lit(1)).as("n_raw"),
-        min("lsn").as("minL"), max("lsn").as("maxL"))
-      .collect()
+    val rawStats = JobDescription(spark, s"merge stats $ledgerKey") {
+      cachedBatch.getOrElse(batch)
+        .groupBy((if (cachedBatch.isDefined) goodPred else lit(true)).as("_good"),
+          bucketOf(col("doc_id")).as("_bucket"))
+        .agg(count(lit(1)).as("n_raw"),
+          min("lsn").as("minL"), max("lsn").as("maxL"))
+        .collect()
+    }
     val batchStats = rawStats.filter(_.getBoolean(0))
       .map(r => r.getInt(1) -> ((r.getLong(2), r.getLong(3), r.getLong(4))))
       .toMap // bucket -> (n_raw, minL, maxL)
@@ -321,8 +324,10 @@ object MergeInto {
     if (rejectCount > 0) cfg.deadLetterDir.foreach { dir =>
       // before the commit (a crash between commit and a later rejects
       // write would skip them on replay), idempotent overwrite path
-      cachedBatch.get.filter(!goodPred).write.mode("overwrite")
-        .parquet(s"$dir/cp=$checkpointId/batch=$batchId")
+      JobDescription(spark, s"merge rejects $ledgerKey") {
+        cachedBatch.get.filter(!goodPred).write.mode("overwrite")
+          .parquet(s"$dir/cp=$checkpointId/batch=$batchId")
+      }
     }
     val touched: Set[Int] = batchStats.keySet
 
@@ -515,7 +520,9 @@ object MergeInto {
       else if (isDeltaAppend) merged.coalesce(1)
       else LakeTable.repartitionByBucket(merged, touched.size)
     val toWrite = placed.sortWithinPartitions(col("_bucket"), col("doc_id"))
-    toWrite.write.partitionBy("_bucket").mode("overwrite").parquet(staging)
+    JobDescription(spark, s"merge write $ledgerKey") {
+      toWrite.write.partitionBy("_bucket").mode("overwrite").parquet(staging)
+    }
 
     // -- 7. manifest entries for the staged files, with per-file pruning
     // stats (rows, lsn min/max) harvested from the parquet FOOTERS —
@@ -553,7 +560,8 @@ object MergeInto {
       else Some {
         import scala.concurrent.{ExecutionContext, Future}
         implicit val ec: ExecutionContext = ExecutionContext.global
-        Future {
+        // a pool thread: its description is set here, not inherited
+        Future(JobDescription(spark, s"merge status read-back $ledgerKey") {
           spark.read.schema(readbackSchema).parquet(staging)
             .groupBy(col("_bucket"))
             .agg(
@@ -566,7 +574,7 @@ object MergeInto {
             .map(r => r.getInt(0) -> Array(r.getLong(1), r.getLong(2),
               r.getLong(3), r.getLong(4), r.getLong(5)))
             .toMap
-        }
+        })
       }
 
     val snapshotId = UUID.randomUUID().toString

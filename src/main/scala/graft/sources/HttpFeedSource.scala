@@ -1,9 +1,17 @@
 package graft.sources
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
-import org.apache.spark.sql.{Dataset, SparkSession}
+import graft.util.IoUtil
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.sql.{Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BindReferences, BoundReference, InterpretedOrdering, RuntimeReplaceable, SortOrder, UnsafeProjection}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
@@ -25,11 +33,17 @@ import scala.collection.mutable
   * stateless and horizontally shardable (each writes its own segment
   * files), and the streaming job never couples to request latency.
   *
+  * A flush runs no Spark job: it parses, sorts and writes the segment on
+  * the driver, and publishes it atomically (written under a hidden temp
+  * directory, renamed to `seg=N` when complete). A line with a key outside
+  * `schema` is rejected, not truncated to the known fields. See [[flush]].
+  *
   * Endpoints:
   *   - `POST /events` — body = JSON lines, one change event per line;
   *     202, events buffered (auto-flush at `flushEvery`).
   *   - `POST /flush`  — force the buffer out as the next segment; 200
-  *     with `{"seg":N,"rows":K}` (or `{"seg":-1,"rows":0}` on empty).
+  *     with `{"seg":N,"rows":K}` (or `{"seg":-1,"rows":0}` on empty), K
+  *     counting the accepted lines only.
   *   - `GET  /health` — 200 "ok".
   *
   * The client-side fetch (`GetHTTP`) is permanently out of scope: pulling
@@ -43,14 +57,19 @@ final class HttpFeedServer private (
     schema: StructType,
     flushEvery: Int) {
 
+  import HttpFeedServer.RejectField
+
+  /** Parser field that holds a line Spark's JSON parser could not read. */
+  private val Corrupt = "_corrupt_record"
+
   private val buf = mutable.ArrayBuffer.empty[String]
+  private val fs = new Path(feedDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
   private var nextSeg: Long = {
     // resume numbering after existing segments (receiver restarts append).
     // Through the Hadoop FS, not java.io.File: segments are written via
     // Spark's FS, and a receiver whose feedDir is remote (hdfs://, s3a://)
     // must not silently restart at seg=0 and overwrite existing data.
-    val p = new org.apache.hadoop.fs.Path(feedDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val p = new Path(feedDir)
     if (!fs.exists(p)) 0L
     else fs.listStatus(p).toIndexedSeq
       .map(_.getPath.getName).filter(_.startsWith("seg="))
@@ -60,6 +79,35 @@ final class HttpFeedServer private (
 
   def port: Int = server.getAddress.getPort
 
+  /** `parseLine` maps a line to (`from_json` of it, with a
+    * `_corrupt_record` field appended to `schema`; its top-level keys).
+    * It is the select that Spark analyzes for those two columns, compiled
+    * once as a projection that a flush evaluates on the driver: Spark's
+    * own JSON parsing for any schema, with no query to plan per flush and
+    * no Spark job. `segSchema`, the schema of the segment files, is
+    * `schema` with every field nullable, as Spark's JSON parser returns it.
+    */
+  private val (parseLine, segSchema) = {
+    val q = spark.createDataset(Seq.empty[String])(Encoders.STRING).select(
+      from_json(col("value"), schema.add(Corrupt, StringType),
+        Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> Corrupt)),
+      json_object_keys(col("value"))).queryExecution.analyzed
+    // the optimizer's ReplaceExpressions step: from_json and
+    // json_object_keys evaluate through their runtime replacements
+    val exprs = q.expressions.map(e => BindReferences.bindReference(
+      e.transformDown { case r: RuntimeReplaceable => r.replacement },
+      q.children.head.output))
+    (UnsafeProjection.create(exprs),
+      StructType(q.schema.head.dataType.asInstanceOf[StructType].dropRight(1)))
+  }
+  private val knownKeys = schema.fieldNames.toSet
+  private val lsnIdx = schema.fieldIndex("lsn")
+  private val docIdIdx = schema.fieldIndex("doc_id")
+  private val lsnOrder = new InterpretedOrdering(Seq(SortOrder(
+    BoundReference(lsnIdx, schema(lsnIdx).dataType, nullable = true), Ascending)))
+  private val segRow = UnsafeProjection.create(segSchema.fields.toIndexedSeq
+    .zipWithIndex.map { case (f, i) => BoundReference(i, f.dataType, nullable = true) })
+
   /** Flush buffered events as the next feed segment; returns (seg, rows)
     * or (-1, 0) when the buffer is empty. Synchronized with ingestion so
     * a segment is a consistent prefix of what was posted. The buffer is
@@ -67,45 +115,65 @@ final class HttpFeedServer private (
     * with 202 must survive a failed flush (disk full, transient FS error)
     * and go out with the next one — a throwing flush loses nothing.
     *
-    * Lines that do not parse into a feed event with a non-null (lsn,
-    * doc_id) are diverted to `feedDir/_rejects/seg=N` instead of the
-    * segment (the dead-letter posture of the CSV source): the stream only
-    * tails `seg=*` dirs, so accepted garbage can neither crash the tail
-    * nor merge as a null-keyed live row.
+    * No Spark job runs. The lines are parsed on the driver by Spark's
+    * `from_json` (`parseLine`), so parsing follows Spark's JSON rules for
+    * any schema. The accepted rows are sorted by `lsn` and written as one
+    * parquet file by Spark's own parquet writer, under a hidden temp
+    * directory that is renamed to `seg=N` once the file is complete: the
+    * tailing stream never lists a half-written segment.
+    *
+    * A line is rejected when it does not parse into a feed event, has a
+    * null `lsn` or `doc_id`, or has a key outside the schema (it is not
+    * truncated to the known fields). Rejects go to `feedDir/_rejects/seg=N`
+    * as JSON lines `{"line": <raw line>}` (the dead-letter posture of the
+    * CSV source): the stream only tails `seg=*` dirs, so accepted garbage
+    * can neither crash the tail nor merge as a null-keyed live row. The
+    * returned row count excludes them.
     */
   def flush(): (Long, Long) = synchronized {
     if (buf.isEmpty) return (-1L, 0L)
-    val lines = buf.toIndexedSeq
     val seg = nextSeg
-    import spark.implicits._
-    val ds: Dataset[String] = spark.createDataset(lines)
-    val withCorrupt = StructType(schema.fields.toIndexedSeq :+
-      StructField("_corrupt_record", org.apache.spark.sql.types.StringType))
-    val df = spark.read.schema(withCorrupt)
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .json(ds)
-      .cache()
-    try {
-      val badPred = col("_corrupt_record").isNotNull ||
-        col("lsn").isNull || col("doc_id").isNull
-      val bad = df.filter(badPred)
-      val nBad = bad.count()
-      if (nBad > 0)
-        bad.coalesce(1).write.mode("overwrite")
-          .json(s"$feedDir/_rejects/seg=$seg")
-      val good = df.filter(!badPred).drop("_corrupt_record")
-      // LSN order inside the single segment file: coalesce(1) THEN a
-      // within-partition sort — a global orderBy plans a range exchange
-      // whose boundary-sampling pass is a whole extra Spark job per flush
-      // for a one-file result the local sort produces identically
-      good.coalesce(1).sortWithinPartitions(col("lsn"))
-        .write.mode("overwrite").parquet(s"$feedDir/seg=$seg")
-      // only now is the segment durable: advance + drop the buffer
-      nextSeg += 1
-      buf.clear()
-      (seg, lines.length.toLong - nBad)
-    } finally df.unpersist(false): Unit
+    val (good, rejects) = parse(buf.toIndexedSeq)
+    if (rejects.nonEmpty)
+      IoUtil.publishDir(fs, new Path(s"$feedDir/_rejects/seg=$seg")) { dir =>
+        val out = fs.create(new Path(dir, "part-00000.json"))
+        try rejects.foreach { l =>
+          out.write(s"""{"$RejectField":${IoUtil.jsonString(l)}}\n"""
+            .getBytes(StandardCharsets.UTF_8))
+        } finally out.close()
+      }
+    IoUtil.publishDir(fs, new Path(s"$feedDir/seg=$seg"))(writeSegment(_, good))
+    // only now is the segment durable: advance + drop the buffer
+    nextSeg += 1
+    buf.clear()
+    (seg, good.length.toLong)
+  }
+
+  /** Accepted rows (in `segSchema`, sorted by `lsn`) and rejected lines. */
+  private def parse(lines: Seq[String]): (Seq[InternalRow], Seq[String]) = {
+    val n = segSchema.length
+    val good = Seq.newBuilder[InternalRow]
+    val rejects = Seq.newBuilder[String]
+    lines.foreach { line =>
+      val r = parseLine(InternalRow(UTF8String.fromString(line)))
+      val e = if (r.isNullAt(0)) null else r.getStruct(0, n + 1)
+      val ok = e != null && e.isNullAt(n) && !e.isNullAt(lsnIdx) &&
+        !e.isNullAt(docIdIdx) && !r.isNullAt(1) &&
+        r.getArray(1).toSeq[UTF8String](StringType).forall(k => knownKeys(k.toString))
+      if (ok) good += segRow(e).copy() else rejects += line
+    }
+    (good.result().sorted(lsnOrder), rejects.result())
+  }
+
+  /** Write `rows` as one parquet file in `dir` with Spark's parquet
+    * writer (same footer and schema metadata as a Spark job's write). */
+  private def writeSegment(dir: Path, rows: Seq[InternalRow]): Unit = {
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, segSchema)
+    val ctx = new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID())
+    val w = factory.newInstance(
+      new Path(dir, "part-00000" + factory.getFileExtension(ctx)).toString, segSchema, ctx)
+    try rows.foreach(w.write) finally w.close()
   }
 
   private def ingest(body: String): Int = {
@@ -156,6 +224,11 @@ final class HttpFeedServer private (
 }
 
 object HttpFeedServer {
+
+  /** Field of a rejected line's JSON record that holds the raw line (not
+    * `_corrupt_record`: Spark refuses queries of a JSON file that read
+    * only that column). */
+  val RejectField = "line"
 
   /** Start a receiver on `port` (0 = ephemeral) writing segments of
     * `schema`-shaped change events under `feedDir`.

@@ -2,9 +2,18 @@ package graft.stream
 
 import graft.merge.{MergeConfig, MergeInto}
 import graft.table.{LakeTable, Maintenance}
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.datasources.FileScanRDD
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
+
+import scala.jdk.CollectionConverters._
 
 /** Configuration of a CDC tail job.
   *
@@ -119,7 +128,9 @@ object CdcStream {
 
   /** Schema of the feed dir (batch-inferred once at start; a CDC schema
     * change is a restart point — the new run re-infers and the MERGE
-    * kernel evolves the table).
+    * kernel evolves the table). A segment that adds a column while the
+    * stream runs fails the stream ([[checkNoNewColumns]]); the file source
+    * would otherwise read it without that column.
     */
   def feedSchema(spark: SparkSession, feedDir: String): StructType =
     spark.read.parquet(feedDir).schema
@@ -155,6 +166,7 @@ object CdcStream {
         .map(t => Trigger.ProcessingTime(t): Trigger)
         .getOrElse(Trigger.AvailableNow()))
       .foreachBatch { (df: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
+        checkNoNewColumns(df, schema)
         // `seg`/`phase` are feed bookkeeping (partition dirs), not payload
         val batch = df.drop("seg", "phase")
         val res = MergeInto.apply(df.sparkSession, table, batch,
@@ -170,6 +182,43 @@ object CdcStream {
         onBatch(batchId, res)
       }
     writer.start()
+  }
+
+  /** Fail when a file of the micro-batch `df` has a column that the
+    * stream's `schema` lacks. Reads only the parquet footers of the files
+    * the source already listed for the batch, on the driver: no Spark job,
+    * no listing. `foreachBatch` hands over a `LogicalRDD` over the planned
+    * scan, whose `inputFiles` is empty, so the files are taken from the
+    * scan's `FileScanRDD` in the RDD lineage.
+    */
+  private def checkNoNewColumns(df: DataFrame, schema: StructType): Unit = {
+    val spark = df.sparkSession
+    val caseSensitive = spark.conf.get("spark.sql.caseSensitive").toBoolean
+    def norm(n: String) = if (caseSensitive) n else n.toLowerCase(java.util.Locale.ROOT)
+    val known = schema.fieldNames.map(norm).toSet
+    val conf = spark.sparkContext.hadoopConfiguration
+    def scans(rdd: RDD[_]): Seq[FileScanRDD] = rdd match {
+      case f: FileScanRDD => Seq(f)
+      case r => r.dependencies.flatMap(d => scans(d.rdd))
+    }
+    val files = df.queryExecution.logical match {
+      case l: LogicalRDD =>
+        scans(l.rdd).flatMap(_.filePartitions.flatMap(_.files.map(_.filePath.toPath)))
+      case _ => df.inputFiles.toSeq.map(new Path(_))
+    }
+    files.foreach { f =>
+      // Spark's footer reader: ~0.1 ms a file, where opening a
+      // ParquetFileReader costs milliseconds
+      val names = ParquetFooterReader.readFooter(HadoopInputFile.fromPath(f, conf),
+        ParquetMetadataConverter.SKIP_ROW_GROUPS).getFileMetaData.getSchema.getFields
+        .asScala.map(_.getName)
+      val extra = names.filterNot(n => known(norm(n)))
+      if (extra.nonEmpty) throw new IllegalStateException(
+        s"feed segment file $f has column(s) ${extra.mkString(", ")} that the " +
+          s"stream schema (${schema.fieldNames.mkString(", ")}) lacks; the " +
+          "stream stops rather than drop them (a feed schema change is a " +
+          "restart point, see CdcStream.feedSchema)")
+    }
   }
 
   /** One inline maintenance cycle: compact the k most fragmented buckets

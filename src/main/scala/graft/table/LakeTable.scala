@@ -504,31 +504,32 @@ final class LakeTable private (val root: String, val conf: Configuration) {
   /** (rows, min lsn, max lsn) of one parquet file from its footer. */
   private def footerStats(p: Path): (Long, Long, Long) = {
     import scala.jdk.CollectionConverters._
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
-    try {
-      val blocks = r.getFooter.getBlocks.asScala.toSeq
-      val rows = blocks.map(_.getRowCount).sum
-      if (rows == 0L) return (0L, Long.MaxValue, Long.MinValue)
-      var minL = Long.MaxValue
-      var maxL = Long.MinValue
-      var sawStats = true
-      blocks.foreach { b =>
-        b.getColumns.asScala.find(_.getPath.toDotString == "lsn") match {
-          case Some(c) if c.getStatistics != null &&
-              !c.getStatistics.isEmpty && c.getStatistics.hasNonNullValue =>
-            (c.getStatistics.genericGetMin, c.getStatistics.genericGetMax) match {
-              case (lo: java.lang.Long, hi: java.lang.Long) =>
-                if (lo < minL) minL = lo
-                if (hi > maxL) maxL = hi
-              case _ => sawStats = false
-            }
-          case _ => sawStats = false
-        }
+    // Spark's footer reader: ~0.1 ms a file, where opening a
+    // ParquetFileReader costs milliseconds
+    val blocks = org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
+      .readFooter(org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf),
+        org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER)
+      .getBlocks.asScala.toSeq
+    val rows = blocks.map(_.getRowCount).sum
+    if (rows == 0L) return (0L, Long.MaxValue, Long.MinValue)
+    var minL = Long.MaxValue
+    var maxL = Long.MinValue
+    var sawStats = true
+    blocks.foreach { b =>
+      b.getColumns.asScala.find(_.getPath.toDotString == "lsn") match {
+        case Some(c) if c.getStatistics != null &&
+            !c.getStatistics.isEmpty && c.getStatistics.hasNonNullValue =>
+          (c.getStatistics.genericGetMin, c.getStatistics.genericGetMax) match {
+            case (lo: java.lang.Long, hi: java.lang.Long) =>
+              if (lo < minL) minL = lo
+              if (hi > maxL) maxL = hi
+            case _ => sawStats = false
+          }
+        case _ => sawStats = false
       }
-      if (sawStats) (rows, minL, maxL)
-      else (rows, Long.MinValue, Long.MaxValue)
-    } finally r.close()
+    }
+    if (sawStats) (rows, minL, maxL)
+    else (rows, Long.MinValue, Long.MaxValue)
   }
 
   // ---- read path -------------------------------------------------------

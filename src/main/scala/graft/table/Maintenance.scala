@@ -1,5 +1,6 @@
 package graft.table
 
+import graft.util.JobDescription
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -81,9 +82,11 @@ object Maintenance {
     val placed =
       if (singleTask) df
       else LakeTable.repartitionByBucket(df, touchedBuckets.size)
-    placed
-      .sortWithinPartitions(col("_bucket"), col("doc_id"))
-      .write.partitionBy("_bucket").mode("overwrite").parquet(staging)
+    JobDescription(spark, s"compact v$nextVersion") {
+      placed
+        .sortWithinPartitions(col("_bucket"), col("doc_id"))
+        .write.partitionBy("_bucket").mode("overwrite").parquet(staging)
+    }
 
     // per-file pruning stats straight from the parquet footers — exact,
     // driver-side; replaces a second full read of the compacted output
@@ -156,11 +159,13 @@ object Maintenance {
       // one task per input file, each paying parquet-writer setup for up
       // to k output files
       val singleTask = files.map(_.rows).sum <= LakeTable.SingleTaskRows
-      table.scanResolved(spark, stored, files, singlePartition = singleTask)
-        .withColumn("_bucket",
-          pmod(xxhash64(col("doc_id")), lit(newNumBuckets.toLong)).cast("int"))
-        .sortWithinPartitions(col("_bucket"), col("doc_id"))
-        .write.partitionBy("_bucket").mode("overwrite").parquet(staging)
+      JobDescription(spark, s"rebucket v$nextVersion") {
+        table.scanResolved(spark, stored, files, singlePartition = singleTask)
+          .withColumn("_bucket",
+            pmod(xxhash64(col("doc_id")), lit(newNumBuckets.toLong)).cast("int"))
+          .sortWithinPartitions(col("_bucket"), col("doc_id"))
+          .write.partitionBy("_bucket").mode("overwrite").parquet(staging)
+      }
     }
     val newFiles = table.enumerateStagedWithStats(staging)
     val snapshotId = UUID.randomUUID().toString

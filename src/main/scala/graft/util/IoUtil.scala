@@ -1,5 +1,7 @@
 package graft.util
 
+import org.apache.hadoop.fs.{FileSystem, Path}
+
 /** Tiny shared IO/text helpers — single definitions for logic that was
   * previously duplicated across mains and sources (a fix applied to one
   * copy silently missed the other).
@@ -25,5 +27,26 @@ object IoUtil {
   def deleteRecursively(f: java.io.File): Unit = {
     if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(deleteRecursively))
     f.delete(): Unit
+  }
+
+  /** Write a directory under a hidden temp name next to `finalDir`, then
+    * rename it into place: a reader lists either nothing or the finished
+    * directory, and a crash strands only the temp directory, which the
+    * next publish of the same `finalDir` clears. An existing `finalDir`
+    * is replaced.
+    *
+    * The temp name starts with `.`, which Spark's file listing always
+    * skips. A `_`-prefixed name is skipped only when it holds no `=`, so
+    * `_tmp-seg=3` would be listed as a partition directory and fail
+    * partition discovery of the whole parent.
+    */
+  def publishDir(fs: FileSystem, finalDir: Path)(write: Path => Unit): Unit = {
+    val tmp = new Path(finalDir.getParent, s".tmp-${finalDir.getName}")
+    fs.delete(tmp, true)
+    fs.mkdirs(tmp)
+    write(tmp)
+    fs.delete(finalDir, true)
+    if (!fs.rename(tmp, finalDir))
+      throw new java.io.IOException(s"rename failed: $tmp -> $finalDir")
   }
 }

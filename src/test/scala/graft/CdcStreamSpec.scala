@@ -133,4 +133,40 @@ class CdcStreamSpec extends SparkSpec {
     val withExtra = table.read(spark).filter("extra_v2 is not null").count()
     assert(withExtra > 0)
   }
+
+  test("a segment that adds a column mid-stream fails the stream and is not applied") {
+    import spark.implicits._
+    val work = tmpDir("stream-drift")
+    val feedDir = s"$work/feed"
+    val events = ChangeGen.generateLocal(FeedConfig(numEvents = 400, numKeys = 50,
+      seed = 3, eventsPerSegment = 200))
+    def segment(seg: Int): DataFrame = ChangeGen.projectPhase(
+      events.filter(_.seg == seg).toDF(), Phase(0, Long.MaxValue)).drop("seg")
+    def publish(seg: Int, df: DataFrame): Unit = {
+      val dir = new org.apache.hadoop.fs.Path(s"$feedDir/seg=$seg")
+      graft.util.IoUtil.publishDir(
+        dir.getFileSystem(spark.sparkContext.hadoopConfiguration), dir) { tmp =>
+        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      }
+    }
+    publish(0, segment(0))
+    val applied = new java.util.concurrent.LinkedBlockingQueue[Long]()
+    val q = CdcStream.start(spark, StreamConfig(
+      feedDir = feedDir, tableDir = s"$work/table", checkpointDir = s"$work/cp",
+      checkpointId = "drift", maxFilesPerTrigger = 1, processingTime = Some("50 milliseconds"),
+      merge = MergeConfig(numBuckets = 4)), (id, _) => applied.put(id))
+    try {
+      assert(applied.poll(60, java.util.concurrent.TimeUnit.SECONDS) === 0L)
+      publish(1, segment(1).withColumn("extra_v2", org.apache.spark.sql.functions.lit("x")))
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        q.awaitTermination(60000): Unit
+      }
+      assert(e.getMessage.contains("seg=1") && e.getMessage.contains("extra_v2"), e.getMessage)
+    } finally q.stop()
+    assert(applied.isEmpty, "the drifted segment must not be merged")
+    val table = LakeTable(s"$work/table")
+    assert(!table.currentManifest().isCommitted("drift", 1L))
+    assert(asMap(table.read(spark)) === ChangeGen.oracleFinalState(events.filter(_.seg == 0))
+      .map { case (k, e) => k -> ((e.tokens.toSeq, e.n_tok.toLong, e.source, e.lsn)) })
+  }
 }

@@ -246,100 +246,6 @@ class IvfContractSpec extends SparkSpec {
   }
 }
 
-/** HTTP ingress edge (the reference's HandleHttpRequest/Response shape):
-  * events POSTed over HTTP become ordinary feed segments, and the whole
-  * downstream CDC path — admission, MERGE, exactly-once — is unchanged.
-  */
-class HttpFeedSpec extends SparkSpec {
-  import java.net.URI
-  import java.net.http.{HttpClient, HttpRequest, HttpResponse}
-
-  private val feedSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("lsn", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("op", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("tokens",
-      org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.IntegerType)),
-    org.apache.spark.sql.types.StructField("n_tok", org.apache.spark.sql.types.IntegerType),
-    org.apache.spark.sql.types.StructField("source", org.apache.spark.sql.types.StringType)))
-
-  private def ev(lsn: Long, key: String, op: String, toks: Seq[Int]): String = {
-    val t = if (op == Ops.Delete) "null" else toks.mkString("[", ",", "]")
-    val n = if (op == Ops.Delete) "null" else toks.length.toString
-    s"""{"lsn":$lsn,"doc_id":"$key","op":"$op","tokens":$t,"n_tok":$n,"source":"http"}"""
-  }
-
-  test("posted events -> segments -> merged table state (auto- and forced flush)") {
-    val work = tmpDir("http-feed")
-    val srv = graft.sources.HttpFeedServer.start(
-      spark, s"$work/feed", feedSchema, flushEvery = 4)
-    try {
-      val client = HttpClient.newHttpClient()
-      def post(path: String, body: String): HttpResponse[String] =
-        client.send(HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:${srv.port}$path"))
-          .POST(HttpRequest.BodyPublishers.ofString(body)).build(),
-          HttpResponse.BodyHandlers.ofString())
-      assert(client.send(
-        HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:${srv.port}/health")).GET().build(),
-        HttpResponse.BodyHandlers.ofString()).statusCode() === 200)
-      // batch 1: 4 events -> auto-flush at flushEvery
-      val r1 = post("/events", Seq(
-        ev(1, "a", Ops.Insert, Seq(1)), ev(2, "b", Ops.Insert, Seq(2)),
-        ev(3, "a", Ops.Update, Seq(3, 3)), ev(4, "c", Ops.Insert, Seq(4))).mkString("\n"))
-      assert(r1.statusCode() === 202 && r1.body().contains("\"accepted\":4"))
-      // batch 2: delete + late event, forced flush
-      post("/events", Seq(ev(6, "b", Ops.Delete, Nil), ev(5, "c", Ops.Upsert, Seq(5))).mkString("\n"))
-      val r2 = post("/flush", "")
-      assert(r2.statusCode() === 200 && r2.body().contains("\"seg\":1"))
-      assert(post("/flush", "").body().contains("\"seg\":-1"))
-    } finally srv.stop()
-    val got = CdcStream.runToCompletion(spark, StreamConfig(
-      feedDir = s"$work/feed", tableDir = s"$work/t", checkpointDir = s"$work/cp",
-      checkpointId = "http", maxFilesPerTrigger = 1,
-      merge = MergeConfig(numBuckets = 4)))
-      .select("doc_id", "tokens", "lsn").collect()
-      .map(r => (r.getString(0), r.getSeq[Int](1), r.getLong(2))).toSet
-    assert(got === Set(("a", Seq(3, 3), 3L), ("c", Seq(5), 5L)))
-    // receiver restart resumes segment numbering after existing segments
-    val srv2 = graft.sources.HttpFeedServer.start(spark, s"$work/feed", feedSchema)
-    try {
-      val client = HttpClient.newHttpClient()
-      client.send(HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:${srv2.port}/events"))
-        .POST(HttpRequest.BodyPublishers.ofString(ev(7, "d", Ops.Insert, Seq(7)))).build(),
-        HttpResponse.BodyHandlers.ofString()): Unit
-      assert(srv2.flush()._1 === 2L)
-    } finally srv2.stop()
-  }
-
-  test("garbage lines divert to _rejects and never reach the feed segment") {
-    val work = tmpDir("http-rejects")
-    val srv = graft.sources.HttpFeedServer.start(
-      spark, s"$work/feed", feedSchema, flushEvery = Int.MaxValue)
-    try {
-      val client = HttpClient.newHttpClient()
-      def post(path: String, body: String): HttpResponse[String] =
-        client.send(HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:${srv.port}$path"))
-          .POST(HttpRequest.BodyPublishers.ofString(body)).build(),
-          HttpResponse.BodyHandlers.ofString())
-      // 2 valid events + raw garbage + a JSON object missing the key:
-      // everything is 202-accepted (ingress contract), but only the valid
-      // rows may land in the segment the stream tails
-      post("/events", Seq(
-        ev(1, "a", Ops.Insert, Seq(1)),
-        "this is not json",
-        """{"lsn":9,"op":"U","tokens":[1],"n_tok":1,"source":"http"}""", // null doc_id
-        ev(2, "b", Ops.Insert, Seq(2))).mkString("\n")): Unit
-      val r = post("/flush", "")
-      assert(r.statusCode() === 200 && r.body().contains("\"rows\":2"), r.body())
-    } finally srv.stop()
-    val seg = spark.read.schema(feedSchema).parquet(s"$work/feed/seg=0")
-    assert(seg.count() === 2)
-    assert(seg.filter(col("doc_id").isNull || col("lsn").isNull).count() === 0)
-    val rejects = spark.read.json(s"$work/feed/_rejects/seg=0")
-    assert(rejects.count() === 2)
-  }
-}
-
 /** resolveLatest file-version tie-break must anchor to the LAST /s<v>/
   * path segment — a table root that itself contains one (e.g. /home/s123/
   * warehouse) must not flatten _file_ver (round-4 advice).
@@ -372,64 +278,6 @@ class ResolveVersionAnchorSpec extends SparkSpec {
     val folded = t.read(spark).filter(col("doc_id") === "k1")
       .select("tokens").head().getSeq[Int](0)
     assert(folded === Seq(9, 9))
-  }
-}
-
-/** Driver-side lineage write ([[graft.merge.LineageWriter]]): the per-batch
-  * lineage parquet is written without a Spark job but must stay bit-for-bit
-  * compatible with the old DataFrame-write layout — partition discovery over
-  * `cp=/batch=`, identical column names/types, overwrite-idempotent replays.
-  */
-class LineageWriterSpec extends SparkSpec {
-  import graft.merge.LineageWriter
-  import graft.model.LineageRow
-
-  private def rows(snapshot: String) = Seq(
-    LineageRow(batch_id = 3L, partition = 0, min_lsn = 10L, max_lsn = 42L,
-      n_insert = 5L, n_update = 2L, n_delete = 1L, n_dedup_dropped = 4L,
-      snapshot_id = snapshot),
-    LineageRow(batch_id = 3L, partition = 5, min_lsn = 11L, max_lsn = 40L,
-      n_insert = 0L, n_update = 7L, n_delete = 0L, n_dedup_dropped = 0L,
-      snapshot_id = snapshot))
-
-  test("driver-written lineage reads back exactly, with partition discovery") {
-    val dir = tmpDir("lineage-direct")
-    val conf = spark.sparkContext.hadoopConfiguration
-    LineageWriter.write(conf, dir, "cpA", 3L, rows("snap-1"))
-    LineageWriter.write(conf, dir, "cpA", 4L, Seq(
-      LineageRow(4L, 2, 50L, 60L, 1L, 0L, 0L, 0L, "snap-2")))
-    val got = spark.read.parquet(dir)
-    // partition columns recovered from the directory layout
-    assert(got.columns.toSet ===
-      Set("batch_id", "partition", "min_lsn", "max_lsn", "n_insert",
-        "n_update", "n_delete", "n_dedup_dropped", "snapshot_id",
-        "cp", "batch"))
-    val b3 = got.filter(col("batch") === 3).orderBy("partition").collect()
-    assert(b3.length === 2)
-    val r0 = b3(0)
-    assert(r0.getAs[Long]("batch_id") === 3L)
-    assert(r0.getAs[Int]("partition") === 0)
-    assert(r0.getAs[Long]("min_lsn") === 10L)
-    assert(r0.getAs[Long]("max_lsn") === 42L)
-    assert(r0.getAs[Long]("n_insert") === 5L)
-    assert(r0.getAs[Long]("n_dedup_dropped") === 4L)
-    assert(r0.getAs[String]("snapshot_id") === "snap-1")
-    assert(r0.getAs[String]("cp") === "cpA")
-    assert(got.filter(col("batch") === 4).count() === 1)
-  }
-
-  test("replayed write overwrites to identical content; no tmp dirs survive") {
-    val dir = tmpDir("lineage-replay")
-    val conf = spark.sparkContext.hadoopConfiguration
-    LineageWriter.write(conf, dir, "cp", 0L, rows("snap-x"))
-    val first = spark.read.parquet(dir).collect().map(_.toString).sorted
-    // a crash-replay rewrites the same batch (possibly with a different
-    // snapshot id upstream — here identical rows): content must converge
-    LineageWriter.write(conf, dir, "cp", 0L, rows("snap-x"))
-    val second = spark.read.parquet(dir).collect().map(_.toString).sorted
-    assert(first === second)
-    val cpDir = new java.io.File(s"$dir/cp=cp")
-    assert(cpDir.listFiles().map(_.getName).toSet === Set("batch=0"))
   }
 }
 
