@@ -192,6 +192,7 @@ object ChangeGen {
     * Structured Streaming's fixed-schema-per-run source contract).
     */
   def writeFeed(spark: SparkSession, dir: String, cfg: FeedConfig): Seq[String] = {
+    graft.util.LocalFs.install(spark)
     val raw = generateDf(spark, cfg)
     val phases = if (cfg.phases.nonEmpty) cfg.phases else Seq(Phase(0, Long.MaxValue))
     phases.zipWithIndex.map { case (p, idx) =>

@@ -2,7 +2,7 @@ package graft.merge
 
 import graft.model.{Ops, SchemaEvolution, Schemas}
 import graft.table.{FileEntry, LakeTable, Manifest}
-import graft.util.JobDescription
+import graft.util.{JobDescription, LocalFs}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -233,6 +233,7 @@ object MergeInto {
       checkpointId: String,
       batchId: Long,
       cfg: MergeConfig = MergeConfig()): MergeResult = {
+    LocalFs.install(spark)
     var attempt = 0
     while (true) {
       try return applyOnce(spark, table, batch, checkpointId, batchId, cfg)
@@ -506,7 +507,9 @@ object MergeInto {
     // riding-the-write designs that were measured and rejected).
     val bucketIds = touched.toSeq.sorted
     val nextVersion = current.map(_.version + 1).getOrElse(0L)
-    val staging = table.stagingDir(nextVersion)
+    // this attempt's own directory: a concurrent writer staging at the
+    // same version must never overwrite (delete) files the other commits
+    val staging = table.attemptDir(nextVersion)
     // Write placement, one file per touched bucket on every path:
     // - single-task plans: the input is already one partition.
     // - a trickle delta batch writes ONE task: coalesce(1), not
@@ -521,7 +524,7 @@ object MergeInto {
       else LakeTable.repartitionByBucket(merged, touched.size)
     val toWrite = placed.sortWithinPartitions(col("_bucket"), col("doc_id"))
     JobDescription(spark, s"merge write $ledgerKey") {
-      toWrite.write.partitionBy("_bucket").mode("overwrite").parquet(staging)
+      toWrite.write.partitionBy("_bucket").mode("errorifexists").parquet(staging)
     }
 
     // -- 7. manifest entries for the staged files, with per-file pruning

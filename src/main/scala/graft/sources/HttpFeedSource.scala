@@ -1,7 +1,7 @@
 package graft.sources
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
-import graft.util.IoUtil
+import graft.util.{IoUtil, LocalFs}
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
@@ -235,6 +235,7 @@ object HttpFeedServer {
     */
   def start(spark: SparkSession, feedDir: String, schema: StructType,
       port: Int = 0, flushEvery: Int = 100000): HttpFeedServer = {
+    LocalFs.install(spark)
     new java.io.File(feedDir).mkdirs()
     val server = HttpServer.create(new InetSocketAddress(port), 0)
     val s = new HttpFeedServer(server, spark, feedDir, schema, flushEvery)

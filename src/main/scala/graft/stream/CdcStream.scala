@@ -2,6 +2,7 @@ package graft.stream
 
 import graft.merge.{MergeConfig, MergeInto}
 import graft.table.{LakeTable, Maintenance}
+import graft.util.LocalFs
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -142,6 +143,9 @@ object CdcStream {
       spark: SparkSession,
       cfg: StreamConfig,
       onBatch: (Long, graft.merge.MergeResult) => Unit = (_, _) => ()): StreamingQuery = {
+    // before the query exists: its checkpoint logs resolve their
+    // FileContext from a copy of the session's configuration
+    LocalFs.install(spark)
     val schema = feedSchema(spark, cfg.feedDir)
     val feed0 = spark.readStream
       .schema(schema)

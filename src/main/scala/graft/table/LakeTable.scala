@@ -9,7 +9,7 @@ import org.json4s._
 import org.json4s.jackson.Serialization
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, StandardOpenOption}
+import java.nio.file.Files
 import java.util.UUID
 
 /** One immutable data file registered in a snapshot manifest.
@@ -140,8 +140,8 @@ final class CommitConflictException(msg: String) extends RuntimeException(msg)
   *
   * Layout under `root`:
   * {{{
-  *   meta/v%020d.json     one manifest per snapshot; highest version = current
-  *   data/s<version>/...  data files staged per committing snapshot
+  *   meta/v%020d.json             one manifest per snapshot; highest version = current
+  *   data/s<version>/<attempt>/...  data files staged by one write attempt at a version
   * }}}
   *
   * The CAS is a rename: manifests are written to a temp name then renamed to
@@ -150,11 +150,11 @@ final class CommitConflictException(msg: String) extends RuntimeException(msg)
   * Works identically on a 1000-executor cluster over HDFS/S3A-with-rename
   * semantics and on local[N].
   *
-  * On `file:` the metadata files (manifest files, the head's temp file, the
-  * version hint) are written through java.nio rather than Hadoop `create`,
-  * which forks a `chmod` per file and per `.crc` when libhadoop is absent
-  * — a per-commit cost that would grow with the touched ranges
-  * ([[writeMetaFile]]).
+  * The table resolves its `FileSystem` from `conf`, on which it installs
+  * [[graft.util.LocalFs]]: on `file:` the metadata files and `meta/` are
+  * written through Hadoop `create`/`mkdirs` without the forked `chmod` per
+  * file and per `.crc` that Hadoop's local filesystem pays when libhadoop
+  * is absent.
   *
   * == Manifest list (the metadata scale path) ==
   * The per-version document is a MANIFEST LIST: the head (`v*.json`)
@@ -179,6 +179,8 @@ final class CommitConflictException(msg: String) extends RuntimeException(msg)
 final class LakeTable private (val root: String, val conf: Configuration) {
 
   private implicit val fmts: Formats = DefaultFormats
+
+  graft.util.LocalFs.install(conf)
 
   private val rootPath = new Path(root)
   private val metaDir = new Path(rootPath, "meta")
@@ -400,9 +402,9 @@ final class LakeTable private (val root: String, val conf: Configuration) {
       throw new CommitConflictException(
         s"lost CAS race committing version ${m.version}")
     }
-    // the head is linked under its version name: drop the temp name (a
-    // no-op after the rename fallback)
-    if (isLocal(f)) Files.deleteIfExists(nioPath(tmp))
+    // the head is linked under its version name: drop the temp name and
+    // its `.crc` (a no-op after the rename fallback)
+    if (isLocal(f)) f.delete(tmp, false)
     // best-effort hint refresh AFTER the CAS: concurrent writers race
     // (last write wins), a crash can leave it stale or torn — all safe,
     // currentVersion probes upward and falls back to the listing
@@ -423,27 +425,13 @@ final class LakeTable private (val root: String, val conf: Configuration) {
     java.nio.file.Paths.get(p.toUri.getPath)
 
   /** Write one small metadata file (manifest file, head temp file, version
-    * hint) in a single call. Local tables write through java.nio: Hadoop's
-    * local `create` sets permissions by forking `chmod` when libhadoop is
-    * absent — twice per file, for the file and its `.crc` — measured at
-    * 6-8 ms per file on a 4-core Linux host, against ~0.1 ms for the
-    * java.nio write. Files written this way carry no
-    * `.crc`; Hadoop reads them unverified. Overwriting (the hint only)
-    * first removes the `.crc` an older Hadoop write may have left, which
-    * would otherwise fail the read's checksum and silently send every
-    * `currentVersion` to the listing fallback. Other schemes keep
-    * `fs.create`.
-    */
+    * hint) in a single call. */
   private def writeMetaFile(f: FileSystem, p: Path, bytes: Array[Byte],
-      overwrite: Boolean): Unit =
-    if (!isLocal(f)) {
-      val out = f.create(p, overwrite)
-      try out.write(bytes)
-      finally out.close()
-    } else if (overwrite) {
-      Files.deleteIfExists(nioPath(new Path(p.getParent, s".${p.getName}.crc")))
-      Files.write(nioPath(p), bytes): Unit // create or truncate
-    } else Files.write(nioPath(p), bytes, StandardOpenOption.CREATE_NEW): Unit
+      overwrite: Boolean): Unit = {
+    val out = f.create(p, overwrite)
+    try out.write(bytes)
+    finally out.close()
+  }
 
   /** Already-committed snapshot for this (checkpointId, batchId), if any —
     * the idempotence lookup done at the top of every foreachBatch. A batch
@@ -458,12 +446,22 @@ final class LakeTable private (val root: String, val conf: Configuration) {
 
   // ---- data files ------------------------------------------------------
 
-  /** Directory where a committing snapshot stages its data files. Files are
-    * immutable once the manifest referencing them is committed; a lost CAS
-    * race leaves orphans that a vacuum can collect (never referenced).
+  /** Directory under which every write attempt at `version` stages its
+    * data files ([[attemptDir]]). Vacuum reads the version from its name
+    * (`s<version>`), and so does [[LakeTable.resolveLatest]].
     */
   def stagingDir(version: Long): String =
     new Path(new Path(rootPath, "data"), s"s$version").toString
+
+  /** A new directory, under [[stagingDir]], for one write attempt at
+    * `version`. Every attempt gets its own: two writers that read the same
+    * parent both stage at the same version, and the one that loses the CAS
+    * must not touch the files the winner committed there. Files are
+    * immutable once the manifest referencing them is committed; a lost CAS
+    * race leaves orphans that a vacuum can collect (never referenced).
+    */
+  def attemptDir(version: Long): String =
+    new Path(stagingDir(version), UUID.randomUUID().toString).toString
 
   /** Enumerate the parquet files Spark wrote under `dir/_bucket=N/`, with
     * EXACT per-file (rows, lsn min/max) read from the parquet FOOTERS — driver-side, parallel, no Spark job. The
@@ -704,7 +702,8 @@ object LakeTable {
     */
   def resolveLatest(df: DataFrame): DataFrame = {
     // greedy ".*" prefix anchors the match to the LAST /s<digits>/ path
-    // segment — the staging dir (data/s<version>/_bucket=N/...), never an
+    // segment — the staging dir (data/s<version>/<attempt>/_bucket=N/...;
+    // an attempt is a UUID, which never starts with "s"), never an
     // earlier coincidental segment in the table root (e.g. /home/s123/...),
     // which would flatten _file_ver and make equal-LSN base-vs-delta ties
     // nondeterministic instead of newer-commit-wins

@@ -1,6 +1,6 @@
 package graft.table
 
-import graft.util.JobDescription
+import graft.util.{JobDescription, LocalFs}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -44,10 +44,11 @@ object Maintenance {
   def compact(spark: SparkSession, table: LakeTable,
       tombstoneWatermark: Long = Long.MinValue,
       buckets: Option[Set[Int]] = None): CompactionResult = {
+    LocalFs.install(spark)
     val m = table.currentManifest()
     val stored = LakeTable.storedSchema(m.schema)
     val nextVersion = m.version + 1
-    val staging = table.stagingDir(nextVersion)
+    val staging = table.attemptDir(nextVersion)
 
     // manifest-LIST pruning: a bucket-subset compaction opens only the
     // ranges it touches; the rest carry over by reference
@@ -85,7 +86,7 @@ object Maintenance {
     JobDescription(spark, s"compact v$nextVersion") {
       placed
         .sortWithinPartitions(col("_bucket"), col("doc_id"))
-        .write.partitionBy("_bucket").mode("overwrite").parquet(staging)
+        .write.partitionBy("_bucket").mode("errorifexists").parquet(staging)
     }
 
     // per-file pruning stats straight from the parquet footers — exact,
@@ -141,6 +142,7 @@ object Maintenance {
     */
   def rebucket(spark: SparkSession, table: LakeTable,
       newNumBuckets: Int): CompactionResult = {
+    LocalFs.install(spark)
     val m = table.currentManifest()
     require(newNumBuckets > m.numBuckets,
       s"rebucket only grows the bucket count (${m.numBuckets} -> $newNumBuckets)")
@@ -149,7 +151,7 @@ object Maintenance {
         s"(got $newNumBuckets) — multiples keep the rewrite shuffle-free")
     val stored = LakeTable.storedSchema(m.schema)
     val nextVersion = m.version + 1
-    val staging = table.stagingDir(nextVersion)
+    val staging = table.attemptDir(nextVersion)
     val files = table.filesOf(m)
     val filesBefore = files.size
     if (files.nonEmpty) {
@@ -164,7 +166,7 @@ object Maintenance {
           .withColumn("_bucket",
             pmod(xxhash64(col("doc_id")), lit(newNumBuckets.toLong)).cast("int"))
           .sortWithinPartitions(col("_bucket"), col("doc_id"))
-          .write.partitionBy("_bucket").mode("overwrite").parquet(staging)
+          .write.partitionBy("_bucket").mode("errorifexists").parquet(staging)
       }
     }
     val newFiles = table.enumerateStagedWithStats(staging)

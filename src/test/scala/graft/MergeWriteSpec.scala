@@ -81,7 +81,8 @@ class MergeWriteSpec extends SparkSpec {
     val perBucket = filesPerBucket(table)
     assert(perBucket.keySet === (0 until 32).toSet)
     assert(perBucket.values.forall(_ == 1), s"files per bucket: $perBucket")
-    val lastStaging = new java.io.File(table.stagingDir(table.currentVersion()))
+    // the last batch's one write attempt, under data/s<version>/
+    val Array(lastStaging) = new java.io.File(table.stagingDir(table.currentVersion())).listFiles()
     val staged = lastStaging.listFiles().filter(_.getName.startsWith("_bucket="))
       .map(d => d.listFiles().count(_.getName.endsWith(".parquet")))
     assert(staged.length === 32 && staged.forall(_ == 1), staged.toSeq)

@@ -7,6 +7,25 @@ import graft.table.{LakeTable, Manifest}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
+/** Parks the first evaluation of a UDF until released. Object-level, not
+  * captured: local-mode tasks run in this JVM and see the same latches.
+  */
+object StallOnce {
+  @volatile var entered = new java.util.concurrent.CountDownLatch(1)
+  @volatile var release = new java.util.concurrent.CountDownLatch(1)
+
+  def reset(): Unit = {
+    entered = new java.util.concurrent.CountDownLatch(1)
+    release = new java.util.concurrent.CountDownLatch(1)
+  }
+
+  def pass(key: String): String = {
+    entered.countDown()
+    release.await(120, java.util.concurrent.TimeUnit.SECONDS)
+    key
+  }
+}
+
 /** Failure-path semantics: dead-letter routing of malformed events (the
   * reference's failure relationship) and multi-writer CAS conflicts.
   */
@@ -94,5 +113,44 @@ class RobustnessSpec extends SparkSpec {
         MergeConfig(numBuckets = 4, commitRetries = 2,
           preCommitHook = alwaysCompete))
     }
+  }
+
+  test("a writer that loses the race for a version keeps the winner's files") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    val work = tmpDir("lake-stage-race")
+    val table = LakeTable(s"$work/t")
+    val cfg = MergeConfig(numBuckets = 8)
+    MergeInto.apply(spark, table, batchDf(Seq(ev(1, "seed", Ops.Insert, Array(1)))), "seed", 0, cfg)
+    assert(table.currentVersion() === 0L)
+
+    // writer B reads v0, then parks in its stats job on a 1-row,
+    // 1-partition batch whose key runs through the stalling UDF
+    StallOnce.reset()
+    val stall = org.apache.spark.sql.functions.udf((k: String) => StallOnce.pass(k))
+    val batchB = batchDf(Seq(ev(2, "b", Ops.Insert, Array(2)))).coalesce(1)
+      .withColumn("doc_id", stall(col("doc_id")))
+    val writerB = Future(MergeInto.apply(spark, table, batchB, "writerB", 0, cfg))
+    try {
+      assert(StallOnce.entered.await(120, java.util.concurrent.TimeUnit.SECONDS))
+      // writer A also reads v0 and commits v1 meanwhile
+      MergeInto.apply(spark, table, batchDf(Seq(ev(3, "a1", Ops.Insert, Array(3)),
+        ev(4, "a2", Ops.Insert, Array(4)), ev(5, "a3", Ops.Insert, Array(5)))), "writerA", 0, cfg)
+    } finally StallOnce.release.countDown()
+    assert(table.currentVersion() === 1L)
+    val v1Files = table.filesOf(table.readManifest(1L)).map(_.path)
+      .filterNot(p => table.filesOf(table.readManifest(0L)).exists(_.path == p))
+    assert(v1Files.nonEmpty)
+
+    // B loses the CAS for v1 and retries at v2
+    assert(!Await.result(writerB, 180.seconds).skipped)
+    assert(table.currentVersion() === 2L)
+    val missing = table.filesOf(table.currentManifest())
+      .filterNot(f => new java.io.File(new java.net.URI(f.path).getPath).exists)
+    assert(missing.isEmpty, s"committed files gone: ${missing.map(_.path)}")
+    assert(v1Files.forall(p => new java.io.File(new java.net.URI(p).getPath).exists))
+    assert(table.read(spark).select("doc_id").collect().map(_.getString(0)).toSet ===
+      Set("seed", "b", "a1", "a2", "a3"))
   }
 }
