@@ -234,16 +234,9 @@ object MergeInto {
       batchId: Long,
       cfg: MergeConfig = MergeConfig()): MergeResult = {
     LocalFs.install(spark)
-    var attempt = 0
-    while (true) {
-      try return applyOnce(spark, table, batch, checkpointId, batchId, cfg)
-      catch {
-        case e: graft.table.CommitConflictException =>
-          attempt += 1
-          if (attempt > cfg.commitRetries) throw e
-      }
+    LakeTable.retryConflicts(cfg.commitRetries) {
+      applyOnce(spark, table, batch, checkpointId, batchId, cfg)
     }
-    throw new IllegalStateException("unreachable")
   }
 
   private def applyOnce(
@@ -472,8 +465,7 @@ object MergeInto {
           tg.as("t").join(broadcast(ch).as("c"),
             col("t.doc_id") === col("c.doc_id"), "left_outer"),
           hasTExpr = lit(true))
-        val targetKeys = spark.read.schema(storedOld)
-          .parquet(touchedFiles.map(_.path): _*).select("doc_id")
+        val targetKeys = table.scanFiles(spark, storedOld, touchedFiles).select("doc_id")
         val matchedKeys = targetKeys
           .join(broadcast(deduped.select("doc_id")), Seq("doc_id"), "left_semi")
         val insertPart = insertProject(

@@ -1,9 +1,12 @@
 package graft.table
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SchemaBridge
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.json4s._
 import org.json4s.jackson.Serialization
@@ -18,6 +21,12 @@ import java.util.UUID
   * the Spark-native analog of the reference pushing its filter into the
   * keyed store instead of scanning client-side
   * (reference `PontusIdGenerator.java:68-76,299`).
+  *
+  * The manifest is the table's file listing: `bytes` and `mtime` are the
+  * file's exact length and modification time, taken from the status the
+  * writer's staging listing already returned, so a scan plans from the
+  * entries alone with no listing I/O ([[LakeTable.scanFiles]]). Entries
+  * written before these fields existed read back with -1 in both.
   */
 final case class FileEntry(
     path: String,
@@ -32,7 +41,9 @@ final case class FileEntry(
       * ([[LakeTable.resolveLatest]]) and compaction folds deltas back
       * into one base file per bucket.
       */
-    isDelta: Boolean = false)
+    isDelta: Boolean = false,
+    bytes: Long = -1L,
+    mtime: Long = -1L)
 
 /** One immutable per-bucket-range manifest file referenced from a
   * snapshot's manifest list: `path` is the file's name under `meta/`,
@@ -155,6 +166,11 @@ final class CommitConflictException(msg: String) extends RuntimeException(msg)
   * written through Hadoop `create`/`mkdirs` without the forked `chmod` per
   * file and per `.crc` that Hadoop's local filesystem pays when libhadoop
   * is absent.
+  *
+  * Every scan of table data (reads, time travel, compaction, rebucket, the
+  * merge's target scan) plans from the manifest's [[FileEntry]]s through
+  * [[scanFiles]]: the manifest is the listing, so a scan does no listing
+  * I/O and launches no Spark listing job, however many files it reads.
   *
   * == Manifest list (the metadata scale path) ==
   * The per-version document is a MANIFEST LIST: the head (`v*.json`)
@@ -472,7 +488,9 @@ final class LakeTable private (val root: String, val conf: Configuration) {
     * north rule keeps paying). A footer that lacks `lsn` statistics for a
     * non-empty file (foreign writer) gets UNPRUNABLE bounds
     * (Long.MinValue/Long.MaxValue) — never the empty-file sentinel, which
-    * would let LSN pruning skip live data.
+    * would let LSN pruning skip live data. Each entry also records the
+    * file's length and modification time from the same listing, which is
+    * what lets [[scanFiles]] plan with no I/O.
     */
   def enumerateStagedWithStats(dir: String,
       isDelta: Boolean = false): Seq[FileEntry] = {
@@ -488,13 +506,14 @@ final class LakeTable private (val root: String, val conf: Configuration) {
         val bucket = bdir.getPath.getName.stripPrefix("_bucket=").toInt
         f.listStatus(bdir.getPath).toIndexedSeq
           .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-          .map(s => (s.getPath, bucket))
+          .map(s => (s, bucket))
       }
     Await.result(
-      Future.sequence(listed.map { case (p, bucket) =>
+      Future.sequence(listed.map { case (s, bucket) =>
         Future {
-          val (rows, minL, maxL) = footerStats(p)
-          FileEntry(p.toString, bucket, rows, minL, maxL, isDelta)
+          val (rows, minL, maxL) = footerStats(s.getPath)
+          FileEntry(s.getPath.toString, bucket, rows, minL, maxL, isDelta,
+            s.getLen, s.getModificationTime)
         }
       }), Duration.Inf)
   }
@@ -568,11 +587,7 @@ final class LakeTable private (val root: String, val conf: Configuration) {
   def scanResolved(spark: SparkSession, stored: StructType,
       files: Seq[FileEntry], singlePartition: Boolean = false): DataFrame = {
     def scan(fs: Seq[FileEntry]): DataFrame = {
-      val df =
-        if (fs.isEmpty)
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], stored)
-        else spark.read.schema(stored).parquet(fs.map(_.path): _*)
+      val df = scanFiles(spark, stored, fs)
       if (singlePartition) df.coalesce(1) else df
     }
     val deltaBuckets = files.filter(_.isDelta).map(_.bucket).toSet
@@ -602,21 +617,50 @@ final class LakeTable private (val root: String, val conf: Configuration) {
   }
 
   /** Read the physical table state including tombstone rows. */
-  def readStored(spark: SparkSession, buckets: Option[Set[Int]] = None): DataFrame = {
+  def readStored(spark: SparkSession, buckets: Option[Set[Int]] = None): DataFrame =
     currentManifestOpt() match {
       case None =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          LakeTable.storedSchema(graft.model.Schemas.seqTable))
+        scanFiles(spark, LakeTable.storedSchema(graft.model.Schemas.seqTable), Nil)
       case Some(m) =>
-        val stored = LakeTable.storedSchema(m.schema)
-        val files = filesOf(m, buckets)
-        if (files.isEmpty)
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], stored)
-        else
-          spark.read.schema(stored).parquet(files.map(_.path): _*)
+        scanFiles(spark, LakeTable.storedSchema(m.schema), filesOf(m, buckets))
     }
+
+  /** The one scan of table data: `files` read under `stored`, planned from
+    * their manifest entries with no listing I/O.
+    *
+    * `spark.read.parquet(paths)` lists every path again (one `exists` and
+    * one status each, and past `parallelPartitionDiscovery.threshold`
+    * paths a Spark job with a task per file). Here Spark's own
+    * `InMemoryFileIndex` gets a status cache already filled from the
+    * entries, one status per file keyed by its qualified path, so it finds
+    * every file cached and lists nothing; base paths and partition
+    * inference stay Spark's (a file's base path is its own directory, so
+    * no `_bucket` column appears) and `input_file_name()` names the same
+    * files ([[LakeTable.resolveLatest]] reads their versions from it).
+    * The relation's schema is `stored` made all-nullable, as the reader's
+    * `DataSource` makes it, so rewrites write the same footers.
+    *
+    * A length is never estimated (Parquet seeks the footer from it): an
+    * entry without `bytes` (manifests written before the field) costs one
+    * driver-side `getFileStatus`, which also fails a missing file at
+    * planning time, as the reader's existence check did.
+    */
+  def scanFiles(spark: SparkSession, stored: StructType,
+      files: Seq[FileEntry]): DataFrame = {
+    val schema = SchemaBridge.asNullable(stored)
+    if (files.isEmpty)
+      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    val f = fs
+    val statuses = files.map { e =>
+      val p = f.makeQualified(new Path(e.path))
+      // replication and block size are not used by the parquet scan
+      if (e.bytes >= 0) new FileStatus(e.bytes, false, 0, 1L, e.mtime, p)
+      else f.getFileStatus(p)
+    }
+    val index = new InMemoryFileIndex(spark, statuses.map(_.getPath),
+      Map.empty, Some(schema), new LakeTable.ManifestListing(statuses))
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
+      schema, None, new ParquetFileFormat, Map.empty)(spark))
   }
 
   /** Files of the current snapshot whose LSN range intersects [lo, hi] —
@@ -659,6 +703,25 @@ object LakeTable {
     df.repartition(math.min(touchedBuckets, slots).max(1), col("_bucket"))
   }
 
+  /** Run `attempt`, and run it again after each lost CAS
+    * ([[CommitConflictException]]), at most `retries` more times; the
+    * last conflict surfaces. An attempt reads the manifest itself, so a
+    * retry redoes its work against the winner's snapshot, and the files a
+    * lost attempt staged are orphans for a vacuum.
+    */
+  def retryConflicts[T](retries: Int)(attempt: => T): T = {
+    var lost = 0
+    while (true) {
+      try return attempt
+      catch {
+        case e: CommitConflictException =>
+          lost += 1
+          if (lost > retries) throw e
+      }
+    }
+    throw new IllegalStateException("unreachable")
+  }
+
   /** Bucket ranges per table: fine enough that a 1-bucket commit rewrites
     * ~1/64 of the metadata, coarse enough that a full-spread batch writes
     * at most 64 small manifest files.
@@ -675,6 +738,18 @@ object LakeTable {
     val lo = math.ceil(range.toDouble * numBuckets / nr).toInt
     val hi = math.ceil((range + 1).toDouble * numBuckets / nr).toInt - 1
     (lo, hi)
+  }
+
+  /** The file statuses of one scan, served to Spark's `InMemoryFileIndex`
+    * as its listing cache: each file's path maps to its own status, so the
+    * index never lists. Immutable (table files never change), so a refresh
+    * serves the same files again.
+    */
+  private final class ManifestListing(statuses: Seq[FileStatus]) extends FileStatusCache {
+    private val byPath = statuses.map(s => s.getPath -> Array(s)).toMap
+    override def getLeafFiles(path: Path): Option[Array[FileStatus]] = byPath.get(path)
+    override def putLeafFiles(path: Path, files: Array[FileStatus]): Unit = ()
+    override def invalidateAll(): Unit = ()
   }
 
   /** JVM-wide cache of manifest-file contents. Entries are immutable once

@@ -10,13 +10,21 @@ import java.util.UUID
 /** Table maintenance for long-running CDC ingest: bucket compaction,
   * tombstone garbage collection, and orphan-file vacuum. All are
   * snapshot-in/snapshot-out (never mutate referenced files) and commit
-  * through the same CAS as the merge path.
+  * through the same CAS as the merge path; a compaction or rebucket that
+  * loses its version to a concurrent writer re-reads the manifest and
+  * redoes its rewrite against the winner, as a merge does.
   *
   * At 10^10-event scale these are what keep read amplification bounded: a
   * busy bucket accumulates one file per micro-batch, and every delete
   * leaves a tombstone row that only exists to fence out-of-order stragglers.
   */
 object Maintenance {
+
+  /** Lost CAS races a compaction or rebucket retries against the winner's
+    * snapshot before the conflict surfaces: the merge kernel's default
+    * (`MergeConfig.commitRetries`).
+    */
+  private val CommitRetries = 3
 
   /** Result of a compaction run. */
   final case class CompactionResult(
@@ -45,6 +53,13 @@ object Maintenance {
       tombstoneWatermark: Long = Long.MinValue,
       buckets: Option[Set[Int]] = None): CompactionResult = {
     LocalFs.install(spark)
+    LakeTable.retryConflicts(CommitRetries) {
+      compactOnce(spark, table, tombstoneWatermark, buckets)
+    }
+  }
+
+  private def compactOnce(spark: SparkSession, table: LakeTable,
+      tombstoneWatermark: Long, buckets: Option[Set[Int]]): CompactionResult = {
     val m = table.currentManifest()
     val stored = LakeTable.storedSchema(m.schema)
     val nextVersion = m.version + 1
@@ -143,6 +158,11 @@ object Maintenance {
   def rebucket(spark: SparkSession, table: LakeTable,
       newNumBuckets: Int): CompactionResult = {
     LocalFs.install(spark)
+    LakeTable.retryConflicts(CommitRetries)(rebucketOnce(spark, table, newNumBuckets))
+  }
+
+  private def rebucketOnce(spark: SparkSession, table: LakeTable,
+      newNumBuckets: Int): CompactionResult = {
     val m = table.currentManifest()
     require(newNumBuckets > m.numBuckets,
       s"rebucket only grows the bucket count (${m.numBuckets} -> $newNumBuckets)")

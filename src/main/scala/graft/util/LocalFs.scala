@@ -1,7 +1,7 @@
 package graft.util
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.SparkSession
@@ -11,7 +11,8 @@ import java.nio.file.Files
 import java.nio.file.attribute.{PosixFileAttributeView, PosixFilePermission}
 
 /** The local (`file:`) filesystem the engine writes through: Hadoop's own,
-  * except that setting a file's or directory's mode does not fork.
+  * except that setting a file's or directory's mode does not fork, and
+  * neither does asking whether a plain file is a symlink.
   *
   * Without libhadoop, `RawLocalFileSystem.setPermission` runs the `chmod`
   * command, and Hadoop calls it for every file, `.crc` and directory it
@@ -19,8 +20,10 @@ import java.nio.file.attribute.{PosixFileAttributeView, PosixFilePermission}
   * tree, `_SUCCESS`, the stream's offset, commit and source logs, the
   * table's metadata and an ingress segment. A fork costs ~3.7 ms on a
   * 4-core Linux host; the same mode set through `java.nio` costs a few µs.
-  * [[NioRawLocalFileSystem]] sets the same bits through `java.nio` and
-  * leaves everything else to Hadoop.
+  * [[NioRawLocalFileSystem]] sets the same bits through `java.nio`,
+  * answers Structured Streaming's checkpoint renames without the `readlink`
+  * fork they paid per file and `.crc`, and leaves everything else to
+  * Hadoop.
   *
   * [[install]] points a Hadoop configuration's `file:` scheme at it for
   * both Hadoop APIs: the `FileSystem` API (Spark's writer and committer,
@@ -63,10 +66,20 @@ object LocalFs {
   }
 }
 
-/** `RawLocalFileSystem` whose `setPermission` sets the mode through
-  * `java.nio` instead of forking `chmod`. Only the nine rwx bits go
-  * through `java.nio`; a mode with any other bit (sticky), or a file store
-  * without a POSIX attribute view, takes Hadoop's own path.
+/** `RawLocalFileSystem` that neither forks `chmod` to set a mode nor
+  * `readlink` to look at a path that is not a symlink.
+  *
+  * `setPermission`: only the nine rwx bits go through `java.nio`; a mode
+  * with any other bit (sticky), or a file store without a POSIX attribute
+  * view, takes Hadoop's own path.
+  *
+  * `getFileLinkStatus`: Hadoop runs `readlink` on the path string, for
+  * every call (`FileContext.rename` makes four: source, destination and
+  * both `.crc`s, so each checkpoint log entry of a stream paid them), and
+  * returns `getFileStatus` when the command finds no link. A path that
+  * `java.nio` says is not a symlink (including one that does not exist)
+  * returns that directly; a symlink, dangling or not, takes Hadoop's own
+  * path.
   */
 class NioRawLocalFileSystem extends RawLocalFileSystem {
   override def setPermission(p: Path, permission: FsPermission): Unit = {
@@ -75,6 +88,10 @@ class NioRawLocalFileSystem extends RawLocalFileSystem {
     if ((mode & ~0x1ff) != 0 || view == null) super.setPermission(p, permission)
     else view.setPermissions(NioRawLocalFileSystem.toPosix(mode))
   }
+
+  override def getFileLinkStatus(f: Path): FileStatus =
+    if (Files.isSymbolicLink(pathToFile(f).toPath)) super.getFileLinkStatus(f)
+    else getFileStatus(f)
 }
 
 object NioRawLocalFileSystem {

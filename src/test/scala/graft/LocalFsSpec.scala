@@ -6,7 +6,7 @@ import graft.stream.{CdcStream, StreamConfig}
 import graft.table.LakeTable
 import graft.util.{LocalFs, NioLocalFileSystem, NioLocalFs, NioRawLocalFileSystem}
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileContext, FileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.types._
 
@@ -17,7 +17,8 @@ import java.nio.file.attribute.PosixFilePermissions
 import scala.jdk.CollectionConverters._
 
 /** The engine's local filesystem ([[graft.util.LocalFs]]) sets the modes
-  * Hadoop's own sets, without forking `chmod`, and the engine's entry
+  * Hadoop's own sets, without forking `chmod`, reports the link status
+  * Hadoop's own reports, without forking `readlink`, and the engine's entry
   * points route both Hadoop APIs to it.
   */
 class LocalFsSpec extends SparkSpec {
@@ -28,9 +29,50 @@ class LocalFsSpec extends SparkSpec {
   private def unixMode(p: Path): Int =
     Files.getAttribute(Paths.get(p.toUri.getPath), "unix:mode").asInstanceOf[Int] & 0xfff
 
-  private def localFs(raw: RawLocalFileSystem): RawLocalFileSystem = {
-    raw.initialize(URI.create("file:///"), new Configuration())
-    raw
+  private def localFs[F <: FileSystem](fs: F): F = {
+    fs.initialize(URI.create("file:///"), new Configuration())
+    fs
+  }
+
+  /** A regular file, a directory, a missing path, a symlink to the file
+    * and a dangling symlink under a new directory, each named both with
+    * and without the `file:` scheme.
+    */
+  private def linkCases(): Seq[(String, Path)] = {
+    val dir = Paths.get(tmpDir("localfs-links"))
+    val file = Files.write(dir.resolve("file"), "x".getBytes)
+    Files.createDirectory(dir.resolve("dir"))
+    Files.createSymbolicLink(dir.resolve("link"), file)
+    Files.createSymbolicLink(dir.resolve("dangling"), dir.resolve("gone"))
+    for {
+      name <- Seq("file", "dir", "missing", "link", "dangling")
+      (form, p) <- Seq("unqualified" -> new Path(dir.resolve(name).toString),
+        "qualified" -> new Path(s"file:${dir.resolve(name)}"))
+    } yield s"$form $name" -> p
+  }
+
+  /** What a `getFileLinkStatus` call reports: its status fields, or the
+    * class of what it threw.
+    */
+  private def linkStatus(get: Path => FileStatus, p: Path): Either[String, Seq[Any]] =
+    try {
+      val s = get(p)
+      Right(Seq(s.getPath, s.isFile, s.isDirectory, s.isSymlink,
+        if (s.isSymlink) s.getSymlink else None, s.getLen, s.getModificationTime,
+        s.getPermission, s.getOwner, s.getGroup))
+    } catch { case e: java.io.IOException => Left(e.getClass.getName) }
+
+  /** Asserts `nio` reports what `hadoop` reports for every case. */
+  private def assertLinkParity(hadoop: Path => FileStatus, nio: Path => FileStatus): Unit = {
+    val cases = linkCases()
+    cases.foreach { case (what, p) =>
+      assert(linkStatus(nio, p) === linkStatus(hadoop, p), what)
+    }
+    val byCase = cases.toMap.view.mapValues(linkStatus(hadoop, _)).toMap
+    assert(byCase("qualified file").exists(_(1) == true))
+    assert(byCase("qualified dir").exists(_(2) == true))
+    assert(byCase("qualified missing") === Left(classOf[java.io.FileNotFoundException].getName))
+    assert(byCase("unqualified link").exists(_(3) == true), "a symlink reads as one")
   }
 
   test("files and directories get the modes Hadoop's forked chmod gives them") {
@@ -134,5 +176,25 @@ class LocalFsSpec extends SparkSpec {
       "/lineage/").foreach(part => assert(files.exists(_._1.toString.contains(part)), part))
     assert(files.forall(_._2 == "rw-r--r--"), files.filterNot(_._2 == "rw-r--r--"))
     assert(dirs.forall(_._2 == "rwxr-xr-x"), dirs.filterNot(_._2 == "rwxr-xr-x"))
+  }
+
+  test("getFileLinkStatus through FileSystem reports what Hadoop's reports") {
+    assertLinkParity(localFs(new RawLocalFileSystem).getFileLinkStatus,
+      localFs(new NioRawLocalFileSystem).getFileLinkStatus)
+    assertLinkParity(localFs(new LocalFileSystem).getFileLinkStatus,
+      localFs(new NioLocalFileSystem).getFileLinkStatus)
+  }
+
+  test("getFileLinkStatus through FileContext reports what Hadoop's reports") {
+    def context(afs: Option[String]): FileContext = {
+      val conf = new Configuration()
+      afs.foreach(conf.set("fs.AbstractFileSystem.file.impl", _))
+      FileContext.getFileContext(URI.create("file:///"), conf)
+    }
+    val hadoop = context(None)
+    val nio = context(Some(classOf[NioLocalFs].getName))
+    assert(nio.getDefaultFileSystem.isInstanceOf[NioLocalFs])
+    assert(!hadoop.getDefaultFileSystem.isInstanceOf[NioLocalFs])
+    assertLinkParity(hadoop.getFileLinkStatus, nio.getFileLinkStatus)
   }
 }

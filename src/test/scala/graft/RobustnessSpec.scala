@@ -3,7 +3,12 @@ package graft
 import graft.changegen.{ChangeGen, FeedConfig, Phase, RawEvent}
 import graft.merge.{MergeConfig, MergeInto}
 import graft.model.Ops
-import graft.table.{LakeTable, Manifest}
+import graft.table.{LakeTable, Maintenance, Manifest}
+import graft.util.NioLocalFileSystem
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FSDataOutputStream, Path}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
@@ -23,6 +28,28 @@ object StallOnce {
     entered.countDown()
     release.await(120, java.util.concurrent.TimeUnit.SECONDS)
     key
+  }
+}
+
+/** A one-shot hook that [[HeadRaceFileSystem]] runs just before a table
+  * writes the temp file of a new head, inside that table's commit.
+  */
+object HeadRace {
+  private val hook = new java.util.concurrent.atomic.AtomicReference[() => Unit]()
+  def arm(f: () => Unit): Unit = hook.set(f)
+  def fire(): Unit = Option(hook.getAndSet(null)).foreach(_())
+}
+
+/** The engine's local filesystem, firing [[HeadRace]] when a head's temp
+  * file (`meta/.tmp-*`) is created: after the commit's own existence check,
+  * before its CAS.
+  */
+class HeadRaceFileSystem extends NioLocalFileSystem {
+  override def create(f: Path, permission: FsPermission, overwrite: Boolean,
+      bufferSize: Int, replication: Short, blockSize: Long,
+      progress: Progressable): FSDataOutputStream = {
+    if (f.getName.startsWith(".tmp-")) HeadRace.fire()
+    super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
   }
 }
 
@@ -152,5 +179,59 @@ class RobustnessSpec extends SparkSpec {
     assert(v1Files.forall(p => new java.io.File(new java.net.URI(p).getPath).exists))
     assert(table.read(spark).select("doc_id").collect().map(_.getString(0)).toSet ===
       Set("seed", "b", "a1", "a2", "a3"))
+  }
+
+  /** An 8-bucket table holding two segments, then `maintain` run on a
+    * second handle of it while a merge of the third segment commits from
+    * inside the maintenance commit, so the merge wins the version the
+    * maintenance staged for. Returns the writer's handle, the version the
+    * maintenance read, its result and every event.
+    */
+  private def raceAgainstMerge(name: String)(maintain: LakeTable => Maintenance.CompactionResult)
+      : (LakeTable, Long, Maintenance.CompactionResult, Seq[RawEvent]) = {
+    val feed = FeedConfig(numEvents = 600, numKeys = 200, seed = 23,
+      deleteFraction = 0.1, dupFraction = 0.05, outOfOrderWindow = 40,
+      eventsPerSegment = 200, maxTokens = 6)
+    val segs = ChangeGen.generateLocal(feed).groupBy(_.seg).toSeq.sortBy(_._1).map(_._2)
+    val root = tmpDir(name)
+    val writer = LakeTable(root)
+    val cfg = MergeConfig(numBuckets = 8, deltaAppendThreshold = 1000L)
+    segs.take(2).zipWithIndex.foreach { case (evs, i) =>
+      MergeInto.apply(spark, writer, batchDf(evs), "cp", i, cfg)
+    }
+    val read = writer.currentVersion()
+    val conf = new Configuration()
+    conf.set("fs.file.impl", classOf[HeadRaceFileSystem].getName)
+    conf.setBoolean("fs.file.impl.disable.cache", true)
+    HeadRace.arm(() => MergeInto.apply(spark, writer, batchDf(segs(2)), "cp", 2, cfg): Unit)
+    val result = try maintain(LakeTable(root, conf)) finally HeadRace.arm(null)
+    (writer, read, result, segs.take(3).flatten)
+  }
+
+  test("a compaction that loses its version to a merge redoes it against the merge") {
+    val (table, read, r, events) = raceAgainstMerge("lake-compact-race")(t =>
+      Maintenance.compact(spark, t))
+    // the merge took the version the compaction first staged for ...
+    assert(table.readManifest(read + 1).ledger.contains("cp/2"))
+    assert(table.filesOf(table.readManifest(read + 1)).exists(_.isDelta))
+    // ... and the retry folded the merge's delta files too
+    assert(r.version === read + 2 && table.currentVersion() === read + 2)
+    val files = table.filesOf(table.currentManifest())
+    assert(!files.exists(_.isDelta))
+    assert(files.groupBy(_.bucket).values.forall(_.size == 1))
+    assert(table.currentManifest().ledger.contains("cp/2"))
+    assertOracle(table.read(spark), events)
+  }
+
+  test("a rebucket that loses its version to a merge redoes it against the merge") {
+    val (table, read, r, events) = raceAgainstMerge("lake-rebucket-race")(t =>
+      Maintenance.rebucket(spark, t, 16))
+    assert(table.readManifest(read + 1).ledger.contains("cp/2"))
+    assert(table.readManifest(read + 1).numBuckets === 8)
+    assert(r.version === read + 2)
+    val m = table.currentManifest()
+    assert(m.numBuckets === 16 && m.ledger.contains("cp/2"))
+    assert(!table.filesOf(m).exists(_.isDelta))
+    assertOracle(table.read(spark), events)
   }
 }
