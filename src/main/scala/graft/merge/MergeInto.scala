@@ -1,7 +1,7 @@
 package graft.merge
 
 import graft.model.{Ops, SchemaEvolution, Schemas}
-import graft.table.{FileEntry, LakeTable, Manifest}
+import graft.table.LakeTable
 import graft.util.{JobDescription, LocalFs}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -78,6 +78,20 @@ object ColumnPolicy {
   *                     broadcast build is serial; see BENCH.md). The
   *                     single-task plan (`singleTaskRows`) takes precedence:
   *                     a batch that fits it never broadcasts.
+  * @param lineageDir   where each batch's lineage rows land, exactly-once.
+  *                     When set, the merge also computes the per-status
+  *                     counters (n_insert / n_update / n_delete /
+  *                     n_dedup_dropped) through a post-write `_status`
+  *                     read-back job, overlapped with manifest composition:
+  *                     persisted lineage must be exact. Without it that job
+  *                     does not run (it would scan O(rewritten buckets) rows
+  *                     on the per-batch serial path purely for counters)
+  *                     and `MergeResult.lineage` rows carry -1 in the four
+  *                     counters (explicitly "not computed", never a silent
+  *                     0). The fields the engine itself consumes (per-bucket
+  *                     LSN ranges, batch and snapshot ids; the stream's
+  *                     tombstone-GC watermark reads `max_lsn`) are exact
+  *                     either way, from the driver-side pre-pass stats.
   */
 final case class MergeConfig(
     numBuckets: Int = 32,
@@ -85,7 +99,7 @@ final case class MergeConfig(
     broadcastThreshold: Long = 200000L,
     lineageDir: Option[String] = None,
     deadLetterDir: Option[String] = None,
-    commitRetries: Int = 3,
+    commitRetries: Int = LakeTable.CommitRetries,
     preCommitHook: () => Unit = () => (),
     columnPolicy: Map[String, ColumnPolicy] = Map.empty,
     /** Newest ledger entries kept per checkpoint; older ones fold into the
@@ -127,20 +141,7 @@ final case class MergeConfig(
       * Default = [[graft.table.LakeTable.SingleTaskRows]], the table
       * layer's shared single-task rule.
       */
-    singleTaskRows: Long = graft.table.LakeTable.SingleTaskRows,
-    /** Compute the per-status lineage counters (n_insert / n_update /
-      * n_delete / n_dedup_dropped) via the post-write `_status` read-back
-      * job. IMPLIED by `lineageDir` (persisted lineage must be exact).
-      * Off by default (round 6): the read-back is one extra Spark job on
-      * the per-batch serial path — O(rewritten buckets) rows scanned
-      * purely for observability counters — and the fields the engine
-      * itself consumes (per-bucket LSN ranges, batch/snapshot ids; the
-      * stream's tombstone-GC watermark reads `max_lsn`) come exactly
-      * from the driver-side pre-pass stats either way. When off and no
-      * `lineageDir` is set, `MergeResult.lineage` rows carry -1 in the
-      * four counter fields (explicitly "not computed", never a silent 0).
-      */
-    statusCounts: Boolean = false)
+    singleTaskRows: Long = LakeTable.SingleTaskRows)
 
 /** The MERGE INTO kernel: apply one micro-batch of change events to a
   * [[LakeTable]] with last-writer-wins by (doc_id, lsn), schema evolution,
@@ -301,12 +302,10 @@ object MergeInto {
     // aggregable, <= numBuckets (+1 reject group) result rows. In
     // dead-letter mode the scan runs over the CACHED unfiltered frame with
     // a `_good` flag so the reject count comes out of the same job.
-    val bucketOf: Column => Column =
-      k => pmod(xxhash64(k), lit(numBuckets.toLong)).cast("int")
     val rawStats = JobDescription(spark, s"merge stats $ledgerKey") {
       cachedBatch.getOrElse(batch)
         .groupBy((if (cachedBatch.isDefined) goodPred else lit(true)).as("_good"),
-          bucketOf(col("doc_id")).as("_bucket"))
+          LakeTable.bucketExpr(numBuckets).as("_bucket"))
         .agg(count(lit(1)).as("n_raw"),
           min("lsn").as("minL"), max("lsn").as("maxL"))
         .collect()
@@ -325,10 +324,12 @@ object MergeInto {
     }
     val touched: Set[Int] = batchStats.keySet
 
+    val ledgerEntry = Some(ledgerKey -> cfg.ledgerRetention)
     if (touched.isEmpty) {
       // empty batch: still record the ledger entry (exactly-once bookkeeping)
-      return commitManifest(table, current, evolved, numBuckets,
-        Set.empty, Nil, ledgerKey, ledgerRetention = cfg.ledgerRetention)
+      val m = table.commitNext(current, Set.empty, Nil, evolved.json, numBuckets,
+        ledgerEntry)
+      return MergeResult(m.snapshotId, m.version, Nil, skipped = false)
     }
     // conservative broadcast decision: raw count >= deduped count
     val rawRows = batchStats.valuesIterator.map(_._1).sum
@@ -489,7 +490,7 @@ object MergeInto {
           hasTExpr = coalesce(col("t._has_target"), lit(false)))
       }
 
-    val merged = mergedFlat.withColumn("_bucket", bucketOf(col("doc_id")))
+    val merged = mergedFlat.withColumn("_bucket", LakeTable.bucketExpr(numBuckets))
 
     // -- 6. write the merged buckets, KEEPING the _status column in the
     // staged files. Table reads are schema-first (explicit StructType), so
@@ -499,9 +500,6 @@ object MergeInto {
     // riding-the-write designs that were measured and rejected).
     val bucketIds = touched.toSeq.sorted
     val nextVersion = current.map(_.version + 1).getOrElse(0L)
-    // this attempt's own directory: a concurrent writer staging at the
-    // same version must never overwrite (delete) files the other commits
-    val staging = table.attemptDir(nextVersion)
     // Write placement, one file per touched bucket on every path:
     // - single-task plans: the input is already one partition.
     // - a trickle delta batch writes ONE task: coalesce(1), not
@@ -514,17 +512,10 @@ object MergeInto {
       if (deltaSingleTask || mergeSingleTask) merged
       else if (isDeltaAppend) merged.coalesce(1)
       else LakeTable.repartitionByBucket(merged, touched.size)
-    val toWrite = placed.sortWithinPartitions(col("_bucket"), col("doc_id"))
-    JobDescription(spark, s"merge write $ledgerKey") {
-      toWrite.write.partitionBy("_bucket").mode("errorifexists").parquet(staging)
-    }
-
-    // -- 7. manifest entries for the staged files, with per-file pruning
-    // stats (rows, lsn min/max) harvested from the parquet FOOTERS —
-    // exact, driver-side, no Spark job. (Rounds 1-4 ran a read-back
-    // aggregation job here to get per-bucket stats; the footers already
-    // hold them per file, finer-grained and free.)
-    val newFiles = table.enumerateStagedWithStats(staging, isDelta = isDeltaAppend)
+    // -- 7. each staged file's manifest entry carries exact pruning stats
+    // (rows, lsn min/max) from its parquet footer, read with no Spark job
+    val (staging, newFiles) = table.stage(placed, nextVersion,
+      s"merge write $ledgerKey", isDelta = isDeltaAppend)
 
     // -- 8. per-bucket STATUS counts (insert/update/delete/noop/stale)
     // for the lineage metrics — the one thing footers cannot provide.
@@ -544,12 +535,10 @@ object MergeInto {
     // A/B in BENCH.md).
     val readbackSchema = StructType(Seq(
       StructField("_status", StringType), StructField("_bucket", IntegerType)))
-    // round 6: the read-back runs ONLY when a consumer needs the status
-    // counters (lineageDir persistence or an explicit statusCounts opt-in)
-    // — for every other caller it was a pure-observability Spark job on
-    // the per-batch serial path (guide §1.2: don't compute things you
-    // throw away)
-    val wantCounts = cfg.statusCounts || cfg.lineageDir.isDefined
+    // round 6: the read-back runs ONLY when lineageDir persists the
+    // counters — for every other caller it was a pure-observability Spark
+    // job on the per-batch serial path
+    val wantCounts = cfg.lineageDir.isDefined
     val statF: Option[scala.concurrent.Future[Map[Int, Array[Long]]]] =
       if (!wantCounts) None
       else Some {
@@ -614,13 +603,16 @@ object MergeInto {
     }
 
     cfg.preCommitHook()
-    // delta append REMOVES nothing: touched = empty keeps every parent
-    // file and composeManifests appends the delta entries to their ranges
-    try
-      commitManifest(table, current, evolved, numBuckets,
-        if (isDeltaAppend) Set.empty else touched, newFiles,
-        ledgerKey, finishLineage, cfg.ledgerRetention, snapshotId, nextVersion)
-    catch {
+    // forced by the commit after manifest composition, just before the CAS
+    lazy val lineage = finishLineage()
+    // delta append REMOVES nothing: no replaced bucket keeps every parent
+    // file and the delta entries join their ranges
+    try {
+      val m = table.commitNext(current, if (isDeltaAppend) Set.empty else touched,
+        newFiles, evolved.json, numBuckets, ledgerEntry, snapshotId,
+        beforeCas = () => lineage: Unit)
+      MergeResult(snapshotId, m.version, lineage, skipped = false)
+    } catch {
       case commitFailure: Throwable =>
         // the commit path can throw BEFORE finishLineage joins the async
         // status read-back (e.g. a manifest-compose error or a lost CAS):
@@ -634,50 +626,5 @@ object MergeInto {
         throw commitFailure
     }
     } finally cachedBatch.foreach(_.unpersist(false))
-  }
-
-  private def commitManifest(
-      table: LakeTable,
-      current: Option[Manifest],
-      schema: StructType,
-      numBuckets: Int,
-      touched: Set[Int],
-      newFiles: Seq[FileEntry],
-      ledgerKey: String,
-      /** Finalizes the batch's lineage (awaits the async status read-back
-        * and lands the lineage parquet). Called AFTER manifest composition
-        * and immediately BEFORE the CAS — the join point for work
-        * overlapped with composition that must still precede the commit.
-        */
-      finishLineage: () => Seq[graft.model.LineageRow] = () => Nil,
-      ledgerRetention: Int = 1024,
-      snapshotId: String = UUID.randomUUID().toString,
-      versionOverride: Long = -1L): MergeResult = {
-    val version =
-      if (versionOverride >= 0) versionOverride
-      else current.map(_.version + 1).getOrElse(0L)
-    val rawLedger =
-      current.map(_.ledger).getOrElse(Map.empty) + (ledgerKey -> snapshotId)
-    val (ledger, floor) = Manifest.compactLedger(rawLedger,
-      current.map(_.floorBatch).getOrElse(Map.empty), ledgerRetention.max(1))
-    // O(touched ranges + 1) metadata write: untouched ranges carry over
-    // by reference; a no-change commit (empty batch) reuses the parent's
-    // whole manifest list
-    val manifests =
-      if (touched.isEmpty && newFiles.isEmpty && current.exists(_.manifests.nonEmpty))
-        current.get.manifests
-      else table.composeManifests(current, touched, newFiles, numBuckets)
-    val m = Manifest(
-      version = version,
-      snapshotId = snapshotId,
-      parentSnapshotId = current.map(_.snapshotId),
-      schemaJson = schema.json,
-      numBuckets = numBuckets,
-      ledger = ledger,
-      floorBatch = floor,
-      manifests = manifests)
-    val lineage = finishLineage()
-    table.commit(m)
-    MergeResult(snapshotId, version, lineage, skipped = false)
   }
 }

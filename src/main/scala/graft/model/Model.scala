@@ -46,11 +46,11 @@ final case class SeqRow(
   * (`PontusTinkerPopClientRecord.java:163-166`).
   *
   * The four status counters (n_insert/n_update/n_delete/n_dedup_dropped)
-  * are exact when the merge ran with `lineageDir` set or
-  * `MergeConfig.statusCounts = true`, and -1 ("not computed") otherwise —
-  * computing them costs a post-write read-back job on the per-batch
-  * serial path, so they are opt-in. The LSN range fields are always
-  * exact (driver-side pre-pass stats).
+  * are exact when the merge ran with `MergeConfig.lineageDir` set, and -1
+  * ("not computed") otherwise — computing them costs a post-write
+  * read-back job on the per-batch serial path, so only persisted lineage
+  * pays for it. The LSN range fields are always exact (driver-side
+  * pre-pass stats).
   */
 final case class LineageRow(
     batch_id: Long,

@@ -1,5 +1,6 @@
 package graft.table
 
+import graft.util.JobDescription
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -155,11 +156,11 @@ final class CommitConflictException(msg: String) extends RuntimeException(msg)
   *   data/s<version>/<attempt>/...  data files staged by one write attempt at a version
   * }}}
   *
-  * The CAS is a rename: manifests are written to a temp name then renamed to
-  * `v%020d.json`; Hadoop `FileSystem.rename` fails when the destination
-  * exists (local FS and HDFS), so exactly one writer wins each version.
-  * Works identically on a 1000-executor cluster over HDFS/S3A-with-rename
-  * semantics and on local[N].
+  * The CAS publishes a head written under a temp name as `v%020d.json` only
+  * if no head holds that version, so exactly one writer wins each version
+  * ([[commit]]): on `file:` by a hard link, since link(2) fails when the
+  * destination exists where POSIX rename(2) would replace it; on HDFS and
+  * other stores by Hadoop's rename, which fails onto an existing file.
   *
   * The table resolves its `FileSystem` from `conf`, on which it installs
   * [[graft.util.LocalFs]]: on `file:` the metadata files and `meta/` are
@@ -199,13 +200,22 @@ final class LakeTable private (val root: String, val conf: Configuration) {
   graft.util.LocalFs.install(conf)
 
   private val rootPath = new Path(root)
-  private val metaDir = new Path(rootPath, "meta")
-  private def fs: FileSystem = rootPath.getFileSystem(conf)
+  private[table] val metaDir = new Path(rootPath, "meta")
+  private val dataDir = new Path(rootPath, "data")
+  private[table] def fs: FileSystem = rootPath.getFileSystem(conf)
 
   private def manifestPath(version: Long): Path =
     new Path(metaDir, f"v$version%020d.json")
 
   private def hintPath: Path = new Path(metaDir, "version-hint.text")
+
+  /** The heads in `meta/` (`v<version>.json`) and their versions, by listing. */
+  private[table] def listedHeads(): Seq[(Long, Path)] =
+    LakeTable.versionsIn(fs, metaDir, "v", ".json")
+
+  /** The staging directories `data/s<version>` and their versions, by listing. */
+  private[table] def listedStagingDirs(): Seq[(Long, Path)] =
+    LakeTable.versionsIn(fs, dataDir, "s", "")
 
   // ---- snapshot log ----------------------------------------------------
 
@@ -245,14 +255,7 @@ final class LakeTable private (val root: String, val conf: Configuration) {
   }
 
   /** Authoritative fallback: list `meta/` for the highest head. */
-  private def listedVersion(): Long = {
-    val f = fs
-    if (!f.exists(metaDir)) return -1L
-    val vs = f.listStatus(metaDir).iterator.map(_.getPath.getName)
-      .filter(n => n.startsWith("v") && n.endsWith(".json"))
-      .map(n => n.stripPrefix("v").stripSuffix(".json").toLong)
-    if (vs.isEmpty) -1L else vs.max
-  }
+  private def listedVersion(): Long = listedHeads().map(_._1).maxOption.getOrElse(-1L)
 
   def currentManifest(): Manifest = {
     val v = currentVersion()
@@ -429,6 +432,56 @@ final class LakeTable private (val root: String, val conf: Configuration) {
     catch { case _: Exception => () }
   }
 
+  /** Commit the snapshot after `parent` (version 0 without one): the one
+    * snapshot-write path of merges, compactions and rebuckets.
+    *
+    *  - `files` replace every file of the `replaced` buckets, and the
+    *    parent's other buckets carry over by reference
+    *    ([[composeManifests]]). Under a `numBuckets` other than the
+    *    parent's, bucket ids and the range layout change: nothing carries
+    *    over and `files` are the whole table.
+    *  - The parent's ledger and batch floor always carry forward. Once
+    *    retention has folded old batches into `floorBatch`, the floor is
+    *    the only record that they committed; a snapshot without it would
+    *    let a replayed pre-floor batch re-apply, and after a compaction
+    *    that GC'd its tombstones, resurrect deleted keys.
+    *    `ledgerEntry = Some(key -> retention)` also records batch `key`
+    *    ("checkpointId/batchId") at `snapshotId` and folds the ledger to
+    *    `retention` entries per checkpoint ([[Manifest.compactLedger]]).
+    *  - `beforeCas` runs after the manifest files are written and just
+    *    before the CAS ([[commit]]), for work that must land before the
+    *    snapshot is visible (the merge's lineage).
+    *
+    * A lost CAS throws [[CommitConflictException]]; the caller redoes its
+    * whole attempt ([[LakeTable.retryConflicts]]).
+    */
+  def commitNext(parent: Option[Manifest], replaced: Set[Int],
+      files: Seq[FileEntry], schemaJson: String, numBuckets: Int,
+      ledgerEntry: Option[(String, Int)] = None,
+      snapshotId: String = UUID.randomUUID().toString,
+      beforeCas: () => Unit = () => ()): Manifest = {
+    val parentLedger = parent.map(_.ledger).getOrElse(Map.empty[String, String])
+    val parentFloor = parent.map(_.floorBatch).getOrElse(Map.empty[String, Long])
+    val (ledger, floor) = ledgerEntry match {
+      case Some((key, retention)) => Manifest.compactLedger(
+        parentLedger + (key -> snapshotId), parentFloor, retention.max(1))
+      case None => (parentLedger, parentFloor)
+    }
+    val m = Manifest(
+      version = parent.map(_.version + 1).getOrElse(0L),
+      snapshotId = snapshotId,
+      parentSnapshotId = parent.map(_.snapshotId),
+      schemaJson = schemaJson,
+      numBuckets = numBuckets,
+      ledger = ledger,
+      floorBatch = floor,
+      manifests = composeManifests(parent.filter(_.numBuckets == numBuckets),
+        replaced, files, numBuckets))
+    beforeCas()
+    commit(m)
+    m
+  }
+
   /** Is `f` the local filesystem? Decided by the RESOLVED FileSystem's
     * scheme, not the (possibly scheme-less) Path: a bare /warehouse/t path
     * on a cluster whose fs.defaultFS is HDFS must stay on Hadoop calls —
@@ -466,8 +519,7 @@ final class LakeTable private (val root: String, val conf: Configuration) {
     * data files ([[attemptDir]]). Vacuum reads the version from its name
     * (`s<version>`), and so does [[LakeTable.resolveLatest]].
     */
-  def stagingDir(version: Long): String =
-    new Path(new Path(rootPath, "data"), s"s$version").toString
+  def stagingDir(version: Long): String = new Path(dataDir, s"s$version").toString
 
   /** A new directory, under [[stagingDir]], for one write attempt at
     * `version`. Every attempt gets its own: two writers that read the same
@@ -476,8 +528,27 @@ final class LakeTable private (val root: String, val conf: Configuration) {
     * immutable once the manifest referencing them is committed; a lost CAS
     * race leaves orphans that a vacuum can collect (never referenced).
     */
-  def attemptDir(version: Long): String =
+  private def attemptDir(version: Long): String =
     new Path(stagingDir(version), UUID.randomUUID().toString).toString
+
+  /** Stage one write attempt at `version`, the one data-write path of
+    * merges, compactions and rebuckets: `placed` carries `_bucket` and is
+    * already partitioned into the caller's write tasks; each task is
+    * sorted by (`_bucket`, `doc_id`) and written partitioned by `_bucket`
+    * into a fresh [[attemptDir]], under the job description `step`. A task
+    * writes its buckets one after another, so a bucket placed in one task
+    * gets exactly one file. Returns the attempt's directory and its files
+    * with footer stats ([[enumerateStagedWithStats]]) for [[commitNext]].
+    */
+  def stage(placed: DataFrame, version: Long, step: String,
+      isDelta: Boolean = false): (String, Seq[FileEntry]) = {
+    val dir = attemptDir(version)
+    JobDescription(placed.sparkSession, step) {
+      placed.sortWithinPartitions(col("_bucket"), col("doc_id"))
+        .write.partitionBy("_bucket").mode("errorifexists").parquet(dir)
+    }
+    (dir, enumerateStagedWithStats(dir, isDelta))
+  }
 
   /** Enumerate the parquet files Spark wrote under `dir/_bucket=N/`, with
     * EXACT per-file (rows, lsn min/max) read from the parquet FOOTERS — driver-side, parallel, no Spark job. The
@@ -492,8 +563,8 @@ final class LakeTable private (val root: String, val conf: Configuration) {
     * file's length and modification time from the same listing, which is
     * what lets [[scanFiles]] plan with no I/O.
     */
-  def enumerateStagedWithStats(dir: String,
-      isDelta: Boolean = false): Seq[FileEntry] = {
+  private def enumerateStagedWithStats(dir: String,
+      isDelta: Boolean): Seq[FileEntry] = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
@@ -703,6 +774,12 @@ object LakeTable {
     df.repartition(math.min(touchedBuckets, slots).max(1), col("_bucket"))
   }
 
+  /** Lost CAS races a merge, compaction or rebucket retries against the
+    * winner's snapshot before the conflict surfaces (the default of
+    * `MergeConfig.commitRetries`).
+    */
+  val CommitRetries: Int = 3
+
   /** Run `attempt`, and run it again after each lost CAS
     * ([[CommitConflictException]]), at most `retries` more times; the
     * last conflict surfaces. An attempt reads the manifest itself, so a
@@ -804,11 +881,26 @@ object LakeTable {
       org.apache.spark.sql.types.StructField(TOMBSTONE,
         org.apache.spark.sql.types.BooleanType, nullable = false))
 
+  /** Each entry of `dir` named `<prefix><digits><suffix>`, with the number
+    * its name carries; nothing when `dir` does not exist.
+    */
+  private def versionsIn(fs: FileSystem, dir: Path, prefix: String,
+      suffix: String): Seq[(Long, Path)] =
+    if (!fs.exists(dir)) Nil
+    else fs.listStatus(dir).toIndexedSeq.map(_.getPath).flatMap { p =>
+      val n = p.getName
+      val digits = n.stripPrefix(prefix).stripSuffix(suffix)
+      if (n.startsWith(prefix) && n.endsWith(suffix) && digits.nonEmpty &&
+          digits.forall(_.isDigit)) Some(digits.toLong -> p)
+      else None
+    }
+
   def apply(root: String, conf: Configuration = new Configuration()): LakeTable =
     new LakeTable(root, conf)
 
-  /** Bucket assignment expression: stable hash-partitioning of the merge key.
-    * xxhash64 is deterministic across Spark versions/executors.
+  /** The bucket of a row, the one bucket function of the engine: stable
+    * hash-partitioning of the merge key. xxhash64 is deterministic across
+    * Spark versions and executors.
     */
   def bucketExpr(numBuckets: Int): org.apache.spark.sql.Column =
     pmod(xxhash64(col("doc_id")), lit(numBuckets.toLong)).cast("int")

@@ -1,11 +1,9 @@
 package graft.table
 
-import graft.util.{JobDescription, LocalFs}
+import graft.util.LocalFs
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-
-import java.util.UUID
 
 /** Table maintenance for long-running CDC ingest: bucket compaction,
   * tombstone garbage collection, and orphan-file vacuum. All are
@@ -19,12 +17,6 @@ import java.util.UUID
   * leaves a tombstone row that only exists to fence out-of-order stragglers.
   */
 object Maintenance {
-
-  /** Lost CAS races a compaction or rebucket retries against the winner's
-    * snapshot before the conflict surfaces: the merge kernel's default
-    * (`MergeConfig.commitRetries`).
-    */
-  private val CommitRetries = 3
 
   /** Result of a compaction run. */
   final case class CompactionResult(
@@ -53,7 +45,7 @@ object Maintenance {
       tombstoneWatermark: Long = Long.MinValue,
       buckets: Option[Set[Int]] = None): CompactionResult = {
     LocalFs.install(spark)
-    LakeTable.retryConflicts(CommitRetries) {
+    LakeTable.retryConflicts(LakeTable.CommitRetries) {
       compactOnce(spark, table, tombstoneWatermark, buckets)
     }
   }
@@ -63,7 +55,6 @@ object Maintenance {
     val m = table.currentManifest()
     val stored = LakeTable.storedSchema(m.schema)
     val nextVersion = m.version + 1
-    val staging = table.attemptDir(nextVersion)
 
     // manifest-LIST pruning: a bucket-subset compaction opens only the
     // ranges it touches; the rest carry over by reference
@@ -92,42 +83,16 @@ object Maintenance {
     val singleTask = touched.map(_.rows).sum <= LakeTable.SingleTaskRows
     val df = table.scanResolved(spark, stored, touched, singlePartition = singleTask)
       .filter(!col(LakeTable.TOMBSTONE) || col("lsn") > tombstoneWatermark)
-      .withColumn("_bucket",
-        pmod(xxhash64(col("doc_id")), lit(m.numBuckets.toLong)).cast("int"))
+      .withColumn("_bucket", LakeTable.bucketExpr(m.numBuckets))
 
     val placed =
       if (singleTask) df
       else LakeTable.repartitionByBucket(df, touchedBuckets.size)
-    JobDescription(spark, s"compact v$nextVersion") {
-      placed
-        .sortWithinPartitions(col("_bucket"), col("doc_id"))
-        .write.partitionBy("_bucket").mode("errorifexists").parquet(staging)
-    }
-
-    // per-file pruning stats straight from the parquet footers — exact,
-    // driver-side; replaces a second full read of the compacted output
-    // (O(compacted data) per maintenance cycle, purely for stats)
-    val newFiles = table.enumerateStagedWithStats(staging)
-
-    val snapshotId = UUID.randomUUID().toString
-    val manifests =
-      table.composeManifests(Some(m), touchedBuckets, newFiles, m.numBuckets)
-    table.commit(Manifest(
-      version = nextVersion,
-      snapshotId = snapshotId,
-      parentSnapshotId = Some(m.snapshotId),
-      schemaJson = m.schemaJson,
-      numBuckets = m.numBuckets,
-      // carry the ledger floor: after retention has folded old batches into
-      // floorBatch, the floor is the ONLY record that those batches
-      // committed. Dropping it here would let a replayed pre-floor batch
-      // re-apply against a table whose tombstones this compaction just
-      // GC'd — resurrecting deleted keys.
-      ledger = m.ledger,
-      floorBatch = m.floorBatch,
-      manifests = manifests))
-    CompactionResult(snapshotId, nextVersion, filesBefore,
-      manifests.map(_.nFiles).sum, tombstoneWatermark > Long.MinValue)
+    val (_, newFiles) = table.stage(placed, nextVersion, s"compact v$nextVersion")
+    val next = table.commitNext(Some(m), touchedBuckets, newFiles,
+      m.schemaJson, m.numBuckets)
+    CompactionResult(next.snapshotId, next.version, filesBefore,
+      next.manifests.map(_.nFiles).sum, tombstoneWatermark > Long.MinValue)
   }
 
   /** Scale the table's bucket count in place: rewrite the data files under
@@ -158,7 +123,7 @@ object Maintenance {
   def rebucket(spark: SparkSession, table: LakeTable,
       newNumBuckets: Int): CompactionResult = {
     LocalFs.install(spark)
-    LakeTable.retryConflicts(CommitRetries)(rebucketOnce(spark, table, newNumBuckets))
+    LakeTable.retryConflicts(LakeTable.CommitRetries)(rebucketOnce(spark, table, newNumBuckets))
   }
 
   private def rebucketOnce(spark: SparkSession, table: LakeTable,
@@ -171,40 +136,24 @@ object Maintenance {
         s"(got $newNumBuckets) — multiples keep the rewrite shuffle-free")
     val stored = LakeTable.storedSchema(m.schema)
     val nextVersion = m.version + 1
-    val staging = table.attemptDir(nextVersion)
     val files = table.filesOf(m)
-    val filesBefore = files.size
-    if (files.nonEmpty) {
-      // coalesce (narrow — the plan stays exchange-free, RebucketSpec's
-      // invariant) to one task when the manifest stats say the whole
-      // table fits it: a small table's rewrite is otherwise fanned over
-      // one task per input file, each paying parquet-writer setup for up
-      // to k output files
-      val singleTask = files.map(_.rows).sum <= LakeTable.SingleTaskRows
-      JobDescription(spark, s"rebucket v$nextVersion") {
+    // coalesce (narrow — the plan stays exchange-free, RebucketSpec's
+    // invariant) to one task when the manifest stats say the whole table
+    // fits it: a small table's rewrite is otherwise fanned over one task
+    // per input file, each paying parquet-writer setup for up to k output
+    // files
+    val singleTask = files.map(_.rows).sum <= LakeTable.SingleTaskRows
+    val newFiles =
+      if (files.isEmpty) Nil
+      else table.stage(
         table.scanResolved(spark, stored, files, singlePartition = singleTask)
-          .withColumn("_bucket",
-            pmod(xxhash64(col("doc_id")), lit(newNumBuckets.toLong)).cast("int"))
-          .sortWithinPartitions(col("_bucket"), col("doc_id"))
-          .write.partitionBy("_bucket").mode("errorifexists").parquet(staging)
-      }
-    }
-    val newFiles = table.enumerateStagedWithStats(staging)
-    val snapshotId = UUID.randomUUID().toString
-    // every range is rewritten (bucket ids — and the range layout itself —
-    // change), so compose from scratch under the new count
-    val manifests = table.composeManifests(None, Set.empty, newFiles, newNumBuckets)
-    table.commit(Manifest(
-      version = nextVersion,
-      snapshotId = snapshotId,
-      parentSnapshotId = Some(m.snapshotId),
-      schemaJson = m.schemaJson,
-      numBuckets = newNumBuckets,
-      ledger = m.ledger,
-      floorBatch = m.floorBatch,
-      manifests = manifests))
-    CompactionResult(snapshotId, nextVersion, filesBefore,
-      manifests.map(_.nFiles).sum, tombstonesDropped = false)
+          .withColumn("_bucket", LakeTable.bucketExpr(newNumBuckets)),
+        nextVersion, s"rebucket v$nextVersion")._2
+    // under the new count every bucket is replaced
+    val next = table.commitNext(Some(m), Set.empty, newFiles, m.schemaJson,
+      newNumBuckets)
+    CompactionResult(next.snapshotId, next.version, files.size,
+      next.manifests.map(_.nFiles).sum, tombstonesDropped = false)
   }
 
   /** The `n` buckets that most need compaction: highest file count first
@@ -239,19 +188,10 @@ object Maintenance {
     */
   def expireSnapshots(table: LakeTable, retainFromVersion: Long): Seq[String] = {
     val removed = vacuum(table, retainFromVersion)
-    val root = new Path(table.root)
-    val fs = root.getFileSystem(table.conf)
-    val metaDir = new Path(root, "meta")
-    val heads =
-      if (!fs.exists(metaDir)) Nil
-      else fs.listStatus(metaDir).toIndexedSeq.map(_.getPath)
-        .filter { p =>
-          val digits = p.getName.stripPrefix("v").stripSuffix(".json")
-          p.getName.startsWith("v") && p.getName.endsWith(".json") &&
-            digits.nonEmpty && digits.forall(_.isDigit) &&
-            digits.toLong < retainFromVersion.max(0)
-        }
-        .filter(fs.delete(_, false)).map(_.toString)
+    val fs = table.fs
+    val heads = table.listedHeads().collect {
+      case (v, p) if v < retainFromVersion.max(0) && fs.delete(p, false) => p.toString
+    }
     removed ++ heads
   }
 
@@ -268,18 +208,21 @@ object Maintenance {
     */
   def vacuum(table: LakeTable, retainFromVersion: Long,
       orphanManifestAgeMs: Long = Long.MaxValue): Seq[String] = {
-    val conf = table.conf
-    val root = new Path(table.root)
-    val fs = root.getFileSystem(conf)
+    val fs = table.fs
     val current = table.currentVersion()
     if (current < 0) return Nil
     val retainFrom = retainFromVersion.max(0)
-    val live: Set[String] =
-      (retainFrom to current).flatMap { v =>
-        try table.filesOf(table.readManifest(v)).map(f =>
-          Path.getPathWithoutSchemeAndAuthority(new Path(f.path)).toString)
-        catch { case _: java.io.FileNotFoundException => Nil }
-      }.toSet
+    def heads(vs: Iterable[Long]): Seq[Manifest] = vs.flatMap { v =>
+      try Some(table.readManifest(v))
+      catch { case _: java.io.FileNotFoundException => None }
+    }.toSeq
+    // each retained head is read once, for its data files and its
+    // manifest-file refs
+    val retained = heads(retainFrom to current)
+    val live: Set[String] = retained.flatMap { m =>
+      try table.filesOf(m)
+      catch { case _: java.io.FileNotFoundException => Nil }
+    }.map(f => Path.getPathWithoutSchemeAndAuthority(new Path(f.path)).toString).toSet
     // manifest-file GC: m-*.json referenced ONLY by heads below the
     // horizon are superseded metadata. Files referenced by NO head at all
     // are left alone UNLESS older than `orphanManifestAgeMs` — a young
@@ -288,14 +231,11 @@ object Maintenance {
     // orphan sweep uses; the data sweep gets it from the s<v> <= current
     // rule). Without the age sweep, manifests orphaned by LOST CAS races
     // would leak forever — no committed-version rule ever covers them.
-    def refsOf(vs: Iterable[Long]): Set[String] = vs.flatMap { v =>
-      try table.readManifest(v).manifests.map(_.path)
-      catch { case _: java.io.FileNotFoundException => Nil }
-    }.toSet
-    val liveRefs = refsOf(retainFrom to current)
-    val belowHorizon = refsOf(0L until retainFrom)
+    def refsOf(ms: Seq[Manifest]): Set[String] = ms.flatMap(_.manifests.map(_.path)).toSet
+    val liveRefs = refsOf(retained)
+    val belowHorizon = refsOf(heads(0L until retainFrom))
     val deadRefs = belowHorizon -- liveRefs
-    val metaDir = new Path(root, "meta")
+    val metaDir = table.metaDir
     // referenced-anywhere set for the orphan sweep — reuse the two read
     // passes above (re-reading the expired heads would double the
     // O(expired-history) metadata I/O of every vacuum)
@@ -312,19 +252,14 @@ object Maintenance {
     val deletedManifests = (deadRefs ++ agedOrphans).toSeq.sorted.filter { name =>
       fs.delete(new Path(metaDir, name), false)
     }.map(name => new Path(metaDir, name).toString)
-    val dataDir = new Path(root, "data")
-    if (!fs.exists(dataDir)) return deletedManifests
     // only sweep staging dirs of committed versions: s<v> with v <= current
-    val committedStaging = fs.listStatus(dataDir).toIndexedSeq
-      .filter(_.isDirectory)
-      .filter { d =>
-        val n = d.getPath.getName
-        n.startsWith("s") && n.drop(1).forall(_.isDigit) && n.drop(1).toLong <= current
-      }
+    val committedStaging = table.listedStagingDirs().collect {
+      case (v, dir) if v <= current => dir
+    }
     val deleted = Seq.newBuilder[String]
     deleted ++= deletedManifests
     committedStaging.foreach { sd =>
-      val it = fs.listFiles(sd.getPath, true)
+      val it = fs.listFiles(sd, true)
       while (it.hasNext) {
         val st = it.next()
         if (st.isFile && st.getPath.getName.endsWith(".parquet")) {

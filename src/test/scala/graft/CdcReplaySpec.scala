@@ -120,7 +120,7 @@ class CdcReplaySpec extends SparkSpec {
     val segs = events.groupBy(_.seg).toSeq.sortBy(_._1)
     val lineage = segs.flatMap { case (seg, evs) =>
       MergeInto.apply(spark, table, batchDf(evs), "cp", seg,
-        MergeConfig(numBuckets = 4, statusCounts = true)).lineage
+        MergeConfig(numBuckets = 4, lineageDir = Some(tmpDir("lake-lin-rows")))).lineage
     }
     assert(lineage.nonEmpty)
     // applied events (insert+update+delete) + dedupe drops == raw batch rows

@@ -40,10 +40,10 @@ class JobDescriptionSpec extends SparkSpec {
       eventsPerSegment = 1500)
     val events = ChangeGen.generateLocal(feed)
     val table = LakeTable(tmpDir("jobdesc"))
-    // shuffle full-outer path, with the status read-back and dead-letter
-    // write switched on so their jobs run too
+    // shuffle full-outer path, with the status read-back (lineageDir) and
+    // dead-letter write switched on so their jobs run too
     val cfg = MergeConfig(numBuckets = 8, singleTaskRows = 0L, broadcastThreshold = 0L,
-      statusCounts = true, deadLetterDir = Some(tmpDir("jobdesc-dl")))
+      lineageDir = Some(tmpDir("jobdesc-lin")), deadLetterDir = Some(tmpDir("jobdesc-dl")))
     val sc = spark.sparkContext
     sc.setJobGroup("caller-group", "caller description")
     val descs = try jobDescriptions {

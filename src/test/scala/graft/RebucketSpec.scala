@@ -82,7 +82,7 @@ class RebucketSpec extends SparkSpec {
     // per-task local split — any Exchange here would shuffle the whole
     // table for a partition-local operation
     val frame = t.scanResolved(spark, stored, t.filesOf(m))
-      .withColumn("_bucket", pmod(xxhash64(col("doc_id")), lit(8L)).cast("int"))
+      .withColumn("_bucket", LakeTable.bucketExpr(8))
       .sortWithinPartitions(col("_bucket"), col("doc_id"))
     val plan = frame.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"rebucket plan must be shuffle-free:\n$plan")

@@ -7,13 +7,14 @@ import graft.table.{LakeTable, Maintenance}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Round-3 regression: the compact/ledger-floor exactly-once intersection.
+/** Round-3 regression: the maintenance/ledger-floor exactly-once
+  * intersection.
   *
   * After ledger retention folds old batches into the manifest's batch
-  * floor, that floor is the ONLY record those batches committed. A
-  * compaction that also GCs tombstones MUST carry the floor forward:
-  * otherwise a replayed pre-floor batch re-applies and a delete that was
-  * just tombstone-GC'd gets resurrected by its own original insert.
+  * floor, that floor is the ONLY record those batches committed. Every
+  * maintenance rewrite MUST carry the floor forward: otherwise a replayed
+  * pre-floor batch re-applies, and after a compaction that GCs tombstones
+  * a delete gets resurrected by its own original insert.
   */
 class CompactFloorSpec extends SparkSpec {
   import spark.implicits._
@@ -24,13 +25,15 @@ class CompactFloorSpec extends SparkSpec {
   private def ev(lsn: Long, key: String, op: String, tok: Array[Int]) =
     RawEvent(lsn, key, op, tok, if (tok == null) -1 else tok.length, "s", null, 0)
 
-  test("compact preserves the ledger batch floor: pre-floor replay cannot resurrect a deleted key") {
-    val work = tmpDir("lake-compact-floor")
-    val table = LakeTable(s"$work/t")
+  /** Batch 0 inserts k at lsn 5, batch 1 deletes it at lsn 9, batches 2..5
+    * insert unrelated keys: retention 2 folds batches 0..3 into the floor
+    * (floorBatch = cp -> 3). Then `maintain` rewrites the table, and the
+    * pre-floor insert batch replays (checkpoint reset / secondary writer):
+    * it must be recognized as committed and skipped — NOT re-applied.
+    */
+  private def assertFloorSurvives(dir: String)(maintain: LakeTable => Unit): Unit = {
+    val table = LakeTable(s"$dir/t")
     val cfg = MergeConfig(numBuckets = 2, ledgerRetention = 2)
-    // batch 0: insert k at lsn 5; batch 1: delete k at lsn 9;
-    // batches 2..5: unrelated keys — retention 2 folds batches 0..3 into
-    // the floor (floorBatch = cp -> 3)
     val batches: Seq[Seq[RawEvent]] =
       Seq(Seq(ev(5, "k", Ops.Insert, Array(5))),
         Seq(ev(9, "k", Ops.Delete, null))) ++
@@ -42,20 +45,32 @@ class CompactFloorSpec extends SparkSpec {
     assert(before.floorBatch.getOrElse("cp", -1L) >= 1L,
       s"precondition: the delete batch must be below the floor, got ${before.floorBatch}")
 
-    // compact with watermark past every applied LSN: k's tombstone is GC'd
-    Maintenance.compact(spark, table, tombstoneWatermark = 1000L)
-    assert(table.readStored(spark).filter(col(MergeInto.TOMBSTONE)).count() === 0)
+    maintain(table)
     val after = table.currentManifest()
+    assert(after.version === before.version + 1)
     assert(after.floorBatch === before.floorBatch,
-      "compact must carry the ledger batch floor forward")
+      "maintenance must carry the ledger batch floor forward")
 
-    // replay the below-floor insert batch (checkpoint reset / secondary
-    // writer): must be recognized as committed and skipped — NOT re-applied
     val r = MergeInto.apply(spark, table, batchDf(batches.head), "cp", 0L, cfg)
     assert(r.skipped, "pre-floor batch replay must be a ledger no-op")
     assert(table.read(spark).filter(col("doc_id") === "k").count() === 0,
-      "deleted key must stay deleted after compact + pre-floor replay")
+      "deleted key must stay deleted after maintenance + pre-floor replay")
     assert(table.read(spark).count() === 4)
+  }
+
+  test("compact preserves the ledger batch floor: pre-floor replay cannot resurrect a deleted key") {
+    assertFloorSurvives(tmpDir("lake-compact-floor")) { table =>
+      // compact with watermark past every applied LSN: k's tombstone is GC'd
+      Maintenance.compact(spark, table, tombstoneWatermark = 1000L)
+      assert(table.readStored(spark).filter(col(MergeInto.TOMBSTONE)).count() === 0)
+    }
+  }
+
+  test("rebucket preserves the ledger batch floor: pre-floor replay is skipped") {
+    assertFloorSurvives(tmpDir("lake-rebucket-floor")) { table =>
+      Maintenance.rebucket(spark, table, 4)
+      assert(table.currentManifest().numBuckets === 4)
+    }
   }
 }
 

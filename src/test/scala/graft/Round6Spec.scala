@@ -45,7 +45,7 @@ class Round6Spec extends SparkSpec {
     }
   }
 
-  test("statusCounts gating: same table state; counters exact iff opted in") {
+  test("lineage counter gating: same table state; counters exact iff lineageDir is set") {
     val feed = FeedConfig(numEvents = 4000, numKeys = 150, seed = 11,
       deleteFraction = 0.1, dupFraction = 0.1, eventsPerSegment = 2000)
     val events = ChangeGen.generateLocal(feed)
@@ -60,14 +60,14 @@ class Round6Spec extends SparkSpec {
     }
 
     val (stateOff, linOff) = run(MergeConfig(numBuckets = 4), tmpDir("r6-off"))
-    val (stateOn, linOn) =
-      run(MergeConfig(numBuckets = 4, statusCounts = true), tmpDir("r6-on"))
+    val (stateOn, linOn) = run(
+      MergeConfig(numBuckets = 4, lineageDir = Some(tmpDir("r6-on-lineage"))), tmpDir("r6-on"))
 
     assert(stateOff === stateOn) // the optimization must not touch results
     // LSN ranges are exact either way (pre-pass stats, no read-back job)
     assert(linOff.map(l => (l.batch_id, l.partition, l.min_lsn, l.max_lsn)) ===
       linOn.map(l => (l.batch_id, l.partition, l.min_lsn, l.max_lsn)))
-    // counters: -1 sentinels without the opt-in, real values with it
+    // counters: -1 sentinels without lineageDir, real values with it
     assert(linOff.forall(l => l.n_insert == -1L && l.n_update == -1L &&
       l.n_delete == -1L && l.n_dedup_dropped == -1L))
     assert(linOn.exists(_.n_insert > 0L))
