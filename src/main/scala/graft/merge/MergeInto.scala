@@ -83,7 +83,7 @@ object ColumnPolicy {
   *                     counters (n_insert / n_update / n_delete /
   *                     n_dedup_dropped) through a post-write `_status`
   *                     read-back job, overlapped with manifest composition:
-  *                     persisted lineage must be exact. Without it that job
+  *                     written lineage must be exact. Without it that job
   *                     does not run (it would scan O(rewritten buckets) rows
   *                     on the per-batch serial path purely for counters)
   *                     and `MergeResult.lineage` rows carry -1 in the four
@@ -92,6 +92,13 @@ object ColumnPolicy {
   *                     LSN ranges, batch and snapshot ids; the stream's
   *                     tombstone-GC watermark reads `max_lsn`) are exact
   *                     either way, from the driver-side pre-pass stats.
+  * @param deadLetterDir quarantine for the events the kernel cannot apply:
+  *                     a null `doc_id`, a null `lsn`, or an `op` outside
+  *                     [[graft.model.Ops.all]]. They are written to
+  *                     `<dir>/cp=<checkpointId>/batch=<batchId>` before the
+  *                     commit (idempotent overwrite) and the rest of the
+  *                     batch is applied. None (default) fails such a batch
+  *                     before anything is staged or committed.
   */
 final case class MergeConfig(
     numBuckets: Int = 32,
@@ -99,7 +106,6 @@ final case class MergeConfig(
     broadcastThreshold: Long = 200000L,
     lineageDir: Option[String] = None,
     deadLetterDir: Option[String] = None,
-    commitRetries: Int = LakeTable.CommitRetries,
     preCommitHook: () => Unit = () => (),
     columnPolicy: Map[String, ColumnPolicy] = Map.empty,
     /** Newest ledger entries kept per checkpoint; older ones fold into the
@@ -225,7 +231,11 @@ object MergeInto {
     * no-op returning the committed snapshot. Safe under concurrent
     * writers: a lost manifest CAS re-runs the merge against the winner's
     * snapshot (the loser's staged files become orphans for vacuum), up to
-    * `commitRetries` attempts.
+    * [[LakeTable.CommitRetries]] more times.
+    *
+    * Only valid events reach the table: one with a null `doc_id`, a null
+    * `lsn` or an `op` outside [[Ops.all]] goes to `cfg.deadLetterDir`, or,
+    * without one, fails the batch before anything is written.
     */
   def apply(
       spark: SparkSession,
@@ -235,7 +245,7 @@ object MergeInto {
       batchId: Long,
       cfg: MergeConfig = MergeConfig()): MergeResult = {
     LocalFs.install(spark)
-    LakeTable.retryConflicts(cfg.commitRetries) {
+    LakeTable.retryConflicts(LakeTable.CommitRetries) {
       applyOnce(spark, table, batch, checkpointId, batchId, cfg)
     }
   }
@@ -248,30 +258,12 @@ object MergeInto {
       batchId: Long,
       cfg: MergeConfig): MergeResult = {
 
-    // -- -1. dead-letter routing (the reference's failure relationship,
-    // PontusTinkerPopClient.java:213-258): structurally invalid events
-    // (null key / null lsn / unknown op) divert to a quarantine table at a
-    // deterministic per-batch path (idempotent overwrite) instead of
-    // corrupting the merge.
     // `good` is two-valued by construction (coalesce over the three-valued
     // op membership test): a null op must land in the rejects, not vanish
     // from both sides of the split.
-    // Single-pass: the batch is cached once, the reject COUNT rides the
-    // stats pre-pass below (no extra probe job), the rejects write runs
-    // only when rejects exist (an all-good batch must not leave a
-    // _SUCCESS-only empty dir that breaks downstream schema inference),
-    // and the merge's own stats/dedupe/join scans read the cache instead
-    // of re-reading the source. Unpersisted in the finally below, which
-    // also covers a throwing rejects write.
     val goodPred = col("doc_id").isNotNull && col("lsn").isNotNull &&
       coalesce(col("op").isInCollection(Ops.all), lit(false))
-    val (batch, cachedBatch) = cfg.deadLetterDir match {
-      case None => (batch0, None)
-      case Some(_) =>
-        val cached = batch0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        (cached.filter(goodPred), Some(cached))
-    }
-    try {
+    val batch = batch0.filter(goodPred)
 
     val current = table.currentManifestOpt()
 
@@ -298,14 +290,12 @@ object MergeInto {
     val evolved = SchemaEvolution.evolve(tableSchema, incomingAsTable)
 
     // -- 2. ONE pre-pass over the batch: touched buckets, per-bucket raw
-    // counts, distinct keys (== post-dedupe rows), LSN ranges. Partial-
-    // aggregable, <= numBuckets (+1 reject group) result rows. In
-    // dead-letter mode the scan runs over the CACHED unfiltered frame with
-    // a `_good` flag so the reject count comes out of the same job.
+    // counts, distinct keys (== post-dedupe rows), LSN ranges, and the
+    // reject count in a `_good = false` group. Partial-aggregable,
+    // <= 2 x numBuckets result rows.
     val rawStats = JobDescription(spark, s"merge stats $ledgerKey") {
-      cachedBatch.getOrElse(batch)
-        .groupBy((if (cachedBatch.isDefined) goodPred else lit(true)).as("_good"),
-          LakeTable.bucketExpr(numBuckets).as("_bucket"))
+      batch0
+        .groupBy(goodPred.as("_good"), LakeTable.bucketExpr(numBuckets).as("_bucket"))
         .agg(count(lit(1)).as("n_raw"),
           min("lsn").as("minL"), max("lsn").as("maxL"))
         .collect()
@@ -314,13 +304,22 @@ object MergeInto {
       .map(r => r.getInt(1) -> ((r.getLong(2), r.getLong(3), r.getLong(4))))
       .toMap // bucket -> (n_raw, minL, maxL)
     val rejectCount = rawStats.filterNot(_.getBoolean(0)).map(_.getLong(2)).sum
-    if (rejectCount > 0) cfg.deadLetterDir.foreach { dir =>
-      // before the commit (a crash between commit and a later rejects
-      // write would skip them on replay), idempotent overwrite path
-      JobDescription(spark, s"merge rejects $ledgerKey") {
-        cachedBatch.get.filter(!goodPred).write.mode("overwrite")
-          .parquet(s"$dir/cp=$checkpointId/batch=$batchId")
-      }
+    // Rejects go to the dead-letter directory (the reference's failure
+    // relationship, PontusTinkerPopClient.java:213-258) before the commit,
+    // at an idempotent per-batch path: a crash between the commit and a
+    // later write would skip them on replay. With no directory the batch
+    // fails here, before anything is staged or committed.
+    if (rejectCount > 0) cfg.deadLetterDir match {
+      case Some(dir) =>
+        JobDescription(spark, s"merge rejects $ledgerKey") {
+          batch0.filter(!goodPred).write.mode("overwrite")
+            .parquet(s"$dir/cp=$checkpointId/batch=$batchId")
+        }
+      case None =>
+        throw new IllegalArgumentException(s"batch $ledgerKey has $rejectCount " +
+          "invalid event(s) (null doc_id, null lsn, or op not in " +
+          s"${Ops.all.mkString("/")}); nothing was written. Set " +
+          "MergeConfig.deadLetterDir to quarantine them and apply the rest.")
     }
     val touched: Set[Int] = batchStats.keySet
 
@@ -535,7 +534,7 @@ object MergeInto {
     // A/B in BENCH.md).
     val readbackSchema = StructType(Seq(
       StructField("_status", StringType), StructField("_bucket", IntegerType)))
-    // round 6: the read-back runs ONLY when lineageDir persists the
+    // round 6: the read-back runs ONLY when lineageDir stores the
     // counters — for every other caller it was a pure-observability Spark
     // job on the per-batch serial path
     val wantCounts = cfg.lineageDir.isDefined
@@ -625,6 +624,5 @@ object MergeInto {
         }
         throw commitFailure
     }
-    } finally cachedBatch.foreach(_.unpersist(false))
   }
 }

@@ -1,6 +1,7 @@
 package graft.sources
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
+import graft.model.Ops
 import graft.util.{IoUtil, LocalFs}
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
@@ -103,6 +104,8 @@ final class HttpFeedServer private (
   private val knownKeys = schema.fieldNames.toSet
   private val lsnIdx = schema.fieldIndex("lsn")
   private val docIdIdx = schema.fieldIndex("doc_id")
+  private val opIdx = schema.fieldIndex("op")
+  private val validOps = Ops.all.map(UTF8String.fromString).toSet
   private val lsnOrder = new InterpretedOrdering(Seq(SortOrder(
     BoundReference(lsnIdx, schema(lsnIdx).dataType, nullable = true), Ascending)))
   private val segRow = UnsafeProjection.create(segSchema.fields.toIndexedSeq
@@ -123,8 +126,9 @@ final class HttpFeedServer private (
     * tailing stream never lists a half-written segment.
     *
     * A line is rejected when it does not parse into a feed event, has a
-    * null `lsn` or `doc_id`, or has a key outside the schema (it is not
-    * truncated to the known fields). Rejects go to `feedDir/_rejects/seg=N`
+    * null `lsn` or `doc_id`, an `op` outside [[Ops.all]], or a key outside
+    * the schema (it is not truncated to the known fields): the events the
+    * merge kernel would refuse. Rejects go to `feedDir/_rejects/seg=N`
     * as JSON lines `{"line": <raw line>}` (the dead-letter posture of the
     * CSV source): the stream only tails `seg=*` dirs, so accepted garbage
     * can neither crash the tail nor merge as a null-keyed live row. The
@@ -158,7 +162,8 @@ final class HttpFeedServer private (
       val r = parseLine(InternalRow(UTF8String.fromString(line)))
       val e = if (r.isNullAt(0)) null else r.getStruct(0, n + 1)
       val ok = e != null && e.isNullAt(n) && !e.isNullAt(lsnIdx) &&
-        !e.isNullAt(docIdIdx) && !r.isNullAt(1) &&
+        !e.isNullAt(docIdIdx) && !e.isNullAt(opIdx) && validOps(e.getUTF8String(opIdx)) &&
+        !r.isNullAt(1) &&
         r.getArray(1).toSeq[UTF8String](StringType).forall(k => knownKeys(k.toString))
       if (ok) good += segRow(e).copy() else rejects += line
     }

@@ -60,10 +60,10 @@ import scala.jdk.CollectionConverters._
   *                          — the same debt class the table side's
   *                          version hint killed.
   * @param sourceArchiveDir  destination for cleanSource = "archive"
-  * @param maxFileAge        ignore-and-forget horizon for feed segments
-  *                          (bounds the seen-files map the source carries
-  *                          in memory/checkpoint); None keeps Spark's
-  *                          default ("7d")
+  *
+  * An event the kernel cannot apply (null `doc_id` or `lsn`, unknown
+  * `op`) goes to `merge.deadLetterDir`; without one, it stops the stream
+  * with the kernel's error before its micro-batch writes anything.
   */
 final case class StreamConfig(
     feedDir: String,
@@ -91,7 +91,6 @@ final case class StreamConfig(
     tombstoneSlackLsn: Long = Long.MaxValue,
     cleanSource: Option[String] = None,
     sourceArchiveDir: Option[String] = None,
-    maxFileAge: Option[String] = None,
     /** Online bucket-count scaling (0 = off): at each maintenance cycle,
       * if the table's stored rows per bucket exceed this, DOUBLE the
       * bucket count ([[Maintenance.rebucket]] — a shuffle-free split of
@@ -151,8 +150,7 @@ object CdcStream {
       .schema(schema)
       .option("maxFilesPerTrigger", cfg.maxFilesPerTrigger)
     val feed1 = cfg.cleanSource.foldLeft(feed0)(_.option("cleanSource", _))
-    val feed2 = cfg.sourceArchiveDir.foldLeft(feed1)(_.option("sourceArchiveDir", _))
-    val feed = cfg.maxFileAge.foldLeft(feed2)(_.option("maxFileAge", _))
+    val feed = cfg.sourceArchiveDir.foldLeft(feed1)(_.option("sourceArchiveDir", _))
       .parquet(cfg.feedDir)
 
     val table = LakeTable(cfg.tableDir)

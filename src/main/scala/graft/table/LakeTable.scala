@@ -733,17 +733,6 @@ final class LakeTable private (val root: String, val conf: Configuration) {
     spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
       schema, None, new ParquetFileFormat, Map.empty)(spark))
   }
-
-  /** Files of the current snapshot whose LSN range intersects [lo, hi] —
-    * min/max-stat pruning for time-travel style scans, applied at the
-    * manifest-LIST level first (whole ranges skip unopened).
-    */
-  def filesInLsnRange(lo: Long, hi: Long): Seq[FileEntry] =
-    currentManifestOpt().map { m =>
-      m.manifests.filter(r => r.maxLsn >= lo && r.minLsn <= hi)
-        .sortBy(_.range).flatMap(readManifestFile)
-        .filter(f => f.maxLsn >= lo && f.minLsn <= hi)
-    }.getOrElse(Nil)
 }
 
 object LakeTable {
@@ -775,8 +764,7 @@ object LakeTable {
   }
 
   /** Lost CAS races a merge, compaction or rebucket retries against the
-    * winner's snapshot before the conflict surfaces (the default of
-    * `MergeConfig.commitRetries`).
+    * winner's snapshot before the conflict surfaces.
     */
   val CommitRetries: Int = 3
 

@@ -5,6 +5,7 @@ import graft.merge.MergeConfig
 import graft.stream.{CdcStream, StreamConfig}
 import graft.table.LakeTable
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, lit, min, when}
 
 import scala.collection.mutable
 
@@ -134,22 +135,33 @@ class CdcStreamSpec extends SparkSpec {
     assert(withExtra > 0)
   }
 
-  test("a segment that adds a column mid-stream fails the stream and is not applied") {
+  /** Two 200-event segments over 50 keys. */
+  private val twoSegments = ChangeGen.generateLocal(FeedConfig(numEvents = 400,
+    numKeys = 50, seed = 3, eventsPerSegment = 200))
+
+  private def segment(seg: Int): DataFrame = {
     import spark.implicits._
+    ChangeGen.projectPhase(twoSegments.filter(_.seg == seg).toDF(),
+      Phase(0, Long.MaxValue)).drop("seg")
+  }
+
+  /** Drop `df` into the feed as segment `seg`, renamed into place whole. */
+  private def publish(feedDir: String, seg: Int, df: DataFrame): Unit = {
+    val dir = new org.apache.hadoop.fs.Path(s"$feedDir/seg=$seg")
+    graft.util.IoUtil.publishDir(
+      dir.getFileSystem(spark.sparkContext.hadoopConfiguration), dir) { tmp =>
+      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    }
+  }
+
+  private def oracleOfSegment0 =
+    ChangeGen.oracleFinalState(twoSegments.filter(_.seg == 0))
+      .map { case (k, e) => k -> ((e.tokens.toSeq, e.n_tok.toLong, e.source, e.lsn)) }
+
+  test("a segment that adds a column mid-stream fails the stream and is not applied") {
     val work = tmpDir("stream-drift")
     val feedDir = s"$work/feed"
-    val events = ChangeGen.generateLocal(FeedConfig(numEvents = 400, numKeys = 50,
-      seed = 3, eventsPerSegment = 200))
-    def segment(seg: Int): DataFrame = ChangeGen.projectPhase(
-      events.filter(_.seg == seg).toDF(), Phase(0, Long.MaxValue)).drop("seg")
-    def publish(seg: Int, df: DataFrame): Unit = {
-      val dir = new org.apache.hadoop.fs.Path(s"$feedDir/seg=$seg")
-      graft.util.IoUtil.publishDir(
-        dir.getFileSystem(spark.sparkContext.hadoopConfiguration), dir) { tmp =>
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      }
-    }
-    publish(0, segment(0))
+    publish(feedDir, 0, segment(0))
     val applied = new java.util.concurrent.LinkedBlockingQueue[Long]()
     val q = CdcStream.start(spark, StreamConfig(
       feedDir = feedDir, tableDir = s"$work/table", checkpointDir = s"$work/cp",
@@ -157,7 +169,7 @@ class CdcStreamSpec extends SparkSpec {
       merge = MergeConfig(numBuckets = 4)), (id, _) => applied.put(id))
     try {
       assert(applied.poll(60, java.util.concurrent.TimeUnit.SECONDS) === 0L)
-      publish(1, segment(1).withColumn("extra_v2", org.apache.spark.sql.functions.lit("x")))
+      publish(feedDir, 1, segment(1).withColumn("extra_v2", lit("x")))
       val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
         q.awaitTermination(60000): Unit
       }
@@ -166,7 +178,29 @@ class CdcStreamSpec extends SparkSpec {
     assert(applied.isEmpty, "the drifted segment must not be merged")
     val table = LakeTable(s"$work/table")
     assert(!table.currentManifest().isCommitted("drift", 1L))
-    assert(asMap(table.read(spark)) === ChangeGen.oracleFinalState(events.filter(_.seg == 0))
-      .map { case (k, e) => k -> ((e.tokens.toSeq, e.n_tok.toLong, e.source, e.lsn)) })
+    assert(asMap(table.read(spark)) === oracleOfSegment0)
+  }
+
+  test("a segment holding an unknown op stops the stream with the kernel's error") {
+    val work = tmpDir("stream-bad-op")
+    val feedDir = s"$work/feed"
+    publish(feedDir, 0, segment(0))
+    val seg1 = segment(1)
+    val firstLsn = seg1.agg(min("lsn")).head().getLong(0)
+    publish(feedDir, 1,
+      seg1.withColumn("op", when(col("lsn") === firstLsn, lit("WAT")).otherwise(col("op"))))
+    val applied = mutable.ArrayBuffer.empty[Long]
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      CdcStream.runToCompletion(spark, StreamConfig(
+        feedDir = feedDir, tableDir = s"$work/table", checkpointDir = s"$work/cp",
+        checkpointId = "badop", maxFilesPerTrigger = 1,
+        merge = MergeConfig(numBuckets = 4)), (id, _) => applied += id)
+    }
+    assert(e.getMessage.contains("batch badop/1 has 1 invalid event(s)") &&
+      e.getMessage.contains("MergeConfig.deadLetterDir"), e.getMessage)
+    assert(applied.toSeq === Seq(0L))
+    val table = LakeTable(s"$work/table")
+    assert(!table.currentManifest().isCommitted("badop", 1L))
+    assert(asMap(table.read(spark)) === oracleOfSegment0)
   }
 }

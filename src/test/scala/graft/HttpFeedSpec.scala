@@ -123,6 +123,7 @@ class HttpFeedSpec extends SparkSpec {
       "{not json",
       """{"lsn":3,"doc_id":"c","op":"I","tokens":[3],"n_tok":1,"source":"http","extra":7}""",
       """{"lsn":4,"doc_id":null,"op":"I","tokens":[4],"n_tok":1,"source":"http"}""",
+      """{"lsn":5,"doc_id":"e","op":"WAT","tokens":[5],"n_tok":1,"source":"http"}""",
       """[1, 2]""")
     withServer(s"$work/feed") { srv =>
       post(srv, "/events", (Seq(ev(1, "a", Ops.Insert, Seq(1))) ++ bad ++

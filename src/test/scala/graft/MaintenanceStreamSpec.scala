@@ -2,11 +2,9 @@ package graft
 
 import graft.changegen.{ChangeGen, FeedConfig, Phase, RawEvent}
 import graft.merge.{MergeConfig, MergeInto}
-import graft.model.{ChangeEvent, Ops}
-import graft.streaming.StreamOps
+import graft.model.Ops
 import graft.table.{LakeTable, Maintenance}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.Trigger
 
 class MaintenanceSpec extends SparkSpec {
   import spark.implicits._
@@ -73,61 +71,5 @@ class MaintenanceSpec extends SparkSpec {
     assert(table.read(spark).collect().map(_.toSeq).toSet === liveState)
     // idempotent: second run deletes nothing
     assert(Maintenance.vacuum(table, retainFromVersion = current).isEmpty)
-  }
-}
-
-class StreamOpsSpec extends SparkSpec {
-  import spark.implicits._
-
-  test("watermarked windowed aggregation over a streamed feed") {
-    val dir = tmpDir("stream-win")
-    val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
-    val rows = (0 until 600).map { i =>
-      (new java.sql.Timestamp(base.getTime + i * 1000L),
-        if (i % 2 == 0) "click" else "view", i.toDouble)
-    }
-    rows.toDF("ts", "event_type", "value").write.parquet(s"$dir/in")
-    val stream = spark.readStream
-      .schema(spark.read.parquet(s"$dir/in").schema)
-      .parquet(s"$dir/in")
-    val agg = StreamOps.windowedCounts(stream, "ts", "value", "5 minutes", "1 minute")
-    val q = agg.writeStream.outputMode("complete")
-      .format("memory").queryName("win_out")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val out = spark.table("win_out").collect()
-    // 600s of events -> 2 windows x 2 types
-    assert(out.length === 4)
-    assert(out.map(_.getAs[Long]("n")).sum === 600L)
-  }
-
-  test("flatMapGroupsWithState keeps last-writer-wins state across batches") {
-    val dir = tmpDir("stream-lww")
-    def write(sub: String, evs: Seq[ChangeEvent]): Unit = {
-      evs.toDS().coalesce(1).write.parquet(s"$dir/in/$sub")
-      Thread.sleep(1100) // distinct mod-times -> deterministic batch order
-    }
-    // batch files: k1 gets lsn 5, then late lsn 3 (ignored), then 9 (wins)
-    write("a", Seq(ChangeEvent(5, "k1", "U", Array(5), 1, "s"),
-      ChangeEvent(1, "k2", "I", Array(1), 1, "s")))
-    write("b", Seq(ChangeEvent(3, "k1", "U", Array(3), 1, "s")))
-    write("c", Seq(ChangeEvent(9, "k1", "U", Array(9), 1, "s")))
-    val stream = spark.readStream
-      .schema(spark.read.parquet(s"$dir/in/a").schema)
-      .option("maxFilesPerTrigger", 1)
-      .option("latestFirst", "false")
-      .parquet(s"$dir/in/*")
-    val updates = StreamOps.lwwState(stream.as[ChangeEvent])
-    val q = updates.writeStream.outputMode("update")
-      .format("memory").queryName("lww_out")
-      .option("checkpointLocation", s"$dir/cp")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val emitted = spark.table("lww_out").as[ChangeEvent].collect()
-    // late lsn=3 suppressed by the keyed state; lsn=9 emitted
-    assert(!emitted.exists(e => e.doc_id == "k1" && e.lsn == 3))
-    assert(emitted.exists(e => e.doc_id == "k1" && e.lsn == 9))
-    assert(emitted.exists(e => e.doc_id == "k1" && e.lsn == 5))
-    assert(emitted.exists(e => e.doc_id == "k2" && e.lsn == 1))
   }
 }

@@ -100,6 +100,30 @@ class RobustnessSpec extends SparkSpec {
     assert(table.committedSnapshot("cp", 1L).isDefined)
   }
 
+  test("without a dead-letter dir, invalid events fail the batch before anything is written") {
+    val work = tmpDir("lake-reject")
+    val table = LakeTable(s"$work/t")
+    val cfg = MergeConfig(numBuckets = 4)
+    MergeInto.apply(spark, table, batchDf(Seq(ev(1, "a", Ops.Insert, Array(1)))), "cp", 0, cfg)
+    val v0 = table.currentVersion()
+    val bad = Seq(
+      (Some(3L), null.asInstanceOf[String], "U", Seq(3), 1, "s"), // null key
+      (Some(4L), "c", "WAT", Seq(4), 1, "s"), // unknown op
+      (None, "d", "I", Seq(5), 1, "s") // null lsn
+    ).toDF("lsn", "doc_id", "op", "tokens", "n_tok", "source")
+    val batch = batchDf(Seq(ev(2, "b", Ops.Insert, Array(2)))).unionByName(bad)
+    val e = intercept[IllegalArgumentException] {
+      MergeInto.apply(spark, table, batch, "cp", 1, cfg)
+    }
+    assert(e.getMessage.contains("batch cp/1 has 3 invalid event(s)"), e.getMessage)
+    assert(e.getMessage.contains("MergeConfig.deadLetterDir"), e.getMessage)
+    assert(table.currentVersion() === v0)
+    assert(!new java.io.File(new Path(table.stagingDir(v0 + 1)).toUri.getPath).exists,
+      "nothing may be staged for the next version")
+    assert(table.committedSnapshot("cp", 1L).isEmpty)
+    assert(table.read(spark).select("doc_id").collect().map(_.getString(0)).toSeq === Seq("a"))
+  }
+
   test("lost CAS race: merge retries against the winner's snapshot") {
     val work = tmpDir("lake-race")
     val table = LakeTable(s"$work/t")
@@ -137,8 +161,7 @@ class RobustnessSpec extends SparkSpec {
     intercept[graft.table.CommitConflictException] {
       MergeInto.apply(spark, table,
         batchDf(Seq(ev(3, "q", Ops.Insert, Array(3)))), "w1", 2,
-        MergeConfig(numBuckets = 4, commitRetries = 2,
-          preCommitHook = alwaysCompete))
+        MergeConfig(numBuckets = 4, preCommitHook = alwaysCompete))
     }
   }
 

@@ -409,61 +409,6 @@ class EdgesMergeSpec extends SparkSpec {
   }
 }
 
-/** Bounded streaming LWW state: idle keys (and delete fences) evict after
-  * the TTL; LWW answers stay exact inside the TTL window.
-  */
-class LwwStateTtlSpec extends SparkSpec {
-  import graft.model.ChangeEvent
-  import graft.streaming.StreamOps
-  import org.apache.spark.sql.streaming.Trigger
-  import spark.implicits._
-
-  test("state store stays bounded under churn; fences answer inside the slack window") {
-    val dir = tmpDir("stream-lww-ttl")
-    def write(sub: String, evs: Seq[ChangeEvent]): Unit = {
-      evs.toDS().coalesce(1).write.parquet(s"$dir/in/$sub")
-      Thread.sleep(1100) // distinct mod-times -> deterministic batch order
-    }
-    // batch a: churn keys c0..c49 (lsn 0..49) + k1(lsn 5) + delete fence
-    // kd(lsn 9). Feed head 49, slack 100 -> watermark still 0: nothing
-    // can evict before batch b.
-    write("a", (0 until 50).map(i => ChangeEvent(i.toLong, s"c$i", "U", Array(i), 1, "s"))
-      ++ Seq(ChangeEvent(5, "k1", "U", Array(5), 1, "s"),
-        ChangeEvent(9, "kd", "D", null, -1, "s")))
-    // batch b: late lsn 3 for k1 suppressed by state; late lsn 7 for kd
-    // suppressed by the delete fence (both INSIDE the slack window); the
-    // feed head then jumps to 5000 -> watermark 4900 passes every old key
-    write("b", Seq(ChangeEvent(3, "k1", "U", Array(3), 1, "s"),
-      ChangeEvent(7, "kd", "U", Array(7), 1, "s"),
-      ChangeEvent(5000, "fresh", "U", Array(1), 1, "s")))
-    // batch c: triggers the eviction pass for everything below 4900
-    write("c", Seq(ChangeEvent(5001, "fresh2", "U", Array(2), 1, "s")))
-    val stream = spark.readStream
-      .schema(spark.read.parquet(s"$dir/in/a").schema)
-      .option("maxFilesPerTrigger", 1)
-      .option("latestFirst", "false")
-      .parquet(s"$dir/in/*")
-    val updates = StreamOps.lwwState(stream.as[ChangeEvent], 100L)
-    val q = updates.writeStream.outputMode("update")
-      .format("memory").queryName("lww_ttl_out")
-      .option("checkpointLocation", s"$dir/cp")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val emitted = spark.table("lww_ttl_out").as[ChangeEvent].collect()
-    // inside the slack window, LWW/fence semantics are exact
-    assert(!emitted.exists(e => e.doc_id == "k1" && e.lsn == 3))
-    assert(!emitted.exists(e => e.doc_id == "kd" && e.lsn == 7))
-    assert(emitted.exists(e => e.doc_id == "fresh"))
-    assert(emitted.exists(e => e.doc_id == "fresh2"))
-    // eviction ran: 54 distinct keys seen, only the 2 fresh ones survive
-    // in the store (plus nothing else within slack of the head)
-    val lastState = q.recentProgress.reverse.flatMap(p =>
-      Option(p.stateOperators).toSeq.flatten.map(_.numRowsTotal)).headOption
-    assert(lastState.exists(_ <= 5),
-      s"state should be bounded by eviction, got $lastState rows")
-  }
-}
-
 /** JDK-only archive explode: zip entry round-trip, pptx slide text, and
   * the real decoder behind the MediaDecoder seam.
   */

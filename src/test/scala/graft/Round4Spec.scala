@@ -303,17 +303,6 @@ class ManifestListSpec extends SparkSpec {
     // idempotent
     assert(Maintenance.vacuum(table, retainFromVersion = current).isEmpty)
   }
-
-  test("filesInLsnRange prunes at the manifest-list level") {
-    val work = tmpDir("mlist-lsn")
-    val table = LakeTable(s"$work/t")
-    val cfg = MergeConfig(numBuckets = 4)
-    MergeInto.apply(spark, table,
-      batchDf((1 to 20).map(i => ev(i.toLong, s"k$i"))), "cp", 0L, cfg)
-    val hits = table.filesInLsnRange(5L, 7L)
-    assert(hits.nonEmpty && hits.forall(f => f.maxLsn >= 5L && f.minLsn <= 7L))
-    assert(table.filesInLsnRange(1000L, 2000L).isEmpty)
-  }
 }
 
 /** JDK-only xlsx cell extraction (ConvertExcelToCSVProcessor shape). */

@@ -84,8 +84,7 @@ class InlineMaintenanceSpec extends SparkSpec {
 }
 
 /** Feed-source hygiene: a year-long tail must not accumulate O(history)
-  * source listing / seen-files state. cleanSource removes committed
-  * segments; maxFileAge forgets segments older than the horizon.
+  * source listing state. cleanSource removes committed segments.
   */
 class SourceHygieneSpec extends SparkSpec {
 
@@ -117,51 +116,6 @@ class SourceHygieneSpec extends SparkSpec {
       val after = listParquet().size
       assert(after < before, s"cleanSource must shrink the feed dir ($after vs $before)")
     } finally spark.conf.unset("spark.sql.streaming.fileSource.cleaner.numThreads")
-  }
-
-  test("maxFileAge bounds the seen-files horizon (stale stragglers ignored)") {
-    // maxFileAge purges relative to the NEWEST timestamp the source has
-    // seen — on a fresh start everything is admitted (correct for
-    // backfill), so the bound matters for files appearing BEHIND the
-    // horizon of an already-running tail: a restored-from-backup straggler
-    // must not reopen the unbounded seen-files window.
-    val work = tmpDir("max-age")
-    // key space wider than one segment's event count so the straggler
-    // carries keys the young segments never touch
-    val feed = FeedConfig(numEvents = 2000, numKeys = 2000, seed = 9,
-      eventsPerSegment = 500, filesPerSegment = 1)
-    val Seq(phaseDir) = ChangeGen.writeFeed(spark, s"$work/feed", feed)
-    val segDirs = Option(new java.io.File(phaseDir).listFiles).toSeq.flatten
-      .filter(_.getName.startsWith("seg=")).sortBy(_.getName)
-    assert(segDirs.size === 4)
-    // hold segments 0-1 back; tail only the young half first
-    val held = new java.io.File(work, "held"); held.mkdirs()
-    segDirs.take(2).foreach { d =>
-      assert(d.renameTo(new java.io.File(held, d.getName)))
-    }
-    def run(tag: String, maxAge: Option[String]): Long =
-      CdcStream.runToCompletion(spark, StreamConfig(
-        feedDir = phaseDir, tableDir = s"$work/t-$tag", checkpointDir = s"$work/cp-$tag",
-        checkpointId = tag, maxFilesPerTrigger = 2,
-        merge = MergeConfig(numBuckets = 4), maxFileAge = maxAge)).count()
-    val young = run("aged", Some("1h"))
-    val youngCtl = run("ctl", None)
-    assert(young === youngCtl)
-    // the stragglers reappear with mtimes far behind the horizon
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) Option(f.listFiles).toSeq.flatten.flatMap(walk) else Seq(f)
-    val old = System.currentTimeMillis() - 48L * 3600 * 1000
-    Option(held.listFiles).toSeq.flatten.foreach { d =>
-      assert(d.renameTo(new java.io.File(phaseDir, d.getName)))
-    }
-    walk(new java.io.File(phaseDir)).filter(_.getName.endsWith(".parquet"))
-      .filter(_.getPath.matches(".*seg=[01]/.*"))
-      .foreach(f => assert(f.setLastModified(old)))
-    // bounded horizon: stragglers ignored; unbounded control: processed
-    val aged = run("aged", Some("1h"))
-    val ctl = run("ctl", None)
-    assert(aged === young, s"aged stragglers must stay ignored ($aged vs $young)")
-    assert(ctl > youngCtl, s"control must process the stragglers ($ctl vs $youngCtl)")
   }
 }
 
