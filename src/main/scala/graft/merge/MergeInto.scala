@@ -1,9 +1,9 @@
 package graft.merge
 
 import graft.model.{Ops, SchemaEvolution, Schemas}
-import graft.table.LakeTable
-import graft.util.{JobDescription, LocalFs}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.table.{FileEntry, LakeTable, Manifest}
+import graft.util.{BatchFiles, JobDescription, LocalFs}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -90,15 +90,21 @@ object ColumnPolicy {
   *                     counters (explicitly "not computed", never a silent
   *                     0). The fields the engine itself consumes (per-bucket
   *                     LSN ranges, batch and snapshot ids; the stream's
-  *                     tombstone-GC watermark reads `max_lsn`) are exact
-  *                     either way, from the driver-side pre-pass stats.
+  *                     tombstone-GC watermark reads `max_lsn`) are set
+  *                     either way: on the rewrite path from the pre-pass
+  *                     stats (the batch's raw LSN range per bucket), on the
+  *                     delta path from the staged files' footers (`max_lsn`
+  *                     the same, `min_lsn` the lowest LSN written). A
+  *                     lineageDir run always takes the pre-pass, so a delta
+  *                     batch under it runs that job too.
   * @param deadLetterDir quarantine for the events the kernel cannot apply:
   *                     a null `doc_id`, a null `lsn`, or an `op` outside
   *                     [[graft.model.Ops.all]]. They are written to
   *                     `<dir>/cp=<checkpointId>/batch=<batchId>` before the
   *                     commit (idempotent overwrite) and the rest of the
   *                     batch is applied. None (default) fails such a batch
-  *                     before anything is staged or committed.
+  *                     before its commit, with nothing left staged (a
+  *                     one-job delta batch removes the attempt it staged).
   */
 final case class MergeConfig(
     numBuckets: Int = 32,
@@ -127,10 +133,15 @@ final case class MergeConfig(
       * the final state is identical to the rewrite path (DeltaAppendSpec
       * proves equivalence batch-size-independently). 0 (default) = off.
       * Ignored when `columnPolicy` is non-empty (policies need the
-      * stored row) and for bootstrap batches into untouched buckets.
-      * Lineage for delta batches is op-typed (an I counts as insert, a
-      * U/UPSERT as update, a D as delete) since match status is unknown
-      * without reading the target.
+      * stored row) and while the table holds no file (the bootstrap).
+      * The raw row count comes from the batch's parquet footers when the
+      * batch is one file scan (a stream micro-batch, `spark.read.parquet`);
+      * such a delta batch with no `lineageDir` runs one Spark job, the
+      * write, with its rejects counted inside it. Any other batch counts
+      * its rows in the pre-pass. Lineage for delta batches is op-typed (an
+      * I counts as insert, a U/UPSERT as update, a D as delete) since
+      * match status is unknown without reading the target, and its LSN
+      * ranges are those of the files written (see `lineageDir`).
       */
     deltaAppendThreshold: Long = 0L,
     /** Row-count ceiling for the SINGLE-TASK merge plan (round 6): when
@@ -216,15 +227,71 @@ object MergeInto {
     * are passed through uncast.
     */
   def alignTo(df: DataFrame, target: StructType): DataFrame = {
-    val have = df.schema.fields.map(f => f.name -> f.dataType).toMap
-    df.select(target.fields.toIndexedSeq.map { f =>
-      have.get(f.name) match {
-        case Some(dt) if sameTypeIgnoreNull(dt, f.dataType) => col(f.name)
-        case Some(_) => col(f.name).cast(f.dataType).as(f.name)
-        case None => lit(null).cast(f.dataType).as(f.name)
-      }
-    }: _*)
+    val have = typesOf(df)
+    df.select(target.fields.toIndexedSeq.map(alignCol(have, _)): _*)
   }
+
+  private def typesOf(df: DataFrame): Map[String, DataType] =
+    df.schema.fields.map(f => f.name -> f.dataType).toMap
+
+  /** Column `f` of a frame whose columns have the types `have`. */
+  private def alignCol(have: Map[String, DataType], f: StructField): Column =
+    have.get(f.name) match {
+      case Some(dt) if sameTypeIgnoreNull(dt, f.dataType) => col(f.name)
+      case Some(_) => col(f.name).cast(f.dataType).as(f.name)
+      case None => lit(null).cast(f.dataType).as(f.name)
+    }
+
+  /** The merge-on-read rows of a deduped batch, in one projection: every
+    * table column of `evolved` (a missing one null, a widened one cast),
+    * the tombstone flag, an op-typed `_status` (an I counts as insert, a D
+    * as delete, the rest as update: match status is unknown without the
+    * target) and `_bucket`.
+    */
+  private def deltaRows(deduped: DataFrame, evolved: StructType, numBuckets: Int): DataFrame = {
+    val have = typesOf(deduped)
+    val isDel = col("op") === Ops.Delete
+    val status = when(isDel, lit("delete"))
+      .when(col("op") === Ops.Insert, lit("insert"))
+      .otherwise(lit("update"))
+    val (key, data) = evolved.fields.toIndexedSeq.partition(_.name == "doc_id")
+    deduped.select(((key ++ data).map(alignCol(have, _)) :+ isDel.as(TOMBSTONE) :+
+      status.as("_status") :+ LakeTable.bucketExpr(numBuckets).as("_bucket")): _*)
+  }
+
+  /** Per bucket, the lowest and highest LSN that `files` hold. */
+  private def lsnRanges(files: Seq[FileEntry]): Map[Int, (Long, Long)] =
+    files.groupBy(_.bucket).view.mapValues(fs =>
+      (fs.map(_.minLsn).min, fs.map(_.maxLsn).max)).toMap
+
+  /** Rows of `batch` known without a Spark job: the footer row counts of
+    * its files when it is one parquet scan ([[BatchFiles.scanned]]).
+    */
+  private def footerRows(batch: DataFrame): Option[Long] =
+    BatchFiles.scanned(batch).flatMap(files => scala.util.Try(BatchFiles.footerRows(
+      batch.sparkSession.sparkContext.hadoopConfiguration, files)).toOption)
+
+  /** Rejects go to the dead-letter directory (the reference's failure
+    * relationship, PontusTinkerPopClient.java:213-258) before the commit,
+    * at an idempotent per-batch path: a crash between the commit and a
+    * later write would skip them on replay. With no directory the batch
+    * fails before its commit, after `discard` removed what it staged.
+    */
+  private def routeRejects(batch0: DataFrame, goodPred: Column, rejectCount: Long,
+      checkpointId: String, batchId: Long, cfg: MergeConfig, discard: () => Unit): Unit =
+    if (rejectCount > 0) cfg.deadLetterDir match {
+      case Some(dir) =>
+        JobDescription(batch0.sparkSession, s"merge rejects $checkpointId/$batchId") {
+          batch0.filter(!goodPred).write.mode("overwrite")
+            .parquet(s"$dir/cp=$checkpointId/batch=$batchId")
+        }
+      case None =>
+        discard()
+        throw new IllegalArgumentException(s"batch $checkpointId/$batchId has $rejectCount " +
+          "invalid event(s) (null doc_id, null lsn, or op not in " +
+          s"${Ops.all.mkString("/")}); nothing was written. Set " +
+          "MergeConfig.deadLetterDir to quarantine them and apply the rest.")
+    }
 
   /** Apply one micro-batch to `table`. Idempotent per (checkpointId,
     * batchId): if the ledger already records this batch, the call is a
@@ -289,7 +356,27 @@ object MergeInto {
       batch.schema.fields.filterNot(_.name == "op").toIndexedSeq)
     val evolved = SchemaEvolution.evolve(tableSchema, incomingAsTable)
 
-    // -- 2. ONE pre-pass over the batch: touched buckets, per-bucket raw
+    // -- 2. the merge-on-read trickle path needs a table that holds files,
+    // no column policy (policies need the stored row) and a batch of at
+    // most deltaAppendThreshold raw rows. The row count only picks a plan:
+    // the final state is the same on either path (DeltaAppendSpec). When
+    // the batch's parquet footers give it, a delta batch runs one Spark
+    // job ([[applyDeltaOneJob]]); a lineageDir run keeps the pre-pass,
+    // whose per-bucket raw counts its counters need.
+    val deltaEligible = cfg.deltaAppendThreshold > 0 && cfg.columnPolicy.isEmpty &&
+      current.exists(_.manifests.exists(_.nFiles > 0))
+    def takesDelta(rawRows: Long): Boolean =
+      deltaEligible && rawRows <= cfg.deltaAppendThreshold
+    val knownRows =
+      if (deltaEligible && cfg.lineageDir.isEmpty) footerRows(batch0) else None
+    (current, knownRows) match {
+      case (Some(m), Some(rawRows)) if takesDelta(rawRows) =>
+        return applyDeltaOneJob(table, batch0, goodPred, m, evolved, rawRows,
+          checkpointId, batchId, cfg)
+      case _ => ()
+    }
+
+    // Otherwise ONE pre-pass over the batch: touched buckets, per-bucket raw
     // counts, distinct keys (== post-dedupe rows), LSN ranges, and the
     // reject count in a `_good = false` group. Partial-aggregable,
     // <= 2 x numBuckets result rows.
@@ -304,23 +391,8 @@ object MergeInto {
       .map(r => r.getInt(1) -> ((r.getLong(2), r.getLong(3), r.getLong(4))))
       .toMap // bucket -> (n_raw, minL, maxL)
     val rejectCount = rawStats.filterNot(_.getBoolean(0)).map(_.getLong(2)).sum
-    // Rejects go to the dead-letter directory (the reference's failure
-    // relationship, PontusTinkerPopClient.java:213-258) before the commit,
-    // at an idempotent per-batch path: a crash between the commit and a
-    // later write would skip them on replay. With no directory the batch
-    // fails here, before anything is staged or committed.
-    if (rejectCount > 0) cfg.deadLetterDir match {
-      case Some(dir) =>
-        JobDescription(spark, s"merge rejects $ledgerKey") {
-          batch0.filter(!goodPred).write.mode("overwrite")
-            .parquet(s"$dir/cp=$checkpointId/batch=$batchId")
-        }
-      case None =>
-        throw new IllegalArgumentException(s"batch $ledgerKey has $rejectCount " +
-          "invalid event(s) (null doc_id, null lsn, or op not in " +
-          s"${Ops.all.mkString("/")}); nothing was written. Set " +
-          "MergeConfig.deadLetterDir to quarantine them and apply the rest.")
-    }
+    // nothing is staged yet: a failing batch has nothing to discard
+    routeRejects(batch0, goodPred, rejectCount, checkpointId, batchId, cfg, () => ())
     val touched: Set[Int] = batchStats.keySet
 
     val ledgerEntry = Some(ledgerKey -> cfg.ledgerRetention)
@@ -332,19 +404,16 @@ object MergeInto {
     }
     // conservative broadcast decision: raw count >= deduped count
     val rawRows = batchStats.valuesIterator.map(_._1).sum
+    val isDeltaAppend = takesDelta(rawRows)
 
     // manifest-LIST pruning, hoisted above the dedupe (driver-side
     // metadata only): only the ranges the batch touches are even opened,
     // untouched buckets carry over by reference with no metadata or data
     // I/O — the analog of the reference pushing its filter into the keyed
-    // store, PontusIdGenerator.java:299
-    val touchedFiles = current.map(m => table.filesOf(m, Some(touched))).getOrElse(Nil)
-
-    // merge-on-read trickle path decided EARLY (from the pre-pass stats)
-    // so the dedupe below can pick its plan shape per path
-    val isDeltaAppend = cfg.deltaAppendThreshold > 0 &&
-      rawRows <= cfg.deltaAppendThreshold &&
-      cfg.columnPolicy.isEmpty && touchedFiles.nonEmpty
+    // store, PontusIdGenerator.java:299. A delta batch reads no target.
+    val touchedFiles =
+      if (isDeltaAppend) Nil
+      else current.map(m => table.filesOf(m, Some(touched))).getOrElse(Nil)
 
     // -- 3. dedupe to one winner per key, salted against skew -----------
     // A SMALL batch coalesces to one partition FIRST: SinglePartition
@@ -440,17 +509,9 @@ object MergeInto {
     // the join entirely; the LWW decision defers to scan-time resolution
     // (equivalent outcome for Overwrite-policy columns: the read window's
     // max-lsn winner == the kernel's change-wins-ties rule)
-    val mergedFlat: DataFrame =
-      if (isDeltaAppend) {
-        val isDel = col("op") === Ops.Delete
-        val status = when(isDel, lit("delete"))
-          .when(col("op") === Ops.Insert, lit("insert"))
-          .otherwise(lit("update"))
-        alignTo(deduped, StructType(evolved.fields.toIndexedSeq :+
-            StructField("op", StringType)))
-          .select((col("doc_id") +: dataCols.map(col) :+
-            isDel.as(TOMBSTONE) :+ status.as("_status")): _*)
-      } else if (touchedFiles.isEmpty) {
+    val merged: DataFrame =
+      if (isDeltaAppend) deltaRows(deduped, evolved, numBuckets)
+      else (if (touchedFiles.isEmpty) {
         // nothing to match: the whole batch inserts (or tombstones)
         insertProject(ch)
       } else if (useBroadcast && !mergeSingleTask) {
@@ -487,9 +548,7 @@ object MergeInto {
           tg.as("t").join(ch.as("c"),
             col("t.doc_id") === col("c.doc_id"), "full_outer"),
           hasTExpr = coalesce(col("t._has_target"), lit(false)))
-      }
-
-    val merged = mergedFlat.withColumn("_bucket", LakeTable.bucketExpr(numBuckets))
+      }).withColumn("_bucket", LakeTable.bucketExpr(numBuckets))
 
     // -- 6. write the merged buckets, KEEPING the _status column in the
     // staged files. Table reads are schema-first (explicit StructType), so
@@ -571,8 +630,12 @@ object MergeInto {
           scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
         case None => Map.empty
       }
+      // a delta batch's LSN range is the one it wrote, as on the one-job
+      // path: lineage does not depend on where the batch came from
+      val written = if (isDeltaAppend) lsnRanges(newFiles) else Map.empty[Int, (Long, Long)]
       val lineage = bucketIds.map { b =>
-        val (nRaw, minL, maxL) = batchStats(b)
+        val (nRaw, rawMin, rawMax) = batchStats(b)
+        val (minL, maxL) = written.getOrElse(b, (rawMin, rawMax))
         val (nI, nU, nD, nDn, nS) = statRows.get(b) match {
           case Some(a) => (a(0), a(1), a(2), a(3), a(4))
           case None if wantCounts => (0L, 0L, 0L, 0L, 0L)
@@ -624,5 +687,66 @@ object MergeInto {
         }
         throw commitFailure
     }
+  }
+
+  /** A delta batch whose row count came from its footers, with no
+    * lineageDir: one Spark job, the write.
+    *
+    * The plan is one chain: valid events, the single-task coalesce, the
+    * dedupe and one projection ([[deltaRows]]). Rejects are counted inside
+    * the write by an [[Observation]] on the unfiltered batch: one fixed
+    * `count`, not the per-bucket aggregates the status read-back replaced.
+    * After staging they are quarantined as on the pre-pass path, or, with
+    * no dead-letter directory, the attempt is discarded and the batch
+    * fails before its commit. Lineage LSN ranges come from the staged
+    * footers: `max_lsn` is exact, since a bucket's highest valid LSN
+    * always wins its key, and `min_lsn` is the lowest LSN written.
+    */
+  private def applyDeltaOneJob(
+      table: LakeTable,
+      batch0: DataFrame,
+      goodPred: Column,
+      current: Manifest,
+      evolved: StructType,
+      rawRows: Long,
+      checkpointId: String,
+      batchId: Long,
+      cfg: MergeConfig): MergeResult = {
+    val ledgerKey = s"$checkpointId/$batchId"
+    val rejects = Observation()
+    val valid = batch0.observe(rejects, count(when(!goodPred, lit(1))).as("n"))
+      .filter(goodPred)
+    // one write task either way, as on the pre-pass delta path
+    val single = rawRows <= cfg.singleTaskRows
+    val delta = deltaRows(dedupeLatest(if (single) valid.coalesce(1) else valid,
+      cfg.saltFactor), evolved, current.numBuckets)
+    val version = current.version + 1
+    val (staging, files) = table.stage(if (single) delta else delta.coalesce(1),
+      version, s"merge write $ledgerKey", isDelta = true)
+    val discard = () => table.discardAttempt(staging, version)
+    // the metrics arrive with the write's query-end event
+    val rejectCount =
+      try scala.concurrent.Await.result(rejects.future,
+        scala.concurrent.duration.Duration(60, "s")).getLong(0)
+      catch { case e: java.util.concurrent.TimeoutException => discard(); throw e }
+    routeRejects(batch0, goodPred, rejectCount, checkpointId, batchId, cfg, discard)
+
+    val ledgerEntry = Some(ledgerKey -> cfg.ledgerRetention)
+    if (files.isEmpty) {
+      discard()
+      val m = table.commitNext(Some(current), Set.empty, Nil, evolved.json,
+        current.numBuckets, ledgerEntry)
+      return MergeResult(m.snapshotId, m.version, Nil, skipped = false)
+    }
+    cfg.preCommitHook()
+    val snapshotId = UUID.randomUUID().toString
+    // counters not computed: -1 sentinels, never fake 0s
+    val lineage = lsnRanges(files).toSeq.sortBy(_._1).map { case (b, (lo, hi)) =>
+      graft.model.LineageRow(batchId, b, lo, hi, -1L, -1L, -1L, -1L, snapshotId)
+    }
+    // delta append REMOVES nothing
+    val m = table.commitNext(Some(current), Set.empty, files, evolved.json,
+      current.numBuckets, ledgerEntry, snapshotId)
+    MergeResult(snapshotId, m.version, lineage, skipped = false)
   }
 }

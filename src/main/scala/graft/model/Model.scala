@@ -49,8 +49,12 @@ final case class SeqRow(
   * are exact when the merge ran with `MergeConfig.lineageDir` set, and -1
   * ("not computed") otherwise — computing them costs a post-write
   * read-back job on the per-batch serial path, so only persisted lineage
-  * pays for it. The LSN range fields are always exact (driver-side
-  * pre-pass stats).
+  * pays for it. `max_lsn` is always the highest valid LSN the batch
+  * carried for the bucket. `min_lsn` is the lowest one on the rewrite path
+  * (pre-pass stats); on the merge-on-read delta path it is the lowest LSN
+  * the batch wrote to the bucket (the staged files' footers), after dedupe,
+  * so it can sit above the raw minimum. Either way it does not depend on
+  * where the batch came from.
   */
 final case class LineageRow(
     batch_id: Long,

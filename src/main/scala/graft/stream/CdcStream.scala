@@ -2,19 +2,11 @@ package graft.stream
 
 import graft.merge.{MergeConfig, MergeInto}
 import graft.table.{LakeTable, Maintenance}
-import graft.util.LocalFs
+import graft.util.{BatchFiles, LocalFs}
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.format.converter.ParquetMetadataConverter
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.sql.execution.datasources.FileScanRDD
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
-
-import scala.jdk.CollectionConverters._
 
 /** Configuration of a CDC tail job.
   *
@@ -126,6 +118,15 @@ final case class StreamConfig(
   */
 object CdcStream {
 
+  /** The file source's `maxFileAge`. Its default, 7 days behind the newest
+    * file the source has seen, skips an older segment without a word, and
+    * a CDC feed can publish a segment late or with a preserved mtime. A
+    * century is finite and far from overflowing the source's
+    * `newest - maxFileAge`. The price: the source's in-memory map of seen
+    * files keeps every segment it has seen.
+    */
+  val FeedFileAge = "36500d"
+
   /** Schema of the feed dir (batch-inferred once at start; a CDC schema
     * change is a restart point — the new run re-infers and the MERGE
     * kernel evolves the table). A segment that adds a column while the
@@ -149,6 +150,7 @@ object CdcStream {
     val feed0 = spark.readStream
       .schema(schema)
       .option("maxFilesPerTrigger", cfg.maxFilesPerTrigger)
+      .option("maxFileAge", FeedFileAge)
     val feed1 = cfg.cleanSource.foldLeft(feed0)(_.option("cleanSource", _))
     val feed = cfg.sourceArchiveDir.foldLeft(feed1)(_.option("sourceArchiveDir", _))
       .parquet(cfg.feedDir)
@@ -188,10 +190,8 @@ object CdcStream {
 
   /** Fail when a file of the micro-batch `df` has a column that the
     * stream's `schema` lacks. Reads only the parquet footers of the files
-    * the source already listed for the batch, on the driver: no Spark job,
-    * no listing. `foreachBatch` hands over a `LogicalRDD` over the planned
-    * scan, whose `inputFiles` is empty, so the files are taken from the
-    * scan's `FileScanRDD` in the RDD lineage.
+    * the source already listed for the batch ([[BatchFiles.scanned]]), on
+    * the driver: no Spark job, no listing.
     */
   private def checkNoNewColumns(df: DataFrame, schema: StructType): Unit = {
     val spark = df.sparkSession
@@ -199,22 +199,9 @@ object CdcStream {
     def norm(n: String) = if (caseSensitive) n else n.toLowerCase(java.util.Locale.ROOT)
     val known = schema.fieldNames.map(norm).toSet
     val conf = spark.sparkContext.hadoopConfiguration
-    def scans(rdd: RDD[_]): Seq[FileScanRDD] = rdd match {
-      case f: FileScanRDD => Seq(f)
-      case r => r.dependencies.flatMap(d => scans(d.rdd))
-    }
-    val files = df.queryExecution.logical match {
-      case l: LogicalRDD =>
-        scans(l.rdd).flatMap(_.filePartitions.flatMap(_.files.map(_.filePath.toPath)))
-      case _ => df.inputFiles.toSeq.map(new Path(_))
-    }
+    val files = BatchFiles.scanned(df).getOrElse(df.inputFiles.toSeq.map(new Path(_)))
     files.foreach { f =>
-      // Spark's footer reader: ~0.1 ms a file, where opening a
-      // ParquetFileReader costs milliseconds
-      val names = ParquetFooterReader.readFooter(HadoopInputFile.fromPath(f, conf),
-        ParquetMetadataConverter.SKIP_ROW_GROUPS).getFileMetaData.getSchema.getFields
-        .asScala.map(_.getName)
-      val extra = names.filterNot(n => known(norm(n)))
+      val extra = BatchFiles.footerColumns(conf, f).filterNot(n => known(norm(n)))
       if (extra.nonEmpty) throw new IllegalStateException(
         s"feed segment file $f has column(s) ${extra.mkString(", ")} that the " +
           s"stream schema (${schema.fieldNames.mkString(", ")}) lacks; the " +

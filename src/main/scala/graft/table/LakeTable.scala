@@ -550,6 +550,19 @@ final class LakeTable private (val root: String, val conf: Configuration) {
     (dir, enumerateStagedWithStats(dir, isDelta))
   }
 
+  /** Remove the attempt directory `dir` that [[stage]] made at `version`,
+    * and [[stagingDir]] of `version` once that leaves it empty: for a write
+    * that fails after staging, before its commit. A concurrent attempt's
+    * directory keeps the staging directory in place.
+    */
+  def discardAttempt(dir: String, version: Long): Unit = {
+    val f = fs
+    f.delete(new Path(dir), true)
+    val sd = new Path(stagingDir(version))
+    try if (f.exists(sd) && f.listStatus(sd).isEmpty) f.delete(sd, false): Unit
+    catch { case _: java.io.IOException => () } // not empty any more
+  }
+
   /** Enumerate the parquet files Spark wrote under `dir/_bucket=N/`, with
     * EXACT per-file (rows, lsn min/max) read from the parquet FOOTERS — driver-side, parallel, no Spark job. The
     * footer statistics are what the write itself recorded; harvesting

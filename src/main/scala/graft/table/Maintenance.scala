@@ -258,19 +258,20 @@ object Maintenance {
     }
     val deleted = Seq.newBuilder[String]
     deleted ++= deletedManifests
-    committedStaging.foreach { sd =>
-      val it = fs.listFiles(sd, true)
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.isFile && st.getPath.getName.endsWith(".parquet")) {
-          val p = Path.getPathWithoutSchemeAndAuthority(st.getPath).toString
-          if (!live.contains(p)) {
-            fs.delete(st.getPath, false)
-            deleted += p
-          }
+    // a depth-first listStatus walk, not listFiles: the LocatedFileStatus
+    // that listFiles builds loads each entry's permission, which Hadoop's
+    // local filesystem reads by forking `ls -ld` when libhadoop is absent
+    def sweep(dir: Path): Unit = fs.listStatus(dir).foreach { st =>
+      if (st.isDirectory) sweep(st.getPath)
+      else if (st.isFile && st.getPath.getName.endsWith(".parquet")) {
+        val p = Path.getPathWithoutSchemeAndAuthority(st.getPath).toString
+        if (!live.contains(p)) {
+          fs.delete(st.getPath, false)
+          deleted += p
         }
       }
     }
+    committedStaging.foreach(sweep)
     deleted.result()
   }
 }

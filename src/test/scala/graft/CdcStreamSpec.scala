@@ -181,26 +181,61 @@ class CdcStreamSpec extends SparkSpec {
     assert(asMap(table.read(spark)) === oracleOfSegment0)
   }
 
-  test("a segment holding an unknown op stops the stream with the kernel's error") {
-    val work = tmpDir("stream-bad-op")
-    val feedDir = s"$work/feed"
-    publish(feedDir, 0, segment(0))
-    val seg1 = segment(1)
-    val firstLsn = seg1.agg(min("lsn")).head().getLong(0)
-    publish(feedDir, 1,
-      seg1.withColumn("op", when(col("lsn") === firstLsn, lit("WAT")).otherwise(col("op"))))
-    val applied = mutable.ArrayBuffer.empty[Long]
-    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      CdcStream.runToCompletion(spark, StreamConfig(
-        feedDir = feedDir, tableDir = s"$work/table", checkpointDir = s"$work/cp",
-        checkpointId = "badop", maxFilesPerTrigger = 1,
-        merge = MergeConfig(numBuckets = 4)), (id, _) => applied += id)
+  /** The unknown-op stop, with the crash-free kernel paths as `merge`
+    * selects them: batch 1 goes through the stats pre-pass under a plain
+    * config, and through the one-job delta path under a delta one.
+    */
+  private def unknownOpStops(suffix: String, merge: MergeConfig): Unit =
+    test("a segment holding an unknown op stops the stream with the kernel's error" + suffix) {
+      val work = tmpDir("stream-bad-op")
+      val feedDir = s"$work/feed"
+      publish(feedDir, 0, segment(0))
+      val seg1 = segment(1)
+      val firstLsn = seg1.agg(min("lsn")).head().getLong(0)
+      publish(feedDir, 1,
+        seg1.withColumn("op", when(col("lsn") === firstLsn, lit("WAT")).otherwise(col("op"))))
+      val applied = mutable.ArrayBuffer.empty[Long]
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        CdcStream.runToCompletion(spark, StreamConfig(
+          feedDir = feedDir, tableDir = s"$work/table", checkpointDir = s"$work/cp",
+          checkpointId = "badop", maxFilesPerTrigger = 1,
+          merge = merge), (id, _) => applied += id)
+      }
+      assert(e.getMessage.contains("batch badop/1 has 1 invalid event(s)") &&
+        e.getMessage.contains("MergeConfig.deadLetterDir"), e.getMessage)
+      assert(applied.toSeq === Seq(0L))
+      val table = LakeTable(s"$work/table")
+      assert(!table.currentManifest().isCommitted("badop", 1L))
+      assert(asMap(table.read(spark)) === oracleOfSegment0)
     }
-    assert(e.getMessage.contains("batch badop/1 has 1 invalid event(s)") &&
-      e.getMessage.contains("MergeConfig.deadLetterDir"), e.getMessage)
-    assert(applied.toSeq === Seq(0L))
-    val table = LakeTable(s"$work/table")
-    assert(!table.currentManifest().isCommitted("badop", 1L))
-    assert(asMap(table.read(spark)) === oracleOfSegment0)
+
+  unknownOpStops("", MergeConfig(numBuckets = 4))
+  unknownOpStops(" (one-job delta path)",
+    MergeConfig(numBuckets = 4, deltaAppendThreshold = 1000L))
+
+  test("a segment whose mtime is more than 7 days behind the newest is still merged") {
+    val work = tmpDir("stream-old-seg")
+    val feedDir = s"$work/feed"
+    val events = ChangeGen.generateLocal(FeedConfig(numEvents = 300, numKeys = 300,
+      seed = 5, eventsPerSegment = 100))
+    def seg(n: Int): DataFrame = {
+      import spark.implicits._
+      ChangeGen.projectPhase(events.filter(_.seg == n).toDF(), Phase(0, Long.MaxValue))
+        .drop("seg")
+    }
+    val cfg = StreamConfig(feedDir = feedDir, tableDir = s"$work/table",
+      checkpointDir = s"$work/cp", checkpointId = "old", maxFilesPerTrigger = 1,
+      merge = MergeConfig(numBuckets = 4))
+    publish(feedDir, 0, seg(0))
+    publish(feedDir, 1, seg(1))
+    CdcStream.runToCompletion(spark, cfg)
+    // segment 2 arrives late, its files stamped 8 days before the others
+    publish(feedDir, 2, seg(2))
+    val old = System.currentTimeMillis() - 8L * 24 * 3600 * 1000
+    new java.io.File(s"$feedDir/seg=2").listFiles().foreach(_.setLastModified(old))
+    val got = asMap(CdcStream.runToCompletion(spark, cfg))
+    val want = ChangeGen.oracleFinalState(events)
+      .map { case (k, e) => k -> ((e.tokens.toSeq, e.n_tok.toLong, e.source, e.lsn)) }
+    assert(events.exists(_.seg == 2) && got === want)
   }
 }

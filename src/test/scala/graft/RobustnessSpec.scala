@@ -65,64 +65,89 @@ class RobustnessSpec extends SparkSpec {
   private def ev(lsn: Long, key: String, op: String, tok: Array[Int]) =
     RawEvent(lsn, key, op, tok, if (tok == null) -1 else tok.length, "s", null, 0)
 
-  test("dead-letter: malformed events quarantined, valid ones applied") {
-    val work = tmpDir("lake-dlq")
-    val table = LakeTable(s"$work/t")
-    val cfg = MergeConfig(numBuckets = 4, deadLetterDir = Some(s"$work/dlq"))
-    val good = Seq(ev(1, "a", Ops.Insert, Array(1)), ev(2, "b", Ops.Upsert, Array(2)))
-    val badDf = Seq(
-      (3L, null.asInstanceOf[String], "U", Seq(3), 1, "s"), // null key
-      (4L, "c", "WAT", Seq(4), 1, "s") // unknown op
-    ).toDF("lsn", "doc_id", "op", "tokens", "n_tok", "source")
-    val batch = batchDf(good).unionByName(badDf)
-    val r1 = MergeInto.apply(spark, table, batch, "cp", 0, cfg)
-    assert(!r1.skipped)
-    assert(table.read(spark).count() === 2)
-    val dlq = spark.read.parquet(s"$work/dlq/cp=cp/batch=0")
-    assert(dlq.count() === 2)
-    assert(dlq.filter(col("op") === "WAT").count() === 1)
-    // replay: merge skipped (ledger); quarantine path stays identical
-    val r2 = MergeInto.apply(spark, table, batch, "cp", 0, cfg)
-    assert(r2.skipped)
-    assert(spark.read.parquet(s"$work/dlq/cp=cp/batch=0").count() === 2)
+  /** `df` written to a parquet file and read back: a batch that is one
+    * file scan, whose row count the merge takes from the footers.
+    */
+  private def viaParquet(work: String, df: DataFrame): DataFrame = {
+    val dir = s"$work/batch-${java.util.UUID.randomUUID()}"
+    df.write.parquet(dir)
+    spark.read.parquet(dir)
   }
 
-  test("a fully-invalid batch commits an empty ledger entry, no table change") {
-    val work = tmpDir("lake-dlq2")
-    val table = LakeTable(s"$work/t")
-    val cfg = MergeConfig(numBuckets = 4, deadLetterDir = Some(s"$work/dlq"))
-    MergeInto.apply(spark, table, batchDf(Seq(ev(1, "a", Ops.Insert, Array(1)))), "cp", 0, cfg)
-    val allBad = Seq((9L, null.asInstanceOf[String], "U", Seq(9), 1, "s"))
-      .toDF("lsn", "doc_id", "op", "tokens", "n_tok", "source")
-    val r = MergeInto.apply(spark, table, allBad, "cp", 1, cfg)
-    assert(!r.skipped && r.lineage.isEmpty)
-    assert(table.read(spark).count() === 1)
-    assert(table.committedSnapshot("cp", 1L).isDefined)
-  }
+  /** The three reject cases, run as written (batches built in memory: the
+    * stats pre-pass path) and on the one-job delta path: a table that
+    * already holds a row, a delta threshold, and the batch read from a
+    * parquet file. The assertions are the same on both paths.
+    */
+  private def rejectCases(suffix: String, oneJob: Boolean): Unit = {
+    def cfgOf(c: MergeConfig) = if (oneJob) c.copy(deltaAppendThreshold = 1000L) else c
+    def asBatch(work: String, df: DataFrame) = if (oneJob) viaParquet(work, df) else df
 
-  test("without a dead-letter dir, invalid events fail the batch before anything is written") {
-    val work = tmpDir("lake-reject")
-    val table = LakeTable(s"$work/t")
-    val cfg = MergeConfig(numBuckets = 4)
-    MergeInto.apply(spark, table, batchDf(Seq(ev(1, "a", Ops.Insert, Array(1)))), "cp", 0, cfg)
-    val v0 = table.currentVersion()
-    val bad = Seq(
-      (Some(3L), null.asInstanceOf[String], "U", Seq(3), 1, "s"), // null key
-      (Some(4L), "c", "WAT", Seq(4), 1, "s"), // unknown op
-      (None, "d", "I", Seq(5), 1, "s") // null lsn
-    ).toDF("lsn", "doc_id", "op", "tokens", "n_tok", "source")
-    val batch = batchDf(Seq(ev(2, "b", Ops.Insert, Array(2)))).unionByName(bad)
-    val e = intercept[IllegalArgumentException] {
-      MergeInto.apply(spark, table, batch, "cp", 1, cfg)
+    test("dead-letter: malformed events quarantined, valid ones applied" + suffix) {
+      val work = tmpDir("lake-dlq")
+      val table = LakeTable(s"$work/t")
+      val cfg = cfgOf(MergeConfig(numBuckets = 4, deadLetterDir = Some(s"$work/dlq")))
+      if (oneJob) MergeInto.apply(spark, table,
+        batchDf(Seq(ev(0, "a", Ops.Insert, Array(0)))), "seed", 0, cfg)
+      val good = Seq(ev(1, "a", Ops.Insert, Array(1)), ev(2, "b", Ops.Upsert, Array(2)))
+      val badDf = Seq(
+        (3L, null.asInstanceOf[String], "U", Seq(3), 1, "s"), // null key
+        (4L, "c", "WAT", Seq(4), 1, "s") // unknown op
+      ).toDF("lsn", "doc_id", "op", "tokens", "n_tok", "source")
+      val batch = asBatch(work, batchDf(good).unionByName(badDf))
+      val r1 = MergeInto.apply(spark, table, batch, "cp", 0, cfg)
+      assert(!r1.skipped)
+      assert(table.read(spark).count() === 2)
+      val dlq = spark.read.parquet(s"$work/dlq/cp=cp/batch=0")
+      assert(dlq.count() === 2)
+      assert(dlq.filter(col("op") === "WAT").count() === 1)
+      // replay: merge skipped (ledger); quarantine path stays identical
+      val r2 = MergeInto.apply(spark, table, batch, "cp", 0, cfg)
+      assert(r2.skipped)
+      assert(spark.read.parquet(s"$work/dlq/cp=cp/batch=0").count() === 2)
     }
-    assert(e.getMessage.contains("batch cp/1 has 3 invalid event(s)"), e.getMessage)
-    assert(e.getMessage.contains("MergeConfig.deadLetterDir"), e.getMessage)
-    assert(table.currentVersion() === v0)
-    assert(!new java.io.File(new Path(table.stagingDir(v0 + 1)).toUri.getPath).exists,
-      "nothing may be staged for the next version")
-    assert(table.committedSnapshot("cp", 1L).isEmpty)
-    assert(table.read(spark).select("doc_id").collect().map(_.getString(0)).toSeq === Seq("a"))
+
+    test("a fully-invalid batch commits an empty ledger entry, no table change" + suffix) {
+      val work = tmpDir("lake-dlq2")
+      val table = LakeTable(s"$work/t")
+      val cfg = cfgOf(MergeConfig(numBuckets = 4, deadLetterDir = Some(s"$work/dlq")))
+      MergeInto.apply(spark, table, batchDf(Seq(ev(1, "a", Ops.Insert, Array(1)))), "cp", 0, cfg)
+      val allBad = asBatch(work, Seq((9L, null.asInstanceOf[String], "U", Seq(9), 1, "s"))
+        .toDF("lsn", "doc_id", "op", "tokens", "n_tok", "source"))
+      val r = MergeInto.apply(spark, table, allBad, "cp", 1, cfg)
+      assert(!r.skipped && r.lineage.isEmpty)
+      assert(table.read(spark).count() === 1)
+      assert(table.committedSnapshot("cp", 1L).isDefined)
+    }
+
+    test("without a dead-letter dir, invalid events fail the batch before anything is written" +
+        suffix) {
+      val work = tmpDir("lake-reject")
+      val table = LakeTable(s"$work/t")
+      val cfg = cfgOf(MergeConfig(numBuckets = 4))
+      MergeInto.apply(spark, table, batchDf(Seq(ev(1, "a", Ops.Insert, Array(1)))), "cp", 0, cfg)
+      val v0 = table.currentVersion()
+      val bad = Seq(
+        (Some(3L), null.asInstanceOf[String], "U", Seq(3), 1, "s"), // null key
+        (Some(4L), "c", "WAT", Seq(4), 1, "s"), // unknown op
+        (None, "d", "I", Seq(5), 1, "s") // null lsn
+      ).toDF("lsn", "doc_id", "op", "tokens", "n_tok", "source")
+      val batch = asBatch(work, batchDf(Seq(ev(2, "b", Ops.Insert, Array(2)))).unionByName(bad))
+      val e = intercept[IllegalArgumentException] {
+        MergeInto.apply(spark, table, batch, "cp", 1, cfg)
+      }
+      assert(e.getMessage.contains("batch cp/1 has 3 invalid event(s)"), e.getMessage)
+      assert(e.getMessage.contains("MergeConfig.deadLetterDir"), e.getMessage)
+      assert(table.currentVersion() === v0)
+      assert(!new java.io.File(new Path(table.stagingDir(v0 + 1)).toUri.getPath).exists,
+        "nothing may be staged for the next version")
+      assert(table.committedSnapshot("cp", 1L).isEmpty)
+      assert(table.read(spark).select("doc_id").collect().map(_.getString(0)).toSeq === Seq("a"))
+    }
   }
+
+  rejectCases("", oneJob = false)
+  rejectCases(" (one-job delta path)", oneJob = true)
 
   test("lost CAS race: merge retries against the winner's snapshot") {
     val work = tmpDir("lake-race")

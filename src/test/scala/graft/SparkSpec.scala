@@ -4,6 +4,8 @@ import graft.changegen.{ChangeGen, RawEvent}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.jdk.CollectionConverters._
+
 /** Shared local session for all suites (one JVM-wide session; suites grab
   * it lazily).
   */
@@ -27,6 +29,23 @@ abstract class SparkSpec extends AnyFunSuite {
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Descriptions of the Spark jobs started inside `body`. */
+  def jobDescriptions(body: => Unit): Seq[String] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add(String.valueOf(Option(e.properties)
+          .map(_.getProperty("spark.job.description")).orNull)): Unit
+    }
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    seen.asScala.toSeq
+  }
 
   /** `live` (a table's live rows) holds one row per key, equal in `lsn`
     * and `tokens` to the independent fold of `events`.

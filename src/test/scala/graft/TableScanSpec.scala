@@ -4,7 +4,6 @@ import graft.changegen.{ChangeGen, FeedConfig, Phase, RawEvent}
 import graft.merge.{MergeConfig, MergeInto}
 import graft.table.{LakeTable, Maintenance}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.input_file_name
 
@@ -44,22 +43,6 @@ class TableScanSpec extends SparkSpec {
     val files = table.filesOf(table.currentManifest())
     assert(files.size === 48 && files.count(_.isDelta) === 32)
     table
-  }
-
-  /** Descriptions of the Spark jobs `body` starts. */
-  private def jobDescriptions(body: => Unit): Seq[String] = {
-    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        descs.add(Option(e.properties).flatMap(p =>
-          Option(p.getProperty("spark.job.description"))).getOrElse("")): Unit
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      org.apache.spark.ListenerBusDrain(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    descs.asScala.toSeq
   }
 
   private def assertNoListing(what: String)(body: => Unit): Unit = {
