@@ -1,6 +1,6 @@
 package graft.merge
 
-import graft.model.{Ops, SchemaEvolution, Schemas}
+import graft.model.{LineageRow, Ops, SchemaEvolution, Schemas}
 import graft.table.{FileEntry, LakeTable, Manifest}
 import graft.util.{BatchFiles, JobDescription, LocalFs}
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
@@ -14,7 +14,7 @@ import java.util.UUID
 final case class MergeResult(
     snapshotId: String,
     version: Long,
-    lineage: Seq[graft.model.LineageRow],
+    lineage: Seq[LineageRow],
     skipped: Boolean)
 
 /** Per-column update policy — the reference's declarative `updatereq`
@@ -94,17 +94,19 @@ object ColumnPolicy {
   *                     either way: on the rewrite path from the pre-pass
   *                     stats (the batch's raw LSN range per bucket), on the
   *                     delta path from the staged files' footers (`max_lsn`
-  *                     the same, `min_lsn` the lowest LSN written). A
-  *                     lineageDir run always takes the pre-pass, so a delta
-  *                     batch under it runs that job too.
+  *                     the same, `min_lsn` the lowest LSN written). A delta
+  *                     batch's counters take its per-bucket raw counts from
+  *                     the stats pre-pass, which a lineageDir run therefore
+  *                     always pays, and its statuses from the same read-back.
   * @param deadLetterDir quarantine for the events the kernel cannot apply:
   *                     a null `doc_id`, a null `lsn`, or an `op` outside
   *                     [[graft.model.Ops.all]]. They are written to
   *                     `<dir>/cp=<checkpointId>/batch=<batchId>` before the
   *                     commit (idempotent overwrite) and the rest of the
   *                     batch is applied. None (default) fails such a batch
-  *                     before its commit, with nothing left staged (a
-  *                     one-job delta batch removes the attempt it staged).
+  *                     before its commit, with nothing left staged (a delta
+  *                     batch counts its rejects in the write and removes the
+  *                     attempt it staged).
   */
 final case class MergeConfig(
     numBuckets: Int = 32,
@@ -134,14 +136,16 @@ final case class MergeConfig(
       * proves equivalence batch-size-independently). 0 (default) = off.
       * Ignored when `columnPolicy` is non-empty (policies need the
       * stored row) and while the table holds no file (the bootstrap).
-      * The raw row count comes from the batch's parquet footers when the
-      * batch is one file scan (a stream micro-batch, `spark.read.parquet`);
-      * such a delta batch with no `lineageDir` runs one Spark job, the
-      * write, with its rejects counted inside it. Any other batch counts
-      * its rows in the pre-pass. Lineage for delta batches is op-typed (an
-      * I counts as insert, a U/UPSERT as update, a D as delete) since
-      * match status is unknown without reading the target, and its LSN
-      * ranges are those of the files written (see `lineageDir`).
+      * Every delta batch takes one path: one write job with its rejects
+      * counted inside it. The raw row count that picks it comes from the
+      * batch's parquet footers when the batch is one file scan (a stream
+      * micro-batch, `spark.read.parquet`), so such a batch with no
+      * `lineageDir` runs that one job and nothing else; any other batch
+      * counts its rows in the stats pre-pass first. Lineage for delta
+      * batches is op-typed (an I counts as insert, a U/UPSERT as update, a
+      * D as delete) since match status is unknown without reading the
+      * target, and its LSN ranges are those of the files written (see
+      * `lineageDir`).
       */
     deltaAppendThreshold: Long = 0L,
     /** Row-count ceiling for the SINGLE-TASK merge plan (round 6): when
@@ -271,6 +275,30 @@ object MergeInto {
     BatchFiles.scanned(batch).flatMap(files => scala.util.Try(BatchFiles.footerRows(
       batch.sparkSession.sparkContext.hadoopConfiguration, files)).toOption)
 
+  /** What the stats pre-pass found: per bucket the batch's valid events
+    * touch, their raw count and LSN range, and the count of invalid events.
+    */
+  private final case class BatchStats(buckets: Map[Int, (Long, Long, Long)], rejects: Long) {
+    def rawRows: Long = buckets.valuesIterator.map(_._1).sum
+  }
+
+  /** The stats pre-pass: ONE job over the batch, grouped by validity and
+    * bucket. Partial-aggregable, <= 2 x numBuckets result rows.
+    */
+  private def prePass(batch0: DataFrame, goodPred: Column, numBuckets: Int,
+      ledgerKey: String): BatchStats = {
+    val rows = JobDescription(batch0.sparkSession, s"merge stats $ledgerKey") {
+      batch0
+        .groupBy(goodPred.as("_good"), LakeTable.bucketExpr(numBuckets).as("_bucket"))
+        .agg(count(lit(1)).as("n_raw"),
+          min("lsn").as("minL"), max("lsn").as("maxL"))
+        .collect()
+    }
+    val (good, bad) = rows.partition(_.getBoolean(0))
+    BatchStats(good.map(r => r.getInt(1) -> ((r.getLong(2), r.getLong(3), r.getLong(4)))).toMap,
+      bad.map(_.getLong(2)).sum)
+  }
+
   /** Rejects go to the dead-letter directory (the reference's failure
     * relationship, PontusTinkerPopClient.java:213-258) before the commit,
     * at an idempotent per-batch path: a crash between the commit and a
@@ -291,6 +319,34 @@ object MergeInto {
           "invalid event(s) (null doc_id, null lsn, or op not in " +
           s"${Ops.all.mkString("/")}); nothing was written. Set " +
           "MergeConfig.deadLetterDir to quarantine them and apply the rest.")
+    }
+
+  /** What one merge attempt staged: its attempt directory (None when the
+    * batch held no valid event and nothing was written), the staged files,
+    * the buckets whose parent files they replace, and per written bucket
+    * the LSN range its lineage row reports.
+    */
+  private final case class Staged(dir: Option[String], files: Seq[FileEntry],
+      replaced: Set[Int], lsnRanges: Map[Int, (Long, Long)])
+
+  /** One lineage row per written bucket, with its LSN range from
+    * `ranges`. `counts` (per bucket, the valid raw rows and the `_status`
+    * read-back: insert, update, delete, delete_noop, stale) makes the four
+    * counters exact; without it they carry -1 ("not computed", never a
+    * silent 0).
+    */
+  private def lineageRows(batchId: Long, snapshotId: String,
+      ranges: Map[Int, (Long, Long)],
+      counts: Option[(Map[Int, Long], Map[Int, Array[Long]])]): Seq[LineageRow] =
+    ranges.toSeq.sortBy(_._1).map { case (b, (minL, maxL)) =>
+      val (nI, nU, nD, nDedup) = counts match {
+        case Some((raw, statuses)) =>
+          val s = statuses.getOrElse(b, Array.fill(5)(0L))
+          // rows that carried a change = the batch's distinct keys
+          (s(0), s(1), s(2) + s(3), raw(b) - s.sum)
+        case None => (-1L, -1L, -1L, -1L)
+      }
+      LineageRow(batchId, b, minL, maxL, nI, nU, nD, nDedup, snapshotId)
     }
 
   /** Apply one micro-batch to `table`. Idempotent per (checkpointId,
@@ -330,7 +386,6 @@ object MergeInto {
     // from both sides of the split.
     val goodPred = col("doc_id").isNotNull && col("lsn").isNotNull &&
       coalesce(col("op").isInCollection(Ops.all), lit(false))
-    val batch = batch0.filter(goodPred)
 
     val current = table.currentManifestOpt()
 
@@ -353,87 +408,207 @@ object MergeInto {
       .orElse(cfg.initialSchema)
       .getOrElse(Schemas.seqTable)
     val incomingAsTable = StructType(
-      batch.schema.fields.filterNot(_.name == "op").toIndexedSeq)
+      batch0.schema.fields.filterNot(_.name == "op").toIndexedSeq)
     val evolved = SchemaEvolution.evolve(tableSchema, incomingAsTable)
 
-    // -- 2. the merge-on-read trickle path needs a table that holds files,
-    // no column policy (policies need the stored row) and a batch of at
-    // most deltaAppendThreshold raw rows. The row count only picks a plan:
-    // the final state is the same on either path (DeltaAppendSpec). When
-    // the batch's parquet footers give it, a delta batch runs one Spark
-    // job ([[applyDeltaOneJob]]); a lineageDir run keeps the pre-pass,
-    // whose per-bucket raw counts its counters need.
+    // -- 2. pick the path. The merge-on-read trickle path needs a table
+    // that holds files, no column policy (policies need the stored row)
+    // and a batch of at most deltaAppendThreshold raw rows. The row count
+    // only picks a plan: the final state is the same on either path
+    // (DeltaAppendSpec). It comes from the batch's parquet footers when
+    // the batch is one file scan, else from the stats pre-pass, which runs
+    // only when its result is needed: for a rewrite, for a row count the
+    // footers cannot give, and for exact lineage counters.
+    lazy val stats = prePass(batch0, goodPred, numBuckets, ledgerKey)
     val deltaEligible = cfg.deltaAppendThreshold > 0 && cfg.columnPolicy.isEmpty &&
       current.exists(_.manifests.exists(_.nFiles > 0))
-    def takesDelta(rawRows: Long): Boolean =
-      deltaEligible && rawRows <= cfg.deltaAppendThreshold
-    val knownRows =
-      if (deltaEligible && cfg.lineageDir.isEmpty) footerRows(batch0) else None
-    (current, knownRows) match {
-      case (Some(m), Some(rawRows)) if takesDelta(rawRows) =>
-        return applyDeltaOneJob(table, batch0, goodPred, m, evolved, rawRows,
+    val rawRows = (if (deltaEligible) footerRows(batch0) else None).getOrElse(stats.rawRows)
+    val version = current.map(_.version + 1).getOrElse(0L)
+    val staged =
+      if (deltaEligible && rawRows <= cfg.deltaAppendThreshold)
+        stageDelta(table, batch0, goodPred, evolved, numBuckets, rawRows, version,
           checkpointId, batchId, cfg)
-      case _ => ()
-    }
-
-    // Otherwise ONE pre-pass over the batch: touched buckets, per-bucket raw
-    // counts, distinct keys (== post-dedupe rows), LSN ranges, and the
-    // reject count in a `_good = false` group. Partial-aggregable,
-    // <= 2 x numBuckets result rows.
-    val rawStats = JobDescription(spark, s"merge stats $ledgerKey") {
-      batch0
-        .groupBy(goodPred.as("_good"), LakeTable.bucketExpr(numBuckets).as("_bucket"))
-        .agg(count(lit(1)).as("n_raw"),
-          min("lsn").as("minL"), max("lsn").as("maxL"))
-        .collect()
-    }
-    val batchStats = rawStats.filter(_.getBoolean(0))
-      .map(r => r.getInt(1) -> ((r.getLong(2), r.getLong(3), r.getLong(4))))
-      .toMap // bucket -> (n_raw, minL, maxL)
-    val rejectCount = rawStats.filterNot(_.getBoolean(0)).map(_.getLong(2)).sum
-    // nothing is staged yet: a failing batch has nothing to discard
-    routeRejects(batch0, goodPred, rejectCount, checkpointId, batchId, cfg, () => ())
-    val touched: Set[Int] = batchStats.keySet
+      else stageRewrite(spark, table, batch0, goodPred, current, tableSchema, evolved,
+        numBuckets, stats, version, checkpointId, batchId, cfg)
 
     val ledgerEntry = Some(ledgerKey -> cfg.ledgerRetention)
-    if (touched.isEmpty) {
-      // empty batch: still record the ledger entry (exactly-once bookkeeping)
-      val m = table.commitNext(current, Set.empty, Nil, evolved.json, numBuckets,
-        ledgerEntry)
-      return MergeResult(m.snapshotId, m.version, Nil, skipped = false)
+    val staging = staged.dir match {
+      case Some(dir) if staged.files.nonEmpty => dir
+      case dir =>
+        // empty batch: still record the ledger entry (exactly-once bookkeeping)
+        dir.foreach(table.discardAttempt(_, version))
+        val m = table.commitNext(current, Set.empty, Nil, evolved.json, numBuckets,
+          ledgerEntry)
+        return MergeResult(m.snapshotId, m.version, Nil, skipped = false)
     }
+
+    // -- 3. per-bucket STATUS counts (insert/update/delete/noop/stale)
+    // for the lineage metrics — the one thing footers cannot provide.
+    // Both paths keep the `_status` column in the staged files: table
+    // reads are schema-first (explicit StructType), so the extra column is
+    // pruned for free on every later scan; its cost is ~1
+    // dictionary-encoded byte/row once. The read-back job runs ASYNC so it
+    // overlaps manifest composition (both are per-batch latency with no
+    // data dependency) and joins before the CAS via the finishLineage
+    // thunk below. Layout: columnar scan of 2 columns of the just-written
+    // output, fixed plan shape (codegen-cache-friendly across batches).
+    // Two riding-the-write designs were measured and REJECTED in favor of
+    // it — (a) 8 x numBuckets flat conditional aggregates in an
+    // Observation: a 256-expression CollectMetrics re-analyzed +
+    // janino-recompiled every batch, ~5 s serial driver time (round 2);
+    // (b) ONE typed-Aggregator Observation: O(1) analysis, but the
+    // untyped-UDAF per-row update runs on EVERY merged row inside the
+    // write stage and CollectMetrics breaks whole-stage codegen around it
+    // — ~1.9 s/batch SLOWER than the read-back on identical 255k-row
+    // batches (round 5, A/B in BENCH.md).
+    val readbackSchema = StructType(Seq(
+      StructField("_status", StringType), StructField("_bucket", IntegerType)))
+    // round 6: the read-back runs ONLY when lineageDir stores the
+    // counters — for every other caller it was a pure-observability Spark
+    // job on the per-batch serial path
+    val statF: Option[scala.concurrent.Future[Map[Int, Array[Long]]]] =
+      if (cfg.lineageDir.isEmpty) None
+      else Some {
+        import scala.concurrent.{ExecutionContext, Future}
+        implicit val ec: ExecutionContext = ExecutionContext.global
+        // a pool thread: its description is set here, not inherited
+        Future(JobDescription(spark, s"merge status read-back $ledgerKey") {
+          spark.read.schema(readbackSchema).parquet(staging)
+            .groupBy(col("_bucket"))
+            .agg(
+              sum(when(col("_status") === "insert", 1L).otherwise(0L)).as("nI"),
+              sum(when(col("_status") === "update", 1L).otherwise(0L)).as("nU"),
+              sum(when(col("_status") === "delete", 1L).otherwise(0L)).as("nD"),
+              sum(when(col("_status") === "delete_noop", 1L).otherwise(0L)).as("nDn"),
+              sum(when(col("_status") === "stale", 1L).otherwise(0L)).as("nS"))
+            .collect()
+            .map(r => r.getInt(0) -> Array(r.getLong(1), r.getLong(2),
+              r.getLong(3), r.getLong(4), r.getLong(5)))
+            .toMap
+        })
+      }
+
+    val snapshotId = UUID.randomUUID().toString
+    // Runs after manifest composition, immediately before the CAS: the
+    // per-bucket raw counts (the pre-pass, still to run on a delta batch
+    // whose footers gave its size), the awaited status read-back, the
+    // lineage rows, then the lineage parquet (deterministic path +
+    // overwrite => exactly-once metrics; a crash on either side of the
+    // commit replays to identical content).
+    def finishLineage(): Seq[LineageRow] = {
+      val counts = statF.map(f => (stats.buckets.view.mapValues(_._1).toMap,
+        scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)))
+      val lineage = lineageRows(batchId, snapshotId, staged.lsnRanges, counts)
+      // driver-side parquet write ([[LineageWriter]]): a handful of rows
+      // per batch doesn't justify a Spark job on the per-batch serial path
+      cfg.lineageDir.foreach { dir =>
+        LineageWriter.write(spark.sparkContext.hadoopConfiguration, dir,
+          checkpointId, batchId, lineage)
+      }
+      lineage
+    }
+
+    cfg.preCommitHook()
+    // forced by the commit after manifest composition, just before the CAS
+    lazy val lineage = finishLineage()
+    try {
+      val m = table.commitNext(current, staged.replaced, staged.files, evolved.json,
+        numBuckets, ledgerEntry, snapshotId, beforeCas = () => lineage: Unit)
+      MergeResult(snapshotId, m.version, lineage, skipped = false)
+    } catch {
+      case commitFailure: Throwable =>
+        // the commit path can throw BEFORE finishLineage joins the async
+        // status read-back (e.g. a manifest-compose error or a lost CAS):
+        // drain the future here so no unobserved Spark job outlives the
+        // batch with its own failure silently discarded
+        statF.foreach { f =>
+          try scala.concurrent.Await.ready(
+            f, scala.concurrent.duration.Duration(60, "s")): Unit
+          catch { case _: Throwable => () }
+        }
+        throw commitFailure
+    }
+  }
+
+  /** The merge-on-read path: the batch's winners are appended as delta
+    * files to the buckets they hash to, with no target read and no join;
+    * readers resolve last-writer-wins at scan time (the same outcome for
+    * Overwrite-policy columns: the read window's max-lsn winner is the
+    * rewrite's change-wins-ties rule). The plan is one chain: valid
+    * events, the single-task coalesce, the dedupe and one projection
+    * ([[deltaRows]]), written by ONE task (coalesce(1), not
+    * repartition(1, _bucket), which would add a full Exchange).
+    *
+    * Rejects are counted inside the write by an [[Observation]] on the
+    * unfiltered batch: one fixed `count`, not the per-bucket aggregates
+    * the status read-back replaced. After staging they are quarantined,
+    * or, with no dead-letter directory, the attempt is discarded and the
+    * batch fails before its commit. Lineage LSN ranges come from the
+    * staged footers: `max_lsn` is exact, since a bucket's highest valid
+    * LSN always wins its key, and `min_lsn` is the lowest LSN written.
+    * Nothing is replaced: the delta entries join their buckets' files.
+    */
+  private def stageDelta(table: LakeTable, batch0: DataFrame, goodPred: Column,
+      evolved: StructType, numBuckets: Int, rawRows: Long, version: Long,
+      checkpointId: String, batchId: Long, cfg: MergeConfig): Staged = {
+    val rejects = Observation()
+    val valid = batch0.observe(rejects, count(when(!goodPred, lit(1))).as("n"))
+      .filter(goodPred)
+    val single = rawRows <= cfg.singleTaskRows
+    val delta = deltaRows(dedupeLatest(if (single) valid.coalesce(1) else valid,
+      cfg.saltFactor), evolved, numBuckets)
+    val (dir, files) = table.stage(if (single) delta else delta.coalesce(1),
+      version, s"merge write $checkpointId/$batchId", isDelta = true)
+    val discard = () => table.discardAttempt(dir, version)
+    // the metrics arrive with the write's query-end event
+    val rejectCount =
+      try scala.concurrent.Await.result(rejects.future,
+        scala.concurrent.duration.Duration(60, "s")).getLong(0)
+      catch { case e: java.util.concurrent.TimeoutException => discard(); throw e }
+    routeRejects(batch0, goodPred, rejectCount, checkpointId, batchId, cfg, discard)
+    Staged(Some(dir), files, Set.empty, lsnRanges(files))
+  }
+
+  /** The rewrite path: MERGE the deduped batch into the touched buckets of
+    * the target on the key and stage their new files, which replace the
+    * parent's files of those buckets. Rejects are routed before anything
+    * is staged. Lineage LSN ranges are the batch's raw ranges from the
+    * pre-pass.
+    */
+  private def stageRewrite(spark: SparkSession, table: LakeTable, batch0: DataFrame,
+      goodPred: Column, current: Option[Manifest], tableSchema: StructType,
+      evolved: StructType, numBuckets: Int, stats: BatchStats, version: Long,
+      checkpointId: String, batchId: Long, cfg: MergeConfig): Staged = {
+    // nothing is staged yet: a failing batch has nothing to discard
+    routeRejects(batch0, goodPred, stats.rejects, checkpointId, batchId, cfg, () => ())
+    val touched: Set[Int] = stats.buckets.keySet
+    if (touched.isEmpty) return Staged(None, Nil, Set.empty, Map.empty)
+    val batch = batch0.filter(goodPred)
     // conservative broadcast decision: raw count >= deduped count
-    val rawRows = batchStats.valuesIterator.map(_._1).sum
-    val isDeltaAppend = takesDelta(rawRows)
+    val rawRows = stats.rawRows
 
     // manifest-LIST pruning, hoisted above the dedupe (driver-side
     // metadata only): only the ranges the batch touches are even opened,
     // untouched buckets carry over by reference with no metadata or data
     // I/O — the analog of the reference pushing its filter into the keyed
-    // store, PontusIdGenerator.java:299. A delta batch reads no target.
-    val touchedFiles =
-      if (isDeltaAppend) Nil
-      else current.map(m => table.filesOf(m, Some(touched))).getOrElse(Nil)
+    // store, PontusIdGenerator.java:299.
+    val touchedFiles = current.map(m => table.filesOf(m, Some(touched))).getOrElse(Nil)
 
-    // -- 3. dedupe to one winner per key, salted against skew -----------
+    // -- dedupe to one winner per key, salted against skew --------------
     // A SMALL batch coalesces to one partition FIRST: SinglePartition
-    // satisfies the window's clustering requirement (and, on the rewrite
-    // path, the merge join's), so dedupe+join+project+sort+write all plan
-    // as ONE exchange-free single-task stage (guide §2.4) — one Spark job
-    // per batch instead of 3-4 (window exchange, broadcast builds, keys
-    // scan). Decided from sizes the driver already has: the stats
-    // pre-pass gives rawRows, the manifest file stats give the touched
-    // buckets' stored rows. Batches above `singleTaskRows` keep the
-    // parallel plans unchanged.
+    // satisfies the window's and the merge join's clustering requirement,
+    // so dedupe+join+project+sort+write all plan as ONE exchange-free
+    // single-task stage (guide §2.4) — one Spark job per batch instead of
+    // 3-4 (window exchange, broadcast builds, keys scan). Decided from
+    // sizes the driver already has: the stats pre-pass gives rawRows, the
+    // manifest file stats give the touched buckets' stored rows. Batches
+    // above `singleTaskRows` keep the parallel plans unchanged.
     val targetRows = touchedFiles.map(_.rows).sum
-    val deltaSingleTask = isDeltaAppend && rawRows <= cfg.singleTaskRows
-    val mergeSingleTask = !isDeltaAppend &&
-      rawRows + targetRows <= cfg.singleTaskRows
-    val deduped = dedupeLatest(
-      if (deltaSingleTask || mergeSingleTask) batch.coalesce(1) else batch,
+    val singleTask = rawRows + targetRows <= cfg.singleTaskRows
+    val deduped = dedupeLatest(if (singleTask) batch.coalesce(1) else batch,
       cfg.saltFactor)
 
-    // -- 4. read ONLY the touched buckets of the target -----------------
+    // -- read ONLY the touched buckets of the target --------------------
     // (touchedFiles hoisted above the dedupe — see the pruning note there)
     val storedOld = storedSchema(tableSchema)
     val storedNew = storedSchema(evolved)
@@ -445,9 +620,9 @@ object MergeInto {
     // the touched buckets carry deltas
     def scanTarget(): DataFrame =
       alignTo(table.scanResolved(spark, storedOld, touchedFiles,
-        singlePartition = mergeSingleTask), storedNew)
+        singlePartition = singleTask), storedNew)
 
-    // -- 5. MERGE join on the key ---------------------------------------
+    // -- MERGE join on the key ------------------------------------------
     val dataCols = evolved.fieldNames.filterNot(_ == "doc_id").toIndexedSeq
     val ch = alignTo(
       deduped.withColumn("_has_change", lit(true)),
@@ -505,248 +680,56 @@ object MergeInto {
     }
 
     val useBroadcast = rawRows <= cfg.broadcastThreshold
-    // merge-on-read trickle path: append deltas, skip the target read and
-    // the join entirely; the LWW decision defers to scan-time resolution
-    // (equivalent outcome for Overwrite-policy columns: the read window's
-    // max-lsn winner == the kernel's change-wins-ties rule)
-    val merged: DataFrame =
-      if (isDeltaAppend) deltaRows(deduped, evolved, numBuckets)
-      else (if (touchedFiles.isEmpty) {
-        // nothing to match: the whole batch inserts (or tombstones)
-        insertProject(ch)
-      } else if (useBroadcast && !mergeSingleTask) {
-        // Broadcast MERGE: the big target side NEVER shuffles. Spark's
-        // BroadcastHashJoin cannot build a full-outer join, so decompose:
-        //   (a) target LEFT OUTER broadcast(changes)   — matched + kept
-        //   (b) changes LEFT ANTI broadcast(matchedKeys) — pure inserts,
-        //       where matchedKeys comes from a keys-only (column-pruned)
-        //       scan of the touched files semi-joined with the change keys
-        val tg = scanTarget().withColumn("_has_target", lit(true))
-        val leftPart = matchProject(
-          tg.as("t").join(broadcast(ch).as("c"),
-            col("t.doc_id") === col("c.doc_id"), "left_outer"),
-          hasTExpr = lit(true))
-        val targetKeys = table.scanFiles(spark, storedOld, touchedFiles).select("doc_id")
-        val matchedKeys = targetKeys
-          .join(broadcast(deduped.select("doc_id")), Seq("doc_id"), "left_semi")
-        val insertPart = insertProject(
-          ch.join(broadcast(matchedKeys), Seq("doc_id"), "left_anti"))
-        leftPart.unionByName(insertPart)
-      } else {
-        // full-outer sort-merge join on the key. A SMALL batch
-        // (mergeSingleTask) has both sides coalesced to one partition
-        // already (the dedupe input above and scanTarget): SinglePartition
-        // is co-partitioned with itself, so the join plans with ZERO
-        // exchanges and the whole merge is one single-task Spark job. A
-        // large batch shuffles (AQE handles skewed partitions). Note: a
-        // bucket-aligned variant (repartition both sides on _bucket, join
-        // on (_bucket, doc_id), write without shuffle) was measured 2.3x
-        // SLOWER at local scale — manual repartition disables AQE
-        // coalescing and loses the window exchange reuse; see BENCH.md.
-        val tg = scanTarget().withColumn("_has_target", lit(true))
-        matchProject(
-          tg.as("t").join(ch.as("c"),
-            col("t.doc_id") === col("c.doc_id"), "full_outer"),
-          hasTExpr = coalesce(col("t._has_target"), lit(false)))
-      }).withColumn("_bucket", LakeTable.bucketExpr(numBuckets))
+    val merged: DataFrame = (if (touchedFiles.isEmpty) {
+      // nothing to match: the whole batch inserts (or tombstones)
+      insertProject(ch)
+    } else if (useBroadcast && !singleTask) {
+      // Broadcast MERGE: the big target side NEVER shuffles. Spark's
+      // BroadcastHashJoin cannot build a full-outer join, so decompose:
+      //   (a) target LEFT OUTER broadcast(changes)   — matched + kept
+      //   (b) changes LEFT ANTI broadcast(matchedKeys) — pure inserts,
+      //       where matchedKeys comes from a keys-only (column-pruned)
+      //       scan of the touched files semi-joined with the change keys
+      val tg = scanTarget().withColumn("_has_target", lit(true))
+      val leftPart = matchProject(
+        tg.as("t").join(broadcast(ch).as("c"),
+          col("t.doc_id") === col("c.doc_id"), "left_outer"),
+        hasTExpr = lit(true))
+      val targetKeys = table.scanFiles(spark, storedOld, touchedFiles).select("doc_id")
+      val matchedKeys = targetKeys
+        .join(broadcast(deduped.select("doc_id")), Seq("doc_id"), "left_semi")
+      val insertPart = insertProject(
+        ch.join(broadcast(matchedKeys), Seq("doc_id"), "left_anti"))
+      leftPart.unionByName(insertPart)
+    } else {
+      // full-outer sort-merge join on the key. A SMALL batch (singleTask)
+      // has both sides coalesced to one partition already (the dedupe
+      // input above and scanTarget): SinglePartition is co-partitioned
+      // with itself, so the join plans with ZERO exchanges and the whole
+      // merge is one single-task Spark job. A large batch shuffles (AQE
+      // handles skewed partitions). Note: a bucket-aligned variant
+      // (repartition both sides on _bucket, join on (_bucket, doc_id),
+      // write without shuffle) was measured 2.3x SLOWER at local scale —
+      // manual repartition disables AQE coalescing and loses the window
+      // exchange reuse; see BENCH.md.
+      val tg = scanTarget().withColumn("_has_target", lit(true))
+      matchProject(
+        tg.as("t").join(ch.as("c"),
+          col("t.doc_id") === col("c.doc_id"), "full_outer"),
+        hasTExpr = coalesce(col("t._has_target"), lit(false)))
+    }).withColumn("_bucket", LakeTable.bucketExpr(numBuckets))
 
-    // -- 6. write the merged buckets, KEEPING the _status column in the
-    // staged files. Table reads are schema-first (explicit StructType), so
-    // the extra column is pruned for free on every later scan; its cost is
-    // ~1 dictionary-encoded byte/row once. The column exists to feed the
-    // per-bucket status READ-BACK at step 8 (see there for the two
-    // riding-the-write designs that were measured and rejected).
-    val bucketIds = touched.toSeq.sorted
-    val nextVersion = current.map(_.version + 1).getOrElse(0L)
-    // Write placement, one file per touched bucket on every path:
-    // - single-task plans: the input is already one partition.
-    // - a trickle delta batch writes ONE task: coalesce(1), not
-    //   repartition(1, _bucket), which would add a full Exchange (and
-    //   stage) to move every row where coalesce reaches narrowly.
-    // - the parallel rewrite hashes on _bucket into min(touched buckets,
-    //   task slots) tasks (LakeTable.repartitionByBucket): a task writes
-    //   several buckets in turn, sorted by _bucket, and never splits one.
+    // -- write the merged buckets, one file per touched bucket: a
+    // single-task plan's input is already one partition; the parallel
+    // rewrite hashes on _bucket into min(touched buckets, task slots)
+    // tasks (LakeTable.repartitionByBucket): a task writes several buckets
+    // in turn, sorted by _bucket, and never splits one. Each staged file's
+    // manifest entry carries exact pruning stats (rows, lsn min/max) from
+    // its parquet footer, read with no Spark job.
     val placed =
-      if (deltaSingleTask || mergeSingleTask) merged
-      else if (isDeltaAppend) merged.coalesce(1)
-      else LakeTable.repartitionByBucket(merged, touched.size)
-    // -- 7. each staged file's manifest entry carries exact pruning stats
-    // (rows, lsn min/max) from its parquet footer, read with no Spark job
-    val (staging, newFiles) = table.stage(placed, nextVersion,
-      s"merge write $ledgerKey", isDelta = isDeltaAppend)
-
-    // -- 8. per-bucket STATUS counts (insert/update/delete/noop/stale)
-    // for the lineage metrics — the one thing footers cannot provide.
-    // The read-back job runs ASYNC so it overlaps manifest composition
-    // (both are per-batch latency with no data dependency) and joins
-    // before the CAS via the finishLineage thunk below. Layout: columnar
-    // scan of 2 columns of the just-written output, fixed plan shape
-    // (codegen-cache-friendly across batches). Two riding-the-write
-    // designs were measured and REJECTED in favor of it — (a) 8 x
-    // numBuckets flat conditional aggregates in an Observation: a
-    // 256-expression CollectMetrics re-analyzed + janino-recompiled
-    // every batch, ~5 s serial driver time (round 2); (b) ONE
-    // typed-Aggregator Observation: O(1) analysis, but the untyped-UDAF
-    // per-row update runs on EVERY merged row inside the write stage and
-    // CollectMetrics breaks whole-stage codegen around it — ~1.9 s/batch
-    // SLOWER than the read-back on identical 255k-row batches (round 5,
-    // A/B in BENCH.md).
-    val readbackSchema = StructType(Seq(
-      StructField("_status", StringType), StructField("_bucket", IntegerType)))
-    // round 6: the read-back runs ONLY when lineageDir stores the
-    // counters — for every other caller it was a pure-observability Spark
-    // job on the per-batch serial path
-    val wantCounts = cfg.lineageDir.isDefined
-    val statF: Option[scala.concurrent.Future[Map[Int, Array[Long]]]] =
-      if (!wantCounts) None
-      else Some {
-        import scala.concurrent.{ExecutionContext, Future}
-        implicit val ec: ExecutionContext = ExecutionContext.global
-        // a pool thread: its description is set here, not inherited
-        Future(JobDescription(spark, s"merge status read-back $ledgerKey") {
-          spark.read.schema(readbackSchema).parquet(staging)
-            .groupBy(col("_bucket"))
-            .agg(
-              sum(when(col("_status") === "insert", 1L).otherwise(0L)).as("nI"),
-              sum(when(col("_status") === "update", 1L).otherwise(0L)).as("nU"),
-              sum(when(col("_status") === "delete", 1L).otherwise(0L)).as("nD"),
-              sum(when(col("_status") === "delete_noop", 1L).otherwise(0L)).as("nDn"),
-              sum(when(col("_status") === "stale", 1L).otherwise(0L)).as("nS"))
-            .collect()
-            .map(r => r.getInt(0) -> Array(r.getLong(1), r.getLong(2),
-              r.getLong(3), r.getLong(4), r.getLong(5)))
-            .toMap
-        })
-      }
-
-    val snapshotId = UUID.randomUUID().toString
-    // Runs after manifest composition, immediately before the CAS: await
-    // the status read-back, build the lineage rows, land the lineage
-    // parquet (deterministic path + overwrite => exactly-once metrics; a
-    // crash on either side of the commit replays to identical content).
-    def finishLineage(): Seq[graft.model.LineageRow] = {
-      val statRows: Map[Int, Array[Long]] = statF match {
-        case Some(f) =>
-          scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
-        case None => Map.empty
-      }
-      // a delta batch's LSN range is the one it wrote, as on the one-job
-      // path: lineage does not depend on where the batch came from
-      val written = if (isDeltaAppend) lsnRanges(newFiles) else Map.empty[Int, (Long, Long)]
-      val lineage = bucketIds.map { b =>
-        val (nRaw, rawMin, rawMax) = batchStats(b)
-        val (minL, maxL) = written.getOrElse(b, (rawMin, rawMax))
-        val (nI, nU, nD, nDn, nS) = statRows.get(b) match {
-          case Some(a) => (a(0), a(1), a(2), a(3), a(4))
-          case None if wantCounts => (0L, 0L, 0L, 0L, 0L)
-          // counters not computed this batch: -1 sentinels, never fake 0s
-          case None => (-1L, -1L, -1L, 0L, 0L)
-        }
-        // rows that carried a change = the batch's distinct keys
-        val nKeys = nI + nU + nD + nDn + nS
-        graft.model.LineageRow(
-          batch_id = batchId,
-          partition = b,
-          min_lsn = minL,
-          max_lsn = maxL,
-          n_insert = nI,
-          n_update = nU,
-          n_delete = if (wantCounts) nD + nDn else -1L,
-          n_dedup_dropped = if (wantCounts) nRaw - nKeys else -1L,
-          snapshot_id = snapshotId)
-      }
-      // driver-side parquet write ([[LineageWriter]]): a handful of rows
-      // per batch doesn't justify a Spark job on the per-batch serial path
-      cfg.lineageDir.foreach { dir =>
-        LineageWriter.write(spark.sparkContext.hadoopConfiguration, dir,
-          checkpointId, batchId, lineage)
-      }
-      lineage
-    }
-
-    cfg.preCommitHook()
-    // forced by the commit after manifest composition, just before the CAS
-    lazy val lineage = finishLineage()
-    // delta append REMOVES nothing: no replaced bucket keeps every parent
-    // file and the delta entries join their ranges
-    try {
-      val m = table.commitNext(current, if (isDeltaAppend) Set.empty else touched,
-        newFiles, evolved.json, numBuckets, ledgerEntry, snapshotId,
-        beforeCas = () => lineage: Unit)
-      MergeResult(snapshotId, m.version, lineage, skipped = false)
-    } catch {
-      case commitFailure: Throwable =>
-        // the commit path can throw BEFORE finishLineage joins the async
-        // status read-back (e.g. a manifest-compose error or a lost CAS):
-        // drain the future here so no unobserved Spark job outlives the
-        // batch with its own failure silently discarded
-        statF.foreach { f =>
-          try scala.concurrent.Await.ready(
-            f, scala.concurrent.duration.Duration(60, "s")): Unit
-          catch { case _: Throwable => () }
-        }
-        throw commitFailure
-    }
-  }
-
-  /** A delta batch whose row count came from its footers, with no
-    * lineageDir: one Spark job, the write.
-    *
-    * The plan is one chain: valid events, the single-task coalesce, the
-    * dedupe and one projection ([[deltaRows]]). Rejects are counted inside
-    * the write by an [[Observation]] on the unfiltered batch: one fixed
-    * `count`, not the per-bucket aggregates the status read-back replaced.
-    * After staging they are quarantined as on the pre-pass path, or, with
-    * no dead-letter directory, the attempt is discarded and the batch
-    * fails before its commit. Lineage LSN ranges come from the staged
-    * footers: `max_lsn` is exact, since a bucket's highest valid LSN
-    * always wins its key, and `min_lsn` is the lowest LSN written.
-    */
-  private def applyDeltaOneJob(
-      table: LakeTable,
-      batch0: DataFrame,
-      goodPred: Column,
-      current: Manifest,
-      evolved: StructType,
-      rawRows: Long,
-      checkpointId: String,
-      batchId: Long,
-      cfg: MergeConfig): MergeResult = {
-    val ledgerKey = s"$checkpointId/$batchId"
-    val rejects = Observation()
-    val valid = batch0.observe(rejects, count(when(!goodPred, lit(1))).as("n"))
-      .filter(goodPred)
-    // one write task either way, as on the pre-pass delta path
-    val single = rawRows <= cfg.singleTaskRows
-    val delta = deltaRows(dedupeLatest(if (single) valid.coalesce(1) else valid,
-      cfg.saltFactor), evolved, current.numBuckets)
-    val version = current.version + 1
-    val (staging, files) = table.stage(if (single) delta else delta.coalesce(1),
-      version, s"merge write $ledgerKey", isDelta = true)
-    val discard = () => table.discardAttempt(staging, version)
-    // the metrics arrive with the write's query-end event
-    val rejectCount =
-      try scala.concurrent.Await.result(rejects.future,
-        scala.concurrent.duration.Duration(60, "s")).getLong(0)
-      catch { case e: java.util.concurrent.TimeoutException => discard(); throw e }
-    routeRejects(batch0, goodPred, rejectCount, checkpointId, batchId, cfg, discard)
-
-    val ledgerEntry = Some(ledgerKey -> cfg.ledgerRetention)
-    if (files.isEmpty) {
-      discard()
-      val m = table.commitNext(Some(current), Set.empty, Nil, evolved.json,
-        current.numBuckets, ledgerEntry)
-      return MergeResult(m.snapshotId, m.version, Nil, skipped = false)
-    }
-    cfg.preCommitHook()
-    val snapshotId = UUID.randomUUID().toString
-    // counters not computed: -1 sentinels, never fake 0s
-    val lineage = lsnRanges(files).toSeq.sortBy(_._1).map { case (b, (lo, hi)) =>
-      graft.model.LineageRow(batchId, b, lo, hi, -1L, -1L, -1L, -1L, snapshotId)
-    }
-    // delta append REMOVES nothing
-    val m = table.commitNext(Some(current), Set.empty, files, evolved.json,
-      current.numBuckets, ledgerEntry, snapshotId)
-    MergeResult(snapshotId, m.version, lineage, skipped = false)
+      if (singleTask) merged else LakeTable.repartitionByBucket(merged, touched.size)
+    val (dir, files) = table.stage(placed, version, s"merge write $checkpointId/$batchId")
+    Staged(Some(dir), files, touched,
+      stats.buckets.view.mapValues { case (_, lo, hi) => (lo, hi) }.toMap)
   }
 }

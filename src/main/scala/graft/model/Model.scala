@@ -48,13 +48,17 @@ final case class SeqRow(
   * The four status counters (n_insert/n_update/n_delete/n_dedup_dropped)
   * are exact when the merge ran with `MergeConfig.lineageDir` set, and -1
   * ("not computed") otherwise — computing them costs a post-write
-  * read-back job on the per-batch serial path, so only persisted lineage
-  * pays for it. `max_lsn` is always the highest valid LSN the batch
-  * carried for the bucket. `min_lsn` is the lowest one on the rewrite path
-  * (pre-pass stats); on the merge-on-read delta path it is the lowest LSN
+  * read-back job (and, on the delta path, the stats pre-pass) on the
+  * per-batch serial path, so only persisted lineage pays for it. On the
+  * merge-on-read delta path they are op-typed: n_insert/n_update/n_delete
+  * count the ops of the per-key LSN winners, since match status is
+  * unknown without the target. n_dedup_dropped is always the valid raw
+  * rows minus the winners. `max_lsn` is always the highest valid LSN the
+  * batch carried for the bucket. `min_lsn` is the lowest one on the
+  * rewrite path (pre-pass stats); on the delta path it is the lowest LSN
   * the batch wrote to the bucket (the staged files' footers), after dedupe,
-  * so it can sit above the raw minimum. Either way it does not depend on
-  * where the batch came from.
+  * so it can sit above the raw minimum. None of it depends on where the
+  * batch came from.
   */
 final case class LineageRow(
     batch_id: Long,

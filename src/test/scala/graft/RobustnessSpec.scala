@@ -4,7 +4,7 @@ import graft.changegen.{ChangeGen, FeedConfig, Phase, RawEvent}
 import graft.merge.{MergeConfig, MergeInto}
 import graft.model.Ops
 import graft.table.{LakeTable, Maintenance, Manifest}
-import graft.util.NioLocalFileSystem
+import graft.util.{JobDescription, NioLocalFileSystem}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FSDataOutputStream, Path}
 import org.apache.hadoop.fs.permission.FsPermission
@@ -75,19 +75,21 @@ class RobustnessSpec extends SparkSpec {
   }
 
   /** The three reject cases, run as written (batches built in memory: the
-    * stats pre-pass path) and on the one-job delta path: a table that
-    * already holds a row, a delta threshold, and the batch read from a
-    * parquet file. The assertions are the same on both paths.
+    * rewrite path) and on the delta path (a table that already holds a
+    * row and a delta threshold) with two inputs: the batch read from a
+    * parquet file, whose footers give its row count (one job), and the
+    * batch built in memory, whose row count comes from the stats pre-pass.
+    * The assertions are the same on every input.
     */
-  private def rejectCases(suffix: String, oneJob: Boolean): Unit = {
-    def cfgOf(c: MergeConfig) = if (oneJob) c.copy(deltaAppendThreshold = 1000L) else c
-    def asBatch(work: String, df: DataFrame) = if (oneJob) viaParquet(work, df) else df
+  private def rejectCases(suffix: String, delta: Boolean, viaFile: Boolean): Unit = {
+    def cfgOf(c: MergeConfig) = if (delta) c.copy(deltaAppendThreshold = 1000L) else c
+    def asBatch(work: String, df: DataFrame) = if (viaFile) viaParquet(work, df) else df
 
     test("dead-letter: malformed events quarantined, valid ones applied" + suffix) {
       val work = tmpDir("lake-dlq")
       val table = LakeTable(s"$work/t")
       val cfg = cfgOf(MergeConfig(numBuckets = 4, deadLetterDir = Some(s"$work/dlq")))
-      if (oneJob) MergeInto.apply(spark, table,
+      if (delta) MergeInto.apply(spark, table,
         batchDf(Seq(ev(0, "a", Ops.Insert, Array(0)))), "seed", 0, cfg)
       val good = Seq(ev(1, "a", Ops.Insert, Array(1)), ev(2, "b", Ops.Upsert, Array(2)))
       val badDf = Seq(
@@ -98,6 +100,7 @@ class RobustnessSpec extends SparkSpec {
       val r1 = MergeInto.apply(spark, table, batch, "cp", 0, cfg)
       assert(!r1.skipped)
       assert(table.read(spark).count() === 2)
+      assert(table.filesOf(table.currentManifest()).exists(_.isDelta) === delta)
       val dlq = spark.read.parquet(s"$work/dlq/cp=cp/batch=0")
       assert(dlq.count() === 2)
       assert(dlq.filter(col("op") === "WAT").count() === 1)
@@ -114,8 +117,12 @@ class RobustnessSpec extends SparkSpec {
       MergeInto.apply(spark, table, batchDf(Seq(ev(1, "a", Ops.Insert, Array(1)))), "cp", 0, cfg)
       val allBad = asBatch(work, Seq((9L, null.asInstanceOf[String], "U", Seq(9), 1, "s"))
         .toDF("lsn", "doc_id", "op", "tokens", "n_tok", "source"))
-      val r = MergeInto.apply(spark, table, allBad, "cp", 1, cfg)
+      var r: graft.merge.MergeResult = null
+      val jobs = jobDescriptions { r = MergeInto.apply(spark, table, allBad, "cp", 1, cfg) }
       assert(!r.skipped && r.lineage.isEmpty)
+      // a delta batch counts its rejects in the write's Observation, which
+      // must report even when every event is invalid
+      assert(jobs.contains(JobDescription.Prefix + "merge write cp/1") === delta, jobs)
       assert(table.read(spark).count() === 1)
       assert(table.committedSnapshot("cp", 1L).isDefined)
     }
@@ -146,8 +153,9 @@ class RobustnessSpec extends SparkSpec {
     }
   }
 
-  rejectCases("", oneJob = false)
-  rejectCases(" (one-job delta path)", oneJob = true)
+  rejectCases("", delta = false, viaFile = false)
+  rejectCases(" (one-job delta path)", delta = true, viaFile = true)
+  rejectCases(" (in-memory delta batch)", delta = true, viaFile = false)
 
   test("lost CAS race: merge retries against the winner's snapshot") {
     val work = tmpDir("lake-race")
